@@ -306,7 +306,7 @@ def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> Dat
         # together (event_id-ordered within), so each micro-batch touches
         # ~2 of the sink's 16 snapshot buckets.  2^40 clears any event_id.
         (
-            _key_bucket(F.col("user_id"), n_buckets).cast("bigint")
+            _key_bucket("user_id", n_buckets).cast("bigint")
             * F.lit(1 << 40).cast("bigint")
             + F.col("event_id")
         ).alias("replay_offset"),

@@ -375,71 +375,6 @@ def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING)
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components of an undirected pair graph by iterative
-    min-label propagation: every vertex adopts the smallest label among
-    itself and its neighbors until fixpoint. Returns (id, cluster_id).
-
-    Converges in O(component diameter) rounds — near-dup clusters are
-    shallow (pairs/chains), so 2-3 rounds in practice; ``max_iterations``
-    bounds pathological chains. Each round is one shuffle-join plus one
-    aggregate; ``localCheckpoint`` truncates the lineage so round N's plan
-    does not replay rounds 1..N-1. At 100 TB switch the checkpoint to a
-    reliable store and use the large-star/small-star variant
-    (Kiveris et al., "Connected Components in MapReduce"), which hops
-    labels multiple levels per round.
-    """
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select("s")
-        .distinct()
-        .select(F.col("s").alias("id"), F.col("s").alias("cluster_id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        neighbor = sym.join(
-            labels, sym["d"] == labels["id"], "inner"
-        ).select(sym["s"].alias("id"), "cluster_id")
-        new_labels = (
-            labels.union(neighbor)
-            .groupBy("id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Exhausting the bound without a fixpoint means some component's
-        # diameter exceeds max_iterations and its labels are WRONG (they
-        # would silently diverge from the transitive-closure oracle).
-        sym.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations — component diameter exceeds the bound; raise "
-            "max_iterations (or switch to the large-star/small-star variant)"
-        )
-    sym.unpersist()
-    return labels
-
-
 def _cc_oracle_sql() -> str:
     """Recursive-CTE twin: transitive closure over the symmetric pair
     graph, then min reachable id per vertex."""
@@ -716,8 +651,7 @@ def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cc_oracle_sql(),
     doc="Near-dup cluster resolution: connected components over the exact "
     "n-gram-Jaccard pair graph via alternating large-star/small-star "
-    "rounds (the O(log^2 n) 100 TB path; recursive-CTE oracle — labels "
-    "proven identical to min-label propagation by tests). Emits "
+    "rounds (the O(log^2 n) 100 TB path; recursive-CTE oracle). Emits "
     "(doc_id, cluster_id, is_keeper) — the step that turns pairwise "
     "dedup output into a keep/drop decision per document.",
     tags=("llm", "dedup"),
@@ -725,7 +659,7 @@ def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = exact_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = connected_components_twostar(pairs)
+    labels = connected_components(pairs)
     return labels.select(
         F.col("id").alias("doc_id"),
         "cluster_id",
@@ -1052,15 +986,14 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionAll(rev).filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
 
 
-def connected_components_twostar(
+def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iterations: int = 30,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the 100 TB variant :func:`connected_components`'s docstring points to.
+    (Kiveris et al., "Connected Components in MapReduce and Beyond").
 
     Min-label propagation needs O(component diameter) rounds; the star
     operations contract whole subtrees onto component minima, converging
@@ -1069,8 +1002,7 @@ def connected_components_twostar(
     one groupBy per star to find each vertex's neighborhood minimum, one
     join to re-point edges, ``localCheckpoint`` to truncate lineage.
     Returns (id, cluster_id) with cluster_id = the component's minimum
-    vertex id — identical labels to :func:`connected_components` (tested
-    equal on known and random graphs).
+    vertex id (tested against a union-find on known and random graphs).
     """
     # Materialize the INPUT plan exactly once: both the vertex set and the
     # working edge set derive from this checkpoint, so an expensive
@@ -1087,7 +1019,7 @@ def connected_components_twostar(
     )
     # Vertices come from the RAW pair set: a vertex whose only edge is a
     # self-loop must still appear in the output (as its own singleton
-    # cluster), exactly as min-label propagation reports it. Lazy — only
+    # cluster), as the transitive-closure oracle reports it. Lazy — only
     # the final label join reads it, straight off the cached checkpoint.
     vertices = (
         raw.select(F.col("s").alias("id"))
@@ -1163,7 +1095,7 @@ def connected_components_twostar(
     while not converged:
         if rounds >= max_iterations:
             raise RuntimeError(
-                f"connected_components_twostar did not converge within "
+                f"connected_components did not converge within "
                 f"{max_iterations} rounds"
             )
         # Large-star: every neighbor v > u re-points to u's neighborhood min.
@@ -1217,10 +1149,10 @@ def connected_components_twostar(
     # survivors is asserted in tests/test_operators.py instead
     doc="Scale-path survivor materialization: MinHash+LSH near-dup pairs -> "
     "large-star/small-star connected components -> anti-join. The 100 TB "
-    "twin of dedup_survivors (which rides the exact shingle self-join + "
-    "min-label CC so DuckDB can oracle it): every stage here is "
+    "twin of dedup_survivors (which rides the exact shingle self-join "
+    "so DuckDB can oracle it): every stage here is "
     "O(docs*k + candidates) with O(log^2 n) CC rounds — no shingle "
-    "self-join, no O(diameter) label walk. Because the verified LSH pair "
+    "self-join. Because the verified LSH pair "
     "set is a subset of the exact pair set, its components refine the "
     "exact components and every exact survivor remains a survivor; "
     "tests assert that superset property plus >=95% agreement.",
@@ -1277,7 +1209,7 @@ def lsh_survivor_losers(
     else:
         canon_docs, exact_losers = docs, None
     pairs = minhash_dedup_pairs(canon_docs)
-    labels = connected_components_twostar(pairs)
+    labels = connected_components(pairs)
     near_losers = labels.filter(F.col("cluster_id") != F.col("id")).select(
         F.col("id").alias("doc_id")
     )
@@ -1721,7 +1653,7 @@ def cosine_histogram_over_candidates(
 def _dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = exact_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = connected_components_twostar(pairs)
+    labels = connected_components(pairs)
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

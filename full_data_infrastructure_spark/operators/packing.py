@@ -623,12 +623,12 @@ def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _corpus_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.operators.dedup import (
-        connected_components_twostar,
+        connected_components,
         minhash_dedup_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    labels = connected_components_twostar(minhash_dedup_pairs(docs))
+    labels = connected_components(minhash_dedup_pairs(docs))
     return _survivors_mixture_pack(spark, docs, labels)
 
 
@@ -875,12 +875,12 @@ def _corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _corpus_pipeline_full_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.operators.dedup import (
-        connected_components_twostar,
+        connected_components,
         minhash_dedup_pairs,
     )
 
     clean = _clean_corpus(spark, sf_dir)
-    labels = connected_components_twostar(minhash_dedup_pairs(clean))
+    labels = connected_components(minhash_dedup_pairs(clean))
     return _survivors_mixture_pack(spark, clean, labels)
 
 

@@ -22,13 +22,50 @@ bucket, not the day's raw partition.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
+from full_data_infrastructure_spark.sqltext import ident, literal, run_over_views
 
 PARTIAL_COLS = ("n_events", "sum_value", "min_value", "max_value")
+
+
+def rollup_partials_sql(
+    events: str,
+    unit: str = "hour",
+    keys: Sequence[str] = ("event_type",),
+    ts_col: str = "ts",
+    value_col: str = "value",
+) -> str:
+    """The partials of relation ``events``; see :func:`rollup_partials`."""
+    v = ident(value_col)
+    return f"""
+    SELECT DATE_TRUNC({literal(unit)}, {ident(ts_col)}) AS bucket,
+           {"".join(f"{ident(k)}, " for k in keys)}
+           COUNT(1) AS n_events,
+           SUM(CAST({v} AS DECIMAL(18,2))) AS sum_value,
+           MIN({v}) AS min_value,
+           MAX({v}) AS max_value
+    FROM {events} GROUP BY ALL"""
+
+
+def merge_partials_sql(
+    partials: str, unit: str = "day", keys: Sequence[str] = ("event_type",)
+) -> str:
+    """The coarser-bucket merge of relation ``partials``; see
+    :func:`merge_partials`."""
+    return f"""
+    SELECT DATE_TRUNC({literal(unit)}, bucket) AS bucket,
+           {"".join(f"{ident(k)}, " for k in keys)}
+           SUM(n_events) AS n_events,
+           SUM(sum_value) AS sum_value,
+           MIN(min_value) AS min_value,
+           MAX(max_value) AS max_value
+    FROM {partials} GROUP BY ALL"""
 
 
 def rollup_partials(
@@ -39,13 +76,9 @@ def rollup_partials(
     value_col: str = "value",
 ) -> DataFrame:
     """Algebraic partial aggregates per (time bucket, *keys)."""
-    return events.groupBy(
-        F.date_trunc(unit, ts_col).alias("bucket"), *keys
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(18,2)")).alias("sum_value"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
+    return run_over_views(
+        lambda events: rollup_partials_sql(events, unit, keys, ts_col, value_col),
+        events=events,
     )
 
 
@@ -55,14 +88,12 @@ def merge_partials(
     keys: tuple[str, ...] = ("event_type",),
 ) -> DataFrame:
     """Re-aggregate fine partials into a coarser bucket. Each statistic
-    merges with its own combiner; no raw-event rescan."""
-    return partials.groupBy(
-        F.date_trunc(unit, "bucket").alias("bucket"), *keys
-    ).agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("sum_value").alias("sum_value"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
+    merges with its own combiner; no raw-event rescan. Merging into the
+    partials' own unit is the identity on buckets, which is how the
+    streaming rollup sink folds a batch's partials into the stored ones."""
+    return run_over_views(
+        lambda partials: merge_partials_sql(partials, unit, keys),
+        partials=partials,
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from full_data_infrastructure_spark.functions.money import money
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
+from full_data_infrastructure_spark.sqltext import run_over_views
 
 
 def keep_latest(df: DataFrame, keys: list[str], order: list) -> DataFrame:
@@ -892,9 +893,9 @@ def ema_fold(events: DataFrame) -> DataFrame:
     return grouped.select("user_id", "n_events", ema.alias("ema_value"))
 
 
-@register(
-    "scd2_history",
-    """
+# DuckDB reference for every SCD2 query: the full-history rebuild that
+# each fold, however it was batched, must reproduce.
+_SCD2_ORACLE = """
     WITH ordered AS (
         SELECT user_id, event_type, ts, event_id,
                LAG(event_type) OVER (PARTITION BY user_id
@@ -921,7 +922,12 @@ def ema_fold(events: DataFrame) -> DataFrame:
                                    ORDER BY valid_from, event_id) AS BIGINT)
                AS version
     FROM versions
-    """,
+    """
+
+
+@register(
+    "scd2_history",
+    _SCD2_ORACLE,
     doc="Slowly-changing-dimension Type 2 history built from a change "
     "stream: per user, consecutive duplicate states are compressed away "
     "(lag != state keeps only real transitions), then each surviving "
@@ -943,6 +949,46 @@ def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd2_finalize(scd2_versions(events))
 
 
+def scd2_versions_sql(changes: str) -> str:
+    """The SCD2 state compression of relation ``changes``; see
+    :func:`scd2_versions`."""
+    return f"""
+    SELECT user_id, event_type AS state, ts AS valid_from, event_id
+    FROM (
+        SELECT user_id, event_type, ts, event_id,
+               LAG(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS prev_state,
+               LAG(event_id)   OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS prev_event_id
+        FROM {changes}
+    )
+    WHERE prev_event_id IS NULL OR NOT (prev_state <=> event_type)
+    """
+
+
+def scd2_apply_sql(standing: str | None, batch: str) -> str:
+    """The SCD2 fold of relation ``batch`` into the version relation
+    ``standing`` (``None``: no versions yet); see
+    :func:`scd2_apply_batch`."""
+    changes = f"(SELECT user_id, event_type, ts, event_id FROM {batch})"
+    if standing is None:
+        return scd2_versions_sql(changes)
+    touched = f"(SELECT DISTINCT user_id FROM {batch})"
+    replayed = f"""(
+        SELECT /*+ BROADCAST(t) */
+               s.user_id, s.state AS event_type, s.valid_from AS ts, s.event_id
+        FROM {standing} s LEFT SEMI JOIN {touched} t ON s.user_id = t.user_id
+        UNION ALL
+        SELECT user_id, event_type, ts, event_id FROM {changes}
+    )"""
+    return f"""
+    SELECT /*+ BROADCAST(t) */ s.user_id, s.state, s.valid_from, s.event_id
+    FROM {standing} s LEFT ANTI JOIN {touched} t ON s.user_id = t.user_id
+    UNION ALL
+    {scd2_versions_sql(replayed)}
+    """
+
+
 def scd2_versions(changes: DataFrame) -> DataFrame:
     """Compress a change stream (user_id, event_type, ts, event_id) to
     version rows (user_id, state, valid_from, event_id): only real state
@@ -952,34 +998,17 @@ def scd2_versions(changes: DataFrame) -> DataFrame:
     prefix preserves both the change subsequence and the boundary state
     the suffix's first comparison needs.
 
-    NULL is a legal state and the comparison is null-safe (caught by the
-    null-injected parity sweep, round 8): a plain ``LAG != state`` both
-    silently drops every x -> NULL transition AND breaks the idempotence
-    above (the recompression sees a different LAG and drops NULL-state
-    versions the first pass kept). First-row detection therefore rides
-    on LAG(event_id) — non-null by schema — never on the nullable state.
+    NULL is a legal state and the comparison is null-safe (``<=>``): a
+    plain ``LAG != state`` both silently drops every x -> NULL transition
+    AND breaks the idempotence above (the recompression sees a different
+    LAG and drops NULL-state versions the first pass kept). First-row
+    detection therefore rides on LAG(event_id) — non-null by schema —
+    never on the nullable state.
 
     event_id is retained as the deterministic tiebreaker for equal-ts
     changes; scd2_finalize drops it.
     """
-    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = changes.select(
-        "user_id",
-        "event_type",
-        "ts",
-        "event_id",
-        F.lag("event_type").over(order_w).alias("prev_state"),
-        F.lag("event_id").over(order_w).alias("prev_event_id"),
-    )
-    return flagged.filter(
-        F.col("prev_event_id").isNull()
-        | ~F.col("prev_state").eqNullSafe(F.col("event_type"))
-    ).select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.col("ts").alias("valid_from"),
-        "event_id",
-    )
+    return run_over_views(scd2_versions_sql, changes=changes)
 
 
 def scd2_finalize(versions: DataFrame) -> DataFrame:
@@ -996,9 +1025,7 @@ def scd2_finalize(versions: DataFrame) -> DataFrame:
     )
 
 
-def scd2_apply_batch(
-    standing: DataFrame, batch: DataFrame, broadcast_touched: bool = True
-) -> DataFrame:
+def scd2_apply_batch(standing: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental SCD2 maintenance: fold a fresh change batch into a
     standing compressed-version table touching ONLY the batch's users.
 
@@ -1012,64 +1039,17 @@ def scd2_apply_batch(
     shuffle. Requires every batch change to be at-or-after the standing
     history's end (CDC log order); equal-ts ties keep the event_id order.
 
-    ``broadcast_touched`` (default on) broadcasts the batch's distinct
-    user set into both standing-side joins: a micro-batch's user set is
-    bounded by the trigger size, and the statically-planned alternative
-    is a sort-merge join that scans AND shuffles the entire standing
-    table twice per fold — the per-fold cost a 10 TB version table
-    cannot pay for a 100 MB batch (AQE can rescue the join strategy at
-    runtime, but only after planning the standing shuffle; the hint
-    never plans it).  Pass False for replay/backfill batches whose user
-    set is itself corpus-sized — the joins then fall back to shuffles
-    and AQE's runtime call.
+    The batch's distinct user set is broadcast into both standing-side
+    joins: a micro-batch's user set is bounded by the trigger size, and
+    the statically-planned alternative is a sort-merge join that scans
+    AND shuffles the entire standing table twice per fold.
     """
-    touched = batch.select("user_id").distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
-    untouched = standing.join(touched, "user_id", "left_anti")
-    replayed = (
-        standing.join(touched, "user_id", "semi")
-        .select(
-            "user_id",
-            F.col("state").alias("event_type"),
-            F.col("valid_from").alias("ts"),
-            "event_id",
-        )
-        .unionAll(batch.select("user_id", "event_type", "ts", "event_id"))
-    )
-    return untouched.unionAll(scd2_versions(replayed))
+    return run_over_views(scd2_apply_sql, standing=standing, batch=batch)
 
 
 @register(
     "scd2_incremental",
-    """
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_state,
-               LAG(event_id) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_event_id
-        FROM events
-    ),
-    versions AS (
-        SELECT user_id, event_type AS state, ts AS valid_from, event_id
-        FROM ordered
-        WHERE prev_event_id IS NULL
-           OR prev_state IS DISTINCT FROM event_type
-    )
-    SELECT user_id,
-           state,
-           valid_from,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) AS valid_to,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) IS NULL
-               AS is_current,
-           CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                                   ORDER BY valid_from, event_id) AS BIGINT)
-               AS version
-    FROM versions
-    """,
+    _SCD2_ORACLE,
     doc="Incremental SCD2 maintenance proven exact: events are split at a "
     "fixed date into a standing history (compressed once) and a fresh "
     "CDC batch, the batch is folded in via scd2_apply_batch — anti-join "
@@ -1133,34 +1113,7 @@ def _window_range_hour_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_scd2_snapshot",
-    """
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_state,
-               LAG(event_id) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_event_id
-        FROM events
-    ),
-    versions AS (
-        SELECT user_id, event_type AS state, ts AS valid_from, event_id
-        FROM ordered
-        WHERE prev_event_id IS NULL
-           OR prev_state IS DISTINCT FROM event_type
-    )
-    SELECT user_id,
-           state,
-           valid_from,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) AS valid_to,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) IS NULL
-               AS is_current,
-           CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                                   ORDER BY valid_from, event_id) AS BIGINT)
-               AS version
-    FROM versions
-    """,
+    _SCD2_ORACLE,
     doc="SCD2 under REAL micro-batches — scd2_incremental proves one fold "
     "at one cut; this replays the whole change stream time-ordered "
     "through streaming/sinks.py::start_scd2_sink (foreachBatch "
@@ -1203,34 +1156,7 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_scd2_bucketed_snapshot",
-    """
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_state,
-               LAG(event_id) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_event_id
-        FROM events
-    ),
-    versions AS (
-        SELECT user_id, event_type AS state, ts AS valid_from, event_id
-        FROM ordered
-        WHERE prev_event_id IS NULL
-           OR prev_state IS DISTINCT FROM event_type
-    )
-    SELECT user_id,
-           state,
-           valid_from,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) AS valid_to,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from, event_id) IS NULL
-               AS is_current,
-           CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                                   ORDER BY valid_from, event_id) AS BIGINT)
-               AS version
-    FROM versions
-    """,
+    _SCD2_ORACLE,
     doc="The BUCKETED SCD2 sink under a key-sparse workload — the actual "
     "100 TB path (VERDICT r8 item 4: the n_buckets variant was plan-gated "
     "and e2e-tested but had no recorded fold_sec). Same change stream and "
@@ -1274,14 +1200,12 @@ def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataF
         # interleave and the replay silently degrades to near time-major
         # (batches touch all 16 buckets; results stay correct but the
         # pruned-IO bench claim vanishes).  2^54 microseconds ≈ 571
-        # years clears any epoch-boundary corpus (ADVICE r9: the old
-        # 2^44 µs was ~204 days, not the claimed 557 years — 557 years
-        # is 2^44 MILLIseconds — so the ~75-year boundary sweep
-        # interleaved).  15 * 2^54 + unix_micros(9999-12-31) ≈ 2.7e17,
+        # years clears any epoch-boundary corpus (2^44 µs, ~204 days,
+        # does not).  15 * 2^54 + unix_micros(9999-12-31) ≈ 2.7e17,
         # well inside int64.  Bucket-band separation is pinned on a
         # 75-year-span corpus by
         # tests/test_streaming.py::test_bucket_major_offset_survives_wide_ts_span.
-        _key_bucket(F.col("user_id"), n_buckets).cast("bigint")
+        _key_bucket("user_id", n_buckets).cast("bigint")
         * F.lit(1 << 54).cast("bigint")
         + F.unix_micros("ts"),
     )

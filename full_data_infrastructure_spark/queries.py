@@ -94,61 +94,57 @@ _LOADED = False
 #
 # tests/test_registry_order.py asserts the committed tuple equals the
 # computed one, so the literal cannot silently drift from the policy.
-# (Round 18 note: the stale-bench pin pulls every r17-touched benched
-# query — quality_classifier, the dedup/corpus-LSH family, both knn
-# entries, the four streaming snapshots — exactly as the r17 VERDICT
-# item 2 prescribed; no forces; history lives in git.)
 DRIVER_WINDOW: tuple[str, ...] = (
     "flagship_benefits",
     "bu_salary_dashboard",
-    "event_cooccurrence_lift",
-    "event_gap_histogram",
-    "fingerprint_md5",
-    "gapfill_locf",
-    "hard_negative_mining",
-    "jsonl_documents_roundtrip",
-    "jsonl_quarantine_ingest",
-    "knn_pq",
-    "masked_projection",
-    "membership_validation",
-    "multimodal_embed",
-    "multimodal_frame_sample",
-    "pivot_event_counts",
-    "profile_columns",
-    "scalar_subquery_filter",
-    "scd2_history",
-    "scd2_incremental",
-    "sessionize_batch",
-    "snapshot_diff",
-    "stratified_sample",
-    "streaming_dedup_snapshot",
-    "streaming_ema_snapshot",
-    "streaming_funnel_snapshot",
-    "asof_join",
-    "corpus_pipeline_full_lsh",
-    "corpus_pipeline_lsh",
-    "decontaminate_overlap",
-    "dedup_minhash_lsh",
-    "dedup_semantic",
-    "dedup_survivors_lsh",
-    "distinct_projection",
-    "enrichment_distance",
-    "generator_activities",
-    "join_dim_snowflake",
-    "knn_bruteforce",
-    "knn_ivfpq",
-    "multi_aggregate",
-    "paragraph_dedup",
-    "quality_classifier",
-    "range_join",
-    "set_union_except_intersect",
-    "streaming_scd2_bucketed_snapshot",
-    "streaming_scd2_snapshot",
-    "streaming_upsert_bucketed_snapshot",
-    "streaming_upsert_snapshot",
-    "text_stats",
-    "topk_group_count",
-    "window_moving_avg",
+    "streaming_sliding_snapshot",
+    "streaming_tumbling_snapshot",
+    "threshold_validation",
+    "token_budget_sample",
+    "train_val_test_split",
+    "triangle_count_parts",
+    "validation_schema_check",
+    "zorder_key_lineitem",
+    "fulfillment_latency_sla",
+    "funnel_three_step",
+    "fuzzy_match_suppliers",
+    "group_split_events",
+    "lang_confusion_matrix",
+    "lang_id",
+    "lang_id_trigram",
+    "max_staleness_by_user",
+    "profile_by_key",
+    "pseudonymize_customers",
+    "quality_score",
+    "rare_bigram_quality",
+    "repeat_customer_rate",
+    "repetition_signals",
+    "rolling_active_users",
+    "rolling_hash_fingerprint",
+    "rollup_counts",
+    "sample_hash",
+    "semi_join",
+    "session_overlap_pairs",
+    "tfidf_top_token",
+    "tpch_q3_shipping_priority",
+    "vector_norms",
+    "activity_heatmap",
+    "anti_join",
+    "benford_first_digit",
+    "bpe_learn",
+    "bpe_pair_counts",
+    "bpe_tokenize_counts",
+    "case_flag_arithmetic",
+    "compact_small_files",
+    "constraint_violations",
+    "conversation_assembly",
+    "corpus_datacard",
+    "corpus_pipeline",
+    "corpus_pipeline_full",
+    "correlation_matrix",
+    "cosine_threshold_histogram",
+    "dedup_cluster_cc",
+    "tpch_q5_region_volume",
 )
 
 

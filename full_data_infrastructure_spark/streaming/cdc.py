@@ -20,12 +20,15 @@ Scale notes (100 TB / high-rate topics):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from full_data_infrastructure_spark.functions.debezium import decode_envelope
+from full_data_infrastructure_spark.sqltext import ident, run_over_views
 
 
 def kafka_cdc_source(
@@ -111,6 +114,8 @@ def start_cdc_ingest(
 ) -> StreamingQuery:
     """S9/T1-T3 (SaveDelta.scala:157-163): append sink, checkpointed,
     30 s processing-time trigger (or availableNow for bounded CI runs)."""
+    from full_data_infrastructure_spark.streaming.sinks import start_writer
+
     writer = (
         decoded.writeStream.format(fmt)
         .outputMode("append")
@@ -118,11 +123,7 @@ def start_cdc_ingest(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start(sink_path)
+    return start_writer(writer, available_now, trigger_seconds, sink_path)
 
 
 def reconcile_counts(spark: SparkSession, table_path: str, expected: int, fmt: str = "parquet") -> dict:
@@ -137,6 +138,59 @@ def reconcile_counts(spark: SparkSession, table_path: str, expected: int, fmt: s
         if actual == expected
         else "mismatch: in-flight micro-batch, dropped tombstones, or replay",
     }
+
+
+# Higher stage wins an order_col tie under MAX_BY: d=3 > u=2 > r=1 > c=0.
+_OP_STAGE = (
+    "CASE WHEN `op` = 'd' THEN 3 WHEN `op` = 'u' THEN 2 "
+    "WHEN `op` = 'r' THEN 1 ELSE 0 END"
+)
+
+
+def latest_changes_sql(
+    changes: str, cols: Sequence[str], key: str, order_col: str
+) -> str:
+    """The latest change per ``key`` in relation ``changes`` (columns
+    ``cols``, output in that order); see :func:`latest_changes`."""
+    k = ident(key)
+    payload = ", ".join(ident(c) for c in cols if c != key)
+    picked = ", ".join(
+        k if c == key else f"_latest.{ident(c)} AS {ident(c)}" for c in cols
+    )
+    return f"""
+    SELECT {picked} FROM (
+        SELECT {k},
+               MAX_BY(STRUCT({payload}),
+                      STRUCT({ident(order_col)}, {_OP_STAGE})) AS _latest
+        FROM {changes} GROUP BY {k}
+    )"""
+
+
+def apply_cdc_sql(
+    snapshot: str | None,
+    changes: str,
+    change_cols: Sequence[str],
+    snapshot_cols: Sequence[str],
+    key: str,
+    order_col: str,
+) -> str:
+    """The CDC fold of relation ``changes`` into relation ``snapshot``
+    (``None``: no snapshot yet); see :func:`apply_cdc_batch`. Output
+    columns are ``snapshot_cols``, untouched snapshot rows first."""
+    latest = latest_changes_sql(changes, change_cols, key, order_col)
+    upserts = (
+        f"SELECT {', '.join(ident(c) for c in snapshot_cols)} "
+        "FROM latest WHERE `op` != 'd'"
+    )
+    if snapshot is None:
+        return f"WITH latest AS ({latest}) {upserts}"
+    k = ident(key)
+    return f"""
+    WITH latest AS ({latest})
+    SELECT {', '.join(f's.{ident(c)}' for c in snapshot_cols)}
+    FROM {snapshot} s LEFT ANTI JOIN latest l ON s.{k} = l.{k}
+    UNION ALL
+    {upserts}"""
 
 
 def latest_changes(
@@ -155,27 +209,17 @@ def latest_changes(
     stage tiebreak then only covers exact offset ties, which cannot
     happen.
 
-    Implemented as ``max_by`` over a (order_col, stage) comparator struct
-    rather than a ``row_number`` window: an aggregation gets map-side
+    Implemented as ``MAX_BY`` over an (order_col, stage) comparator struct
+    rather than a ``ROW_NUMBER`` window: an aggregation gets map-side
     partial combine (each shuffle partition ships one pre-reduced row per
     key, not every change) and skips the per-partition sort — this runs
     once per micro-batch in the upsert sink, so its constant factor is
     the sink's steady-state cost.
     """
-    # Higher stage wins an order_col tie under max: d=3 > u=2 > r=1 > c=0
-    # (the window form ordered ascending on the inverse ranks).
-    op_stage = (
-        F.when(F.col("op") == "d", 3)
-        .when(F.col("op") == "u", 2)
-        .when(F.col("op") == "r", 1)
-        .otherwise(0)
-    )
-    payload = F.struct(*[c for c in changes.columns if c != key])
-    picked = changes.groupBy(key).agg(
-        F.max_by(payload, F.struct(F.col(order_col), op_stage)).alias("_latest")
-    )
-    return picked.select(
-        *[F.col(f"_latest.{c}").alias(c) if c != key else F.col(key) for c in changes.columns]
+    cols = changes.columns
+    return run_over_views(
+        lambda changes: latest_changes_sql(changes, cols, key, order_col),
+        changes=changes,
     )
 
 
@@ -202,11 +246,11 @@ def apply_cdc_batch(
     topic), so AQE plans the anti-join as a broadcast at runtime and the
     snapshot is never shuffled on an unkeyed column.
     """
-    latest = latest_changes(changes, key, order_col)
-    upserts = latest.filter(F.col("op") != "d").select(*snapshot.columns)
-    survivors = snapshot.join(
-        latest.select(F.col(key).alias("_k")),
-        F.col(key) == F.col("_k"),
-        "left_anti",
+    change_cols, snapshot_cols = changes.columns, snapshot.columns
+    return run_over_views(
+        lambda snapshot, changes: apply_cdc_sql(
+            snapshot, changes, change_cols, snapshot_cols, key, order_col
+        ),
+        snapshot=snapshot,
+        changes=changes,
     )
-    return survivors.unionByName(upserts)

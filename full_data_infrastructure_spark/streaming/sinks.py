@@ -12,18 +12,46 @@ auto-commit (at-least-once) — ``slack_notifier/slack_notification.py:25-33,
   reference has the same caveat via Kafka auto-commit, documented nowhere);
 * P9/P10: only rows with a non-null comment/required fields notify
   (slack_notification.py:51-59,121-124).
+
+The snapshot fold sinks (CDC upsert, SCD2, rollup) are the reference's
+per-batch Delta ``MERGE`` (SaveDelta.scala:157-163) re-expressed over
+parquet directories. Each fold is defined once, as the SQL statement
+builder next to its batch operator; :func:`_start_fold_sink` is the one
+per-batch skeleton that runs it.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from full_data_infrastructure_spark.sqltext import ident, literal, run_over_views
 
 Notifier = Callable[[dict], None]
+
+
+def start_writer(
+    writer: DataStreamWriter,
+    available_now: bool,
+    trigger_seconds: int | None,
+    path: str | None = None,
+) -> StreamingQuery:
+    """Start ``writer`` with the trigger every sink here offers:
+    ``availableNow`` (drain what is there, then stop), else a
+    processing-time trigger every ``trigger_seconds``, else Spark's
+    default back-to-back micro-batches."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start() if path is None else writer.start(path)
 
 
 def format_notification(row: dict) -> str:
@@ -73,18 +101,20 @@ def start_notification_sink(
     writer = filtered.writeStream.foreachBatch(deliver).option(
         "checkpointLocation", checkpoint_path
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_writer(writer, available_now, trigger_seconds)
 
 
-def _key_bucket(col, n_buckets: int):
-    """Deterministic key-hash bucket for directory-partitioned snapshot
-    tables: crc32-of-string, not hash() — stable across Spark versions,
-    so a standing table keeps its layout through engine upgrades."""
-    return F.pmod(F.crc32(col.cast("string")), F.lit(n_buckets)).cast("int")
+def key_bucket_sql(key: str, n_buckets: int) -> str:
+    """Deterministic key-hash bucket of column ``key`` for
+    directory-partitioned snapshot tables: crc32-of-string, not hash() —
+    stable across Spark versions, so a standing table keeps its layout
+    through engine upgrades."""
+    return f"CAST(PMOD(CRC32(CAST({ident(key)} AS STRING)), {int(n_buckets)}) AS INT)"
+
+
+def _key_bucket(key: str, n_buckets: int) -> Column:
+    """:func:`key_bucket_sql` as a Column, for DataFrame callers."""
+    return F.expr(key_bucket_sql(key, n_buckets))
 
 
 def _bucketed_snapshot_nonempty(path: str) -> bool:
@@ -94,11 +124,9 @@ def _bucketed_snapshot_nonempty(path: str) -> bool:
     directories but leaves ``path`` itself behind as an empty directory
     (:func:`_swap_touched_buckets` removes buckets, never the table root).
     Reading that with ``spark.read.load`` fails schema inference, so the
-    bucketed sinks must treat an existing-but-bucketless snapshot dir as
-    an empty table (ADVICE r7).
+    bucketed sinks treat an existing-but-bucketless snapshot dir as an
+    empty table.
     """
-    import os
-
     if not os.path.isdir(path):
         return False
     return any(entry.startswith("bucket=") for entry in os.listdir(path))
@@ -118,27 +146,23 @@ def _schema_ddl(schema: T.StructType) -> str:
     """Spark-SQL column list for a declared-schema temp view (the CREATE
     TEMPORARY VIEW twin of ``spark.read.schema(...)`` — explicit schema,
     no parquet-footer inference)."""
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    return ", ".join(
+        f"{ident(f.name)} {f.dataType.simpleString()}" for f in schema.fields
+    )
 
 
 def _standing_view_sql(view: str, schema: T.StructType, path: str, fmt: str) -> str:
     """CREATE OR REPLACE TEMPORARY VIEW over the standing snapshot with the
     DECLARED schema.  Re-issued every batch so the file listing is fresh
-    (the snapshot directory is swapped between batches); one py4j call
-    instead of the reader-builder chain.
-
-    Why SQL-text folds at all (optimization round 18, guide §1/§5): the
-    foreachBatch folds rebuilt their whole DataFrame lineage per batch —
-    ~60-80 py4j round-trips of LAZY plan construction per micro-batch,
-    measured at 0.65 s/batch against ~1.1 s of actual fold execution on
-    the r18 host (py4j round-trips cost ~10 ms there).  Building the fold
-    as ONE SQL statement per sink start and executing it per batch over
-    two temp views cuts that to ~4 driver calls per batch with a
-    bit-identical plan (same operators, hints preserved).
-    """
+    (the snapshot directory is swapped between batches).  The declared
+    schema, never parquet-footer inference, keeps every batch's standing
+    types identical to the types fixed at sink start: inference could
+    fork them mid-stream if stored files ever drift, and a mid-stream
+    upstream type change then fails loudly in the fold's UNION instead
+    of silently re-typing old rows."""
     return (
         f"CREATE OR REPLACE TEMPORARY VIEW {view} ({_schema_ddl(schema)}) "
-        f"USING {fmt} OPTIONS (path '{path}')"
+        f"USING {fmt} OPTIONS (path {literal(path)})"
     )
 
 
@@ -149,16 +173,11 @@ def read_bucketed_snapshot(spark, path: str, schema, fmt: str = "parquet") -> Da
     (``_swap_touched_buckets`` swaps only touched buckets), and a batch
     that deletes every key removes them all — either way the table root
     holds no parquet footers and a bare ``spark.read`` dies on schema
-    inference (caught by the empty-corpus totality sweep, round 9).
-    ``schema`` is the DATA schema (without the ``bucket`` partition
-    column); an empty or absent table reads as an empty DataFrame of
-    exactly that schema, so downstream plans stay schema-stable.  The
-    NON-empty path reads with the same declared schema (plus the
-    ``bucket`` partition column) instead of inferring from parquet
-    footers — otherwise the two branches could return differently
-    typed/nullable frames if the stored files ever drift from the
-    declared schema, breaking the schema-stability contract above
-    (ADVICE r9)."""
+    inference.  ``schema`` is the DATA schema (without the ``bucket``
+    partition column); an empty or absent table reads as an empty
+    DataFrame of exactly that schema, and the non-empty path reads with
+    the same declared schema instead of inferring from parquet footers,
+    so the two branches can never return differently typed frames."""
     if not _bucketed_snapshot_nonempty(path):
         return spark.createDataFrame([], schema)
     return (
@@ -169,42 +188,32 @@ def read_bucketed_snapshot(spark, path: str, schema, fmt: str = "parquet") -> Da
     )
 
 
-def _read_touched_buckets(spark, path: str, fmt: str, touched, schema) -> DataFrame:
-    """Standing-table read for a bucketed snapshot, pruned to the touched
-    bucket partitions: ``bucket`` is a partition DIRECTORY column, so the
-    ``isin`` filter is a partition filter — untouched bucket directories
-    are never listed into the scan (plan-gated by
-    tests/test_streaming.py::test_bucketed_snapshot_read_prunes_partitions).
-    Per-batch read IO is touched/n_buckets of the table, the read half of
-    the write-amplification bound ``_swap_touched_buckets`` gives.
-
-    ``schema`` is the declared DATA schema (without ``bucket``), applied to
-    the scan for the same reason :func:`read_bucketed_snapshot` applies it:
-    the fold's first batch derives its types from the batch DataFrame while
-    later batches would otherwise infer from parquet footers, and any drift
-    between the two forks the standing table's types mid-stream (ADVICE
-    r10 — the r9 fix covered only the consumer-side read)."""
-    return (
-        spark.read.format(fmt)
-        .schema(_schema_plus_bucket(schema))
-        .load(path)
-        .filter(F.col("bucket").isin(list(touched)))
-        .drop("bucket")
-    )
+def _swap_table(out: DataFrame, path: str, fmt: str, batch_id: int | None = None) -> None:
+    """Write ``out`` to a temp dir and rename it over ``path`` — overwriting
+    a path that is also being read corrupts the read, and readers never
+    see a half-written table.  With ``batch_id``, the replay fence is
+    written into the temp dir BEFORE the rename, so data and fence commit
+    in the same rename (a fence written after it could lag a crash
+    between the two and double-apply the batch)."""
+    tmp = f"{path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
+    out.write.format(fmt).mode("overwrite").save(tmp)
+    if batch_id is not None:
+        with open(os.path.join(tmp, _FENCE), "w") as fh:
+            fh.write(str(batch_id))
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.rename(tmp, path)
 
 
 def _swap_touched_buckets(out: DataFrame, path: str, touched, fmt: str) -> None:
     """Write ``out`` (carrying a ``bucket`` column) partitioned by bucket
-    to a temp dir, then atomically swap ONLY the ``touched`` bucket
-    directories into ``path`` — per-batch write IO becomes
-    touched/n_buckets of the table instead of a full rewrite.  A touched
-    bucket absent from ``out`` (every key deleted) is removed.  Atomicity
-    is per-bucket, not per-table (the standard contract for partitioned
-    warehouse tables without a transaction log)."""
-    import os
-    import shutil
-    import uuid
-
+    to a temp dir, then swap ONLY the ``touched`` bucket directories into
+    ``path`` — per-batch write IO becomes touched/n_buckets of the table
+    instead of a full rewrite.  A touched bucket absent from ``out``
+    (every key deleted) is removed.  Atomicity is per-bucket, not
+    per-table: a reader can briefly see bucket k new while bucket j is
+    still old (the standard contract for partitioned warehouse tables
+    without a transaction log)."""
     tmp = f"{path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
     out.write.format(fmt).mode("overwrite").partitionBy("bucket").save(tmp)
     os.makedirs(path, exist_ok=True)
@@ -218,120 +227,96 @@ def _swap_touched_buckets(out: DataFrame, path: str, touched, fmt: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _scd2_versions_sql(src: str) -> str:
-    """SQL twin of operators.windows.scd2_versions over ``src`` (a view
-    name or parenthesized subquery with user_id/event_type/ts/event_id).
-    Same expressions in the same order: LAG over (user_id; ts, event_id),
-    null-safe state comparison, first-row detection on the non-null
-    event_id (see scd2_versions' docstring for why)."""
-    return f"""
-    SELECT user_id, event_type AS state, ts AS valid_from, event_id
-    FROM (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_state,
-               LAG(event_id)   OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_event_id
-        FROM {src}
+# Replay fence of the rollup sink: the highest applied batch id, stored
+# inside the table directory (Spark ignores ``_``-prefixed files).
+_FENCE = "_applied_batch"
+
+
+def _already_applied(path: str, batch_id: int) -> bool:
+    """True iff the fence at ``path`` covers ``batch_id``.  Tables created
+    before the fence moved inside the table directory keep it at
+    ``<path>_applied_batch``; it is honoured so an upgrade cannot re-enable
+    the double apply the fence prevents."""
+    for marker in (os.path.join(path, _FENCE), f"{path.rstrip('/')}{_FENCE}"):
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                return batch_id <= int(fh.read().strip())
+    return False
+
+
+# Stands for the touched-bucket predicate in a bucketed fold statement;
+# replaced per batch (never ``str.format``: identifiers may hold braces).
+_TOUCHED = "__fdi_touched_buckets__"
+
+
+def _start_fold_sink(
+    stream: DataFrame,
+    path: str,
+    checkpoint_path: str,
+    fold_sql: Callable[[str | None, str], str],
+    schema: T.StructType,
+    fmt: str,
+    available_now: bool,
+    trigger_seconds: int | None,
+    bucket_key: str | None = None,
+    n_buckets: int | None = None,
+    fenced: bool = False,
+) -> StreamingQuery:
+    """The ``foreachBatch`` skeleton every snapshot fold sink runs.
+
+    ``fold_sql(standing, batch)`` is the fold's one statement builder
+    (``standing`` is ``None`` before the table exists); ``schema`` is the
+    table's declared schema, fixed at sink start.  The statements are
+    built once, here.  Per batch: bind the batch view, bind the standing
+    view if the table exists, run the statement, then swap the whole
+    directory — or, with ``n_buckets``, only the bucket directories the
+    batch touches (``crc32(bucket_key) % n_buckets``), reading only those
+    from the standing table.  ``fenced`` skips batch ids the table has
+    already absorbed, for folds that are not idempotent."""
+    uid = uuid.uuid4().hex[:8]
+    bview = f"__fdi_fold_batch_{uid}"
+    sview = f"__fdi_fold_standing_{uid}"
+    first_sql = fold_sql(None, bview)
+    if n_buckets is None:
+        apply_sql = fold_sql(sview, bview)
+        standing_sql = _standing_view_sql(sview, schema, path, fmt)
+    else:
+        bucket = key_bucket_sql(bucket_key, n_buckets)
+        touched_sql = f"SELECT DISTINCT {bucket} AS bucket FROM {bview}"
+        # bucket is a partition DIRECTORY column, so the IN predicate is a
+        # partition filter: untouched bucket directories are never listed.
+        cols = ", ".join(ident(name) for name in schema.names)
+        pruned = f"(SELECT {cols} FROM {sview} WHERE {_TOUCHED})"
+        first_sql = f"SELECT *, {bucket} AS bucket FROM ({first_sql})"
+        apply_sql = f"SELECT *, {bucket} AS bucket FROM ({fold_sql(pruned, bview)})"
+        standing_sql = _standing_view_sql(sview, _schema_plus_bucket(schema), path, fmt)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        if fenced and _already_applied(path, batch_id):
+            return
+        spark = batch_df.sparkSession
+        batch_df.createOrReplaceTempView(bview)
+        if n_buckets is None:
+            exists = os.path.exists(path)
+            if exists:
+                spark.sql(standing_sql)
+            out = spark.sql(apply_sql if exists else first_sql)
+            _swap_table(out, path, fmt, batch_id if fenced else None)
+            return
+        # Bounded driver action: at most n_buckets distinct values.
+        touched = sorted(r["bucket"] for r in spark.sql(touched_sql).collect())
+        if _bucketed_snapshot_nonempty(path):
+            spark.sql(standing_sql)
+            where = f"bucket IN ({', '.join(map(str, touched))})" if touched else "FALSE"
+            out = spark.sql(apply_sql.replace(_TOUCHED, where))
+        else:
+            out = spark.sql(first_sql)
+        _swap_touched_buckets(out, path, touched, fmt)
+
+    writer = stream.writeStream.foreachBatch(fold).option(
+        "checkpointLocation", checkpoint_path
     )
-    WHERE prev_event_id IS NULL OR NOT (prev_state <=> event_type)
-    """
-
-
-def _scd2_apply_sql(bview: str, standing_src: str) -> str:
-    """SQL twin of operators.windows.scd2_apply_batch (broadcast_touched
-    form): untouched standing rows pass through an anti join, touched
-    users' versions are replayed with the batch and recompressed.  The
-    BROADCAST hints mirror F.broadcast(touched); joins are null-unsafe
-    equi-joins exactly like the column-name joins in the operator."""
-    batch_cols = f"(SELECT user_id, event_type, ts, event_id FROM {bview})"
-    replayed = f"""
-        SELECT /*+ BROADCAST(t) */
-               s.user_id, s.state AS event_type, s.valid_from AS ts, s.event_id
-        FROM {standing_src} s
-        LEFT SEMI JOIN (SELECT DISTINCT user_id FROM {bview}) t
-          ON s.user_id = t.user_id
-        UNION ALL
-        SELECT user_id, event_type, ts, event_id FROM {batch_cols}
-    """
-    return f"""
-    SELECT /*+ BROADCAST(t) */ s.user_id, s.state, s.valid_from, s.event_id
-    FROM {standing_src} s
-    LEFT ANTI JOIN (SELECT DISTINCT user_id FROM {bview}) t
-      ON s.user_id = t.user_id
-    UNION ALL
-    {_scd2_versions_sql(f"({replayed})")}
-    """
-
-
-def _cdc_apply_sql(
-    bview: str,
-    standing_src: str,
-    all_cols: tuple[str, ...],
-    key: str,
-    order_col: str,
-) -> str:
-    """SQL twin of streaming.cdc.latest_changes + apply_cdc_batch: latest
-    change per key via MAX_BY over the (order_col, lifecycle-stage)
-    comparator struct, upserts replace rows by key, deletes remove them.
-    Column order follows the snapshot schema (``all_cols`` minus op and
-    ``order_col``) exactly as the operator's selects do."""
-    payload_cols = [c for c in all_cols if c != key]
-    data_cols = [c for c in all_cols if c not in ("op", order_col)]
-    stage = (
-        "CASE WHEN op = 'd' THEN 3 WHEN op = 'u' THEN 2 "
-        "WHEN op = 'r' THEN 1 ELSE 0 END"
-    )
-    payload = ", ".join(f"`{c}`" for c in payload_cols)
-    sel_latest = ", ".join(
-        f"`{c}`" if c == key else f"_latest.`{c}` AS `{c}`" for c in data_cols
-    )
-    cols = ", ".join(f"`{c}`" for c in data_cols)
-    return f"""
-    WITH latest AS (
-        SELECT `{key}`,
-               MAX_BY(STRUCT({payload}),
-                      STRUCT(`{order_col}`, {stage})) AS _latest
-        FROM {bview} GROUP BY `{key}`
-    ),
-    upserts AS (
-        SELECT {sel_latest} FROM latest WHERE _latest.op != 'd'
-    ),
-    survivors AS (
-        SELECT s.* FROM {standing_src} s
-        LEFT ANTI JOIN latest l ON s.`{key}` = l.`{key}`
-    )
-    SELECT {cols} FROM survivors UNION ALL SELECT {cols} FROM upserts
-    """
-
-
-def _bucket_wrap_sql(sql: str, key: str, n_buckets: int) -> str:
-    """Append the deterministic key-hash bucket column (_key_bucket's SQL
-    twin) to a fold's output, for the partitioned bucketed write."""
-    return (
-        f"SELECT *, CAST(PMOD(CRC32(CAST(`{key}` AS STRING)), {n_buckets}) AS INT)"
-        f" AS bucket FROM ({sql})"
-    )
-
-
-def _touched_buckets_sql(bview: str, key: str, n_buckets: int) -> str:
-    """Distinct key-hash buckets of a batch (_key_bucket's SQL twin) — the
-    bounded (<= n_buckets rows) driver collect that prunes the standing
-    read and the directory swap."""
-    return (
-        f"SELECT DISTINCT CAST(PMOD(CRC32(CAST(`{key}` AS STRING)), {n_buckets})"
-        f" AS INT) AS bucket FROM {bview}"
-    )
-
-
-def _pruned_standing_src(sview: str, cols: str) -> str:
-    """Bucket-pruned standing subquery for the bucketed folds; ``{buckets}``
-    is formatted per batch (``FALSE`` when the batch touched none, the
-    isin([]) twin).  bucket is a partition DIRECTORY column, so the IN
-    predicate is a partition filter — untouched bucket directories are
-    never listed into the scan (same pruning as _read_touched_buckets,
-    which the consumer-side paths keep using)."""
-    return f"(SELECT {cols} FROM {sview} WHERE {{buckets}})"
+    return start_writer(writer, available_now, trigger_seconds)
 
 
 def start_upsert_sink(
@@ -346,141 +331,75 @@ def start_upsert_sink(
     n_buckets: int | None = None,
 ) -> StreamingQuery:
     """CDC upsert sink: per micro-batch, apply full c/r/u/d op semantics to
-    the snapshot table via :func:`~full_data_infrastructure_spark.streaming.
-    cdc.apply_cdc_batch` (the Delta ``MERGE INTO`` equivalent; the append
-    sink in cdc.py reproduces the reference's insert-only behavior, this one
-    handles mutable sources).
+    the snapshot table with the fold of :func:`~full_data_infrastructure_spark.
+    streaming.cdc.apply_cdc_batch` (the Delta ``MERGE INTO`` equivalent;
+    the append sink in cdc.py reproduces the reference's insert-only
+    behavior, this one handles mutable sources).
 
     With ``fmt="delta"`` (and ``delta-spark`` importable, which requires a
     session built with the Delta SQL extension — the reference's actual
     storage layer, SaveDelta.scala:157-163) each batch is ONE transactional
     ``DeltaTable.merge``: matched deletes drop the row, matched upserts
-    update it, unmatched upserts insert — no directory swap, readers never
-    see a half-written snapshot. Otherwise the parquet snapshot is swapped
-    through a temp directory per batch — overwriting a path that is also
-    being read corrupts the read. Either way the checkpoint dedups replayed
-    batches, and the apply is idempotent per batch
-    (tests/test_properties.py), so at-least-once replay converges.
+    update it, unmatched upserts insert — no directory swap. Otherwise the
+    parquet snapshot is swapped through a temp directory per batch. Either
+    way the checkpoint dedups replayed batches, and the apply is
+    idempotent per batch (tests/test_properties.py), so at-least-once
+    replay converges.
 
-    Like :func:`start_scd2_sink`, the default parquet path rewrites the
-    FULL snapshot every batch; pass ``n_buckets`` to bound the write
-    amplification — the snapshot is directory-partitioned by
-    ``crc32(key) % n_buckets`` and each batch scans and swaps only the
-    bucket partitions its keys touch (see :func:`_swap_touched_buckets`;
-    a key-sparse batch against a huge dimension then costs
-    touched/n_buckets of the table instead of all of it).
+    The default parquet path rewrites the FULL snapshot every batch; pass
+    ``n_buckets`` to bound the write amplification — the snapshot is
+    directory-partitioned by ``crc32(key) % n_buckets`` and each batch
+    scans and swaps only the bucket partitions its keys touch (a
+    key-sparse batch against a huge dimension then costs touched/n_buckets
+    of the table instead of all of it), at per-bucket atomicity.
     """
-    import os
-    import shutil
-    import uuid
+    from full_data_infrastructure_spark.streaming.cdc import apply_cdc_sql, latest_changes
 
-    from full_data_infrastructure_spark.streaming.cdc import latest_changes
+    if fmt == "delta":
 
-    def merge_delta(batch_df: DataFrame, batch_id: int) -> None:
-        from delta.tables import DeltaTable
+        def merge_delta(batch_df: DataFrame, batch_id: int) -> None:
+            from delta.tables import DeltaTable
 
-        spark = batch_df.sparkSession
-        latest = latest_changes(batch_df, key, order_col)
-        data_cols = [c for c in latest.columns if c not in ("op", order_col)]
-        if not DeltaTable.isDeltaTable(spark, snapshot_path):
-            latest.filter(F.col("op") != "d").select(*data_cols).write.format(
-                "delta"
-            ).mode("overwrite").save(snapshot_path)
-            return
-        target = DeltaTable.forPath(spark, snapshot_path)
-        assigns = {c: f"s.{c}" for c in data_cols}
-        (
-            target.alias("t")
-            .merge(latest.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedDelete(condition="s.op = 'd'")
-            .whenMatchedUpdate(set=assigns)
-            .whenNotMatchedInsert(condition="s.op != 'd'", values=assigns)
-            .execute()
+            spark = batch_df.sparkSession
+            latest = latest_changes(batch_df, key, order_col)
+            data_cols = [c for c in latest.columns if c not in ("op", order_col)]
+            if not DeltaTable.isDeltaTable(spark, snapshot_path):
+                latest.filter(F.col("op") != "d").select(*data_cols).write.format(
+                    "delta"
+                ).mode("overwrite").save(snapshot_path)
+                return
+            target = DeltaTable.forPath(spark, snapshot_path)
+            assigns = {c: f"s.{ident(c)}" for c in data_cols}
+            (
+                target.alias("t")
+                .merge(latest.alias("s"), f"t.{ident(key)} = s.{ident(key)}")
+                .whenMatchedDelete(condition="s.op = 'd'")
+                .whenMatchedUpdate(set=assigns)
+                .whenNotMatchedInsert(condition="s.op != 'd'", values=assigns)
+                .execute()
+            )
+
+        writer = decoded.writeStream.foreachBatch(merge_delta).option(
+            "checkpointLocation", checkpoint_path
         )
+        return start_writer(writer, available_now, trigger_seconds)
 
-    # Declared snapshot schema from the DECODED STREAM, fixed once at sink
-    # start rather than re-derived per batch (ADVICE r11) — see the scd2
-    # sink's rationale.
-    snapshot_schema = decoded.drop("op", order_col).schema
-
-    # The fold plan is BUILT ONCE as SQL text (the r18 py4j-constant cut —
-    # see _standing_view_sql's rationale); per batch only the two temp
-    # views are (re)bound and the one statement executed.  The SQL is the
-    # operator-for-operator twin of latest_changes + apply_cdc_batch
-    # (asserted equal in tests/test_streaming.py::test_cdc_fold_sql_
-    # matches_operator); the standing view re-CREATE per batch re-lists
-    # the swapped snapshot directory with the DECLARED schema (ADVICE r10).
-    uid = uuid.uuid4().hex[:8]
-    bview = f"__fdi_upsert_batch_{uid}"
-    sview = f"__fdi_upsert_standing_{uid}"
-    all_cols = tuple(decoded.columns)
-    data_cols_sql = ", ".join(f"`{f.name}`" for f in snapshot_schema.fields)
-    apply_sql = _cdc_apply_sql(bview, sview, all_cols, key, order_col)
-    # First batch: no standing table exists yet — fold against an EMPTY
-    # standing side typed off the batch view itself (the batch carries
-    # every snapshot column), the SQL twin of apply_cdc_batch(empty, batch).
-    empty_src = f"(SELECT {data_cols_sql} FROM {bview} WHERE FALSE)"
-    first_sql = _cdc_apply_sql(bview, empty_src, all_cols, key, order_col)
-    pruned_sql = _cdc_apply_sql(
-        bview,
-        _pruned_standing_src(sview, data_cols_sql),
-        all_cols,
+    change_cols = tuple(decoded.columns)
+    schema = decoded.drop("op", order_col).schema
+    return _start_fold_sink(
+        decoded,
+        snapshot_path,
+        checkpoint_path,
+        lambda standing, batch: apply_cdc_sql(
+            standing, batch, change_cols, schema.names, key, order_col
+        ),
+        schema,
+        fmt,
+        available_now,
+        trigger_seconds,
         key,
-        order_col,
+        n_buckets,
     )
-    touched_sql = _touched_buckets_sql(bview, key, n_buckets or 1)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if fmt == "delta":
-            merge_delta(batch_df, batch_id)
-            return
-        batch_df.createOrReplaceTempView(bview)
-        if n_buckets is None:
-            if os.path.exists(snapshot_path):
-                # Declared schema, not footer inference: keeps every batch's
-                # standing-table types identical to the declared stream
-                # types (ADVICE r10).
-                spark.sql(
-                    _standing_view_sql(sview, snapshot_schema, snapshot_path, fmt)
-                )
-                merged = spark.sql(apply_sql)
-            else:
-                merged = spark.sql(first_sql)
-            tmp = f"{snapshot_path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
-            merged.write.format(fmt).mode("overwrite").save(tmp)
-            if os.path.exists(snapshot_path):
-                shutil.rmtree(snapshot_path)
-            os.rename(tmp, snapshot_path)
-            return
-        # Bounded driver action: at most n_buckets distinct values.
-        touched = sorted(r["bucket"] for r in spark.sql(touched_sql).collect())
-        if _bucketed_snapshot_nonempty(snapshot_path):
-            spark.sql(
-                _standing_view_sql(
-                    sview,
-                    _schema_plus_bucket(snapshot_schema),
-                    snapshot_path,
-                    fmt,
-                )
-            )
-            buckets = (
-                f"bucket IN ({', '.join(map(str, touched))})" if touched else "FALSE"
-            )
-            merged_sql = pruned_sql.format(buckets=buckets)
-        else:
-            merged_sql = first_sql
-        out = spark.sql(_bucket_wrap_sql(merged_sql, key, n_buckets))
-        _swap_touched_buckets(out, snapshot_path, touched, fmt)
-
-    writer = decoded.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 PARTIAL_SUM_TYPE = "decimal(30,2)"  # fixed width so stored/union schemas agree
@@ -499,110 +418,63 @@ def start_rollup_sink(
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
     """Streaming continuous aggregate: per micro-batch, compute the batch's
-    time-bucket partials (operators/rollup.py) and fold them into the
-    stored partials table with each statistic's combiner — sum-of-counts,
-    sum-of-sums, min-of-mins, max-of-maxes. Late rows just re-merge their
-    bucket; no watermark state is held, because the stored table IS the
-    state (bounded by bucket cardinality, not event count).
+    time-bucket partials and fold them into the stored partials table with
+    the combiners of
+    :func:`~full_data_infrastructure_spark.operators.rollup.merge_partials`
+    — sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes. Late
+    rows just re-merge their bucket; no watermark state is held, because
+    the stored table IS the state (bounded by bucket cardinality, not
+    event count).
 
     Additive merges are not idempotent, so replayed micro-batches (the
     foreachBatch at-least-once caveat) are fenced with a batch-id
-    high-water mark stored INSIDE the table directory: the marker is
-    written into the swap dir before the rename, so data and fence commit
-    atomically via the same rename (a marker beside the table could lag a
-    crash between rename and marker-write, double-applying the batch), and
-    deleting the table deletes the fence with it. If the checkpoint is
-    recreated (batch ids restart at 0), delete the partials table too —
-    the fence would otherwise skip genuinely new batches. Spark ignores
-    ``_``-prefixed files, so the marker never pollutes reads. On Delta,
-    replace all of this with a transactional MERGE keyed on
-    (bucket, keys) and txnVersion.
+    high-water mark stored INSIDE the table directory and committed by
+    the same rename as the data (see :func:`_swap_table`); deleting the
+    table deletes the fence with it. If the checkpoint is recreated
+    (batch ids restart at 0), delete the partials table too — the fence
+    would otherwise skip genuinely new batches. On Delta, replace all of
+    this with a transactional MERGE keyed on (bucket, keys) and
+    txnVersion.
     """
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from full_data_infrastructure_spark.operators.rollup import rollup_partials
-
-    marker_name = "_applied_batch"
-
-    def _stabilize(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "sum_value", F.col("sum_value").cast(PARTIAL_SUM_TYPE)
-        )
-
-    # Declared partials schema from the INCOMING STREAM's types, fixed once
-    # at sink start (analysis-only over an empty frame) rather than
-    # re-derived from each batch (ADVICE r11); PARTIAL_SUM_TYPE fixes the
-    # decimal width, so footer inference can never fork the stored types
-    # (ADVICE r10) and a mid-stream upstream type change errors in the
-    # unionByName below instead of silently re-typing the standing read.
-    partials_schema = _stabilize(
-        rollup_partials(
-            events.sparkSession.createDataFrame([], events.schema),
-            unit=unit,
-            keys=keys,
-            ts_col=ts_col,
-            value_col=value_col,
-        )
-    ).schema
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(partials_path, marker_name)
-        # Migration: deployments created before the fence moved inside the
-        # table directory left it at "<path>_applied_batch"; honor it so an
-        # upgrade cannot re-enable the double-apply the fence prevents (new
-        # writes land at the in-table location).
-        legacy_marker = f"{partials_path.rstrip('/')}_applied_batch"
-        for candidate in (marker, legacy_marker):
-            if os.path.exists(candidate):
-                with open(candidate) as fh:
-                    if batch_id <= int(fh.read().strip()):
-                        return  # replayed batch: already applied
-                break
-        spark = batch_df.sparkSession
-        batch_partials = _stabilize(
-            rollup_partials(
-                batch_df, unit=unit, keys=keys, ts_col=ts_col, value_col=value_col
-            )
-        )
-        if os.path.exists(partials_path):
-            merged = (
-                spark.read.format(fmt)
-                .schema(partials_schema)
-                .load(partials_path)
-                .unionByName(batch_partials)
-                .groupBy("bucket", *keys)
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                    F.min("min_value").alias("min_value"),
-                    F.max("max_value").alias("max_value"),
-                )
-            )
-            merged = _stabilize(merged)
-        else:
-            merged = batch_partials
-        tmp = f"{partials_path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
-        merged.write.format(fmt).mode("overwrite").save(tmp)
-        # Fence written into the swap dir BEFORE the rename: data + marker
-        # become visible in one atomic directory swap.
-        with open(os.path.join(tmp, marker_name), "w") as fh:
-            fh.write(str(batch_id))
-        if os.path.exists(partials_path):
-            shutil.rmtree(partials_path)
-        os.rename(tmp, partials_path)
-
-    writer = events.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_path
+    from full_data_infrastructure_spark.operators.rollup import (
+        PARTIAL_COLS,
+        merge_partials_sql,
+        rollup_partials_sql,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+
+    cols = ", ".join(["bucket", *map(ident, keys), *PARTIAL_COLS])
+    # PARTIAL_SUM_TYPE fixes the stored decimal width, so a merge's wider
+    # SUM type never leaks into the table.
+    out_cols = ", ".join(
+        ["bucket", *map(ident, keys), "n_events",
+         f"CAST(sum_value AS {PARTIAL_SUM_TYPE}) AS sum_value",
+         "min_value", "max_value"]
+    )
+
+    def fold_sql(standing: str | None, batch: str) -> str:
+        partials = rollup_partials_sql(batch, unit, keys, ts_col, value_col)
+        if standing is not None:
+            both = f"(SELECT {cols} FROM {standing} UNION ALL SELECT {cols} FROM ({partials}))"
+            partials = merge_partials_sql(both, unit, keys)
+        return f"SELECT {out_cols} FROM ({partials})"
+
+    # Declared partials schema from the INCOMING STREAM's types
+    # (analysis-only over an empty frame).
+    schema = run_over_views(
+        lambda batch: fold_sql(None, batch),
+        batch=events.sparkSession.createDataFrame([], events.schema),
+    ).schema
+    return _start_fold_sink(
+        events,
+        partials_path,
+        checkpoint_path,
+        fold_sql,
+        schema,
+        fmt,
+        available_now,
+        trigger_seconds,
+        fenced=True,
+    )
 
 
 def start_scd2_sink(
@@ -615,7 +487,7 @@ def start_scd2_sink(
     n_buckets: int | None = None,
 ) -> StreamingQuery:
     """SCD Type-2 warehouse sink: per micro-batch, fold the change batch
-    into the standing compressed-version table via
+    into the standing compressed-version table with the fold of
     :func:`~full_data_infrastructure_spark.operators.windows.scd2_apply_batch`
     — the dimension-HISTORY consumer of a CDC stream, where
     :func:`start_upsert_sink` keeps only the latest row per key.
@@ -623,115 +495,45 @@ def start_scd2_sink(
     COMPUTE per batch scales with the batch's user set (anti-join
     pass-through for untouched users), never the accumulated history —
     but the default snapshot-swap WRITE rewrites the full standing table
-    every batch.  That write amplification is the operator's real scale
-    cost (VERDICT r6 item 8): a 10 TB dimension folding 1 GB batches
-    writes 10 TB per trigger.  Pass ``n_buckets`` to bound it: the
-    versions table is directory-partitioned by a deterministic key-hash
-    bucket (``crc32(user_id) % n_buckets``), each batch reads ONLY the
-    bucket partitions its users touch (Spark prunes the scan to those
-    directories) and swaps only those bucket directories — per-batch IO
-    becomes ``touched_buckets/n_buckets`` of the table.  Atomicity
-    weakens from whole-table to per-bucket (readers can briefly see
-    bucket k new while bucket j is still old — the standard contract for
-    partitioned warehouse tables without a transaction log; a Delta/
-    Iceberg sink would restore table-level snapshots, delta-spark is
-    absent in this container).
+    every batch: a 10 TB dimension folding 1 GB batches writes 10 TB per
+    trigger.  Pass ``n_buckets`` to bound it: the versions table is
+    directory-partitioned by ``crc32(user_id) % n_buckets``, each batch
+    reads ONLY the bucket partitions its users touch and swaps only those
+    bucket directories — per-batch IO becomes
+    ``touched_buckets/n_buckets`` of the table, and atomicity weakens
+    from whole-table to per-bucket (a Delta/Iceberg sink would restore
+    table-level snapshots).
 
     The fold is idempotent under batch replay: re-applied change rows
     land adjacent to their own version rows in the (ts, event_id) order
     and compress away as no-op transitions, so checkpointed at-least-once
-    redelivery converges (the same argument as the upsert sink, proven
-    at the operator level by
+    redelivery converges (proven at the operator level by
     tests/test_properties.py::test_scd2_fold_invariant_to_batch_boundaries
     and the idempotence unit test). Requires batches ordered by the
     change time — the per-partition ordering a keyed topic (or the
-    ts-ordered replay harness) provides. Snapshots are swapped through
-    temp directories so concurrent readers never see a half-written
-    table (or bucket).
+    ts-ordered replay harness) provides.
     """
-    import os
-    import shutil
-    import uuid
+    from full_data_infrastructure_spark.operators.windows import (
+        scd2_apply_sql,
+        scd2_versions,
+    )
 
-    from full_data_infrastructure_spark.operators.windows import scd2_versions
-
-    # Declared standing-table schema: what scd2_versions emits for the
-    # DECODED STREAM's column types, computed ONCE at sink start
-    # (analysis-only over an empty frame — no job runs) rather than per
-    # batch (ADVICE r11).  Applied to every standing read so no batch can
-    # fork types via parquet footer inference (ADVICE r10), and so that
-    # if an upstream decode change ever altered a batch's types
-    # mid-stream the fold surfaces the drift loudly instead of silently
-    # re-reading old files with the new batch's types.
-    _change_cols = ("user_id", "event_type", "ts", "event_id")
-    versions_schema = scd2_versions(
+    # Declared version schema: what scd2_versions emits for the DECODED
+    # STREAM's column types (analysis-only over an empty frame).
+    schema = scd2_versions(
         changes.sparkSession.createDataFrame(
-            [], changes.select(*_change_cols).schema
+            [], changes.select("user_id", "event_type", "ts", "event_id").schema
         )
     ).schema
-
-    # Fold plan built ONCE as SQL text (the r18 py4j-constant cut — see
-    # _standing_view_sql's rationale); the SQL is the operator-for-operator
-    # twin of scd2_apply_batch / scd2_versions (asserted equal in
-    # tests/test_streaming.py::test_scd2_fold_sql_matches_operator).  Per
-    # batch: rebind two temp views, run one statement, write.
-    uid = uuid.uuid4().hex[:8]
-    bview = f"__fdi_scd2_batch_{uid}"
-    sview = f"__fdi_scd2_standing_{uid}"
-    ver_cols_sql = ", ".join(f"`{f.name}`" for f in versions_schema.fields)
-    apply_sql = _scd2_apply_sql(bview, sview)
-    first_sql = _scd2_versions_sql(
-        f"(SELECT user_id, event_type, ts, event_id FROM {bview})"
+    return _start_fold_sink(
+        changes,
+        versions_path,
+        checkpoint_path,
+        scd2_apply_sql,
+        schema,
+        fmt,
+        available_now,
+        trigger_seconds,
+        "user_id",
+        n_buckets,
     )
-    pruned_sql = _scd2_apply_sql(
-        bview, _pruned_standing_src(sview, ver_cols_sql)
-    )
-    touched_sql = _touched_buckets_sql(bview, "user_id", n_buckets or 1)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df.createOrReplaceTempView(bview)
-        if n_buckets is None:
-            if os.path.exists(versions_path):
-                spark.sql(
-                    _standing_view_sql(sview, versions_schema, versions_path, fmt)
-                )
-                merged = spark.sql(apply_sql)
-            else:
-                merged = spark.sql(first_sql)
-            tmp = f"{versions_path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
-            merged.write.format(fmt).mode("overwrite").save(tmp)
-            if os.path.exists(versions_path):
-                shutil.rmtree(versions_path)
-            os.rename(tmp, versions_path)
-            return
-        # Bounded driver action: at most n_buckets distinct values.
-        touched = sorted(r["bucket"] for r in spark.sql(touched_sql).collect())
-        if _bucketed_snapshot_nonempty(versions_path):
-            # Partition pruning: only the touched bucket directories are
-            # scanned — untouched buckets cost zero read AND zero write.
-            spark.sql(
-                _standing_view_sql(
-                    sview,
-                    _schema_plus_bucket(versions_schema),
-                    versions_path,
-                    fmt,
-                )
-            )
-            buckets = (
-                f"bucket IN ({', '.join(map(str, touched))})" if touched else "FALSE"
-            )
-            merged_sql = pruned_sql.format(buckets=buckets)
-        else:
-            merged_sql = first_sql
-        out = spark.sql(_bucket_wrap_sql(merged_sql, "user_id", n_buckets))
-        _swap_touched_buckets(out, versions_path, touched, fmt)
-
-    writer = changes.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -52,9 +52,6 @@ LOG_B="$(mktemp /tmp/fdi_suite_half_b.XXXXXX)"
 echo "half A -> $LOG_A"
 echo "half B -> $LOG_B"
 
-# Deadline disabled: the pre-land parallel run is the complete-coverage
-# proof; the conftest deadline exists only for the driver's serial run.
-SPARK_GRAFT_TEST_DEADLINE_SEC=0 \
 SPARK_GRAFT_CPUS="$SPARK_GRAFT_SUITE_CPUS" python -m pytest \
     tests/test_plans.py tests/test_operators.py tests/test_oracle_parity.py \
     tests/test_properties.py tests/test_registry_order.py tests/test_sources.py \
@@ -62,7 +59,6 @@ SPARK_GRAFT_CPUS="$SPARK_GRAFT_SUITE_CPUS" python -m pytest \
     tests/test_time_semantics.py tests/test_totality.py \
     -q -p no:cacheprovider > "$LOG_A" 2>&1 &
 pa=$!
-SPARK_GRAFT_TEST_DEADLINE_SEC=0 \
 SPARK_GRAFT_CPUS="$SPARK_GRAFT_SUITE_CPUS" python -m pytest \
     tests/test_streaming.py tests/test_null_semantics.py \
     tests/test_extreme_semantics.py tests/test_tz_semantics.py \

@@ -383,7 +383,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
     snap_swap = os.path.join(work_root, "upsert_swap")
     snap_bkt = os.path.join(work_root, "upsert_bucketed")
     latest.write.parquet(snap_swap)
-    latest.withColumn("bucket", _key_bucket(F.col("user_id"), n_buckets)).write.partitionBy(
+    latest.withColumn("bucket", _key_bucket("user_id", n_buckets)).write.partitionBy(
         "bucket"
     ).parquet(snap_bkt)
     standing_keys = spark.read.parquet(snap_swap).count()
@@ -394,7 +394,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
     sparse_users = (
         ev.select("user_id")
         .distinct()
-        .filter(_key_bucket(F.col("user_id"), n_buckets).isin(list(sparse_buckets)))
+        .filter(_key_bucket("user_id", n_buckets).isin(list(sparse_buckets)))
     )
     upsert_batch = sparse_users.select(
         "user_id",
@@ -441,7 +441,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
     ver_swap = os.path.join(work_root, "scd2_swap")
     ver_bkt = os.path.join(work_root, "scd2_bucketed")
     versions.write.parquet(ver_swap)
-    versions.withColumn("bucket", _key_bucket(F.col("user_id"), n_buckets)).write.partitionBy(
+    versions.withColumn("bucket", _key_bucket("user_id", n_buckets)).write.partitionBy(
         "bucket"
     ).parquet(ver_bkt)
     out["scd2_standing_rows"] = spark.read.parquet(ver_swap).count()

@@ -1,42 +1,18 @@
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
 SF_TEST_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-# ---------------------------------------------------------------------------
-# Driver-budget guard (optimization round 18; VERDICT r17 item 1a).
-#
-# The external driver runs ONE serial ``pytest tests/ -x -q`` under a fixed
-# wall budget; in round 17 that run was cut off at ~81% with zero failures,
-# leaving the round's semantic rewrites formally unattested.  Two measures,
-# both prescribed by the r17 ADVICE ("shard or time-box the suite; run the
-# oracle-parity subset for touched queries first"):
-#
-# 1. COLLECTION ORDER: the most load-bearing evidence runs first — registry
-#    window gates, the oracle-parity sweep (the driver-replica correctness
-#    gate), the streaming e2e suite, the physical-plan gates, then the
-#    operator/property layers, with the five adversarial corpus sweeps
-#    (each a full re-run of the query surface on a mutated corpus) last.
-#    Alphabetical collection previously ran ~40% of the adversarial sweeps
-#    BEFORE the core parity gate.
-# 2. DEADLINE: once a pytest invocation has run longer than
-#    $SPARK_GRAFT_TEST_DEADLINE_SEC (default 1800 s; 0 disables), remaining
-#    tests SKIP with an explicit message instead of being killed mid-run —
-#    the run then completes and reports, and anything skipped is visible in
-#    the summary rather than silently absent.  The pre-land full runs
-#    (run_suite_parallel.sh) disable the deadline, so complete coverage is
-#    still proven every round; the deadline exists so a slow driver host
-#    degrades to "core evidence attested + deep tail visibly skipped"
-#    instead of "nothing attested".
-# ---------------------------------------------------------------------------
-_SUITE_START = time.monotonic()
-_DEADLINE_SEC = float(os.environ.get("SPARK_GRAFT_TEST_DEADLINE_SEC", "1800"))
-
+# Collection order: the most load-bearing evidence runs first -- registry
+# window gates, the oracle-parity sweep, the streaming end-to-end suite, the
+# physical-plan gates, then the operator/property layers, with the five
+# adversarial corpus sweeps (each a full re-run of the query surface on a
+# mutated corpus) last.  A run cut short by an outer timeout has then
+# attested the core evidence.
 _CRITICAL_FIRST = (
     "test_registry_order.py",
     "test_oracle_check.py",
@@ -65,16 +41,6 @@ def pytest_collection_modifyitems(session, config, items):
     items.sort(
         key=lambda it: _RANK.get(os.path.basename(str(it.fspath)), len(_RANK))
     )
-
-
-def pytest_runtest_setup(item):
-    if _DEADLINE_SEC > 0 and time.monotonic() - _SUITE_START > _DEADLINE_SEC:
-        pytest.skip(
-            f"suite deadline ({_DEADLINE_SEC:.0f}s) reached — deep-sweep "
-            f"tail skipped so the run completes within the driver budget; "
-            f"set SPARK_GRAFT_TEST_DEADLINE_SEC=0 for the full run "
-            f"(run_suite_parallel.sh does)"
-        )
 
 
 @pytest.fixture(scope="session")

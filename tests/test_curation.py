@@ -84,8 +84,7 @@ def test_connected_components_known_graph(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    # worst case for min-label propagation: a path graph; the label must
-    # walk the full diameter
+    # a path graph: the component minimum must reach the far end
     n = 12
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a bigint, doc_b bigint"
@@ -246,20 +245,29 @@ def test_chunk_documents_covers_docs_with_overlap(spark, sf_dir):
 
 
 def test_twostar_matches_minlabel_on_known_and_random_graphs(spark):
-    """The large-star/small-star variant must produce the same component
-    labels as min-label propagation: known shapes (chain, triangle, pair),
-    a 12-vertex path (the diameter worst case), and a seeded random
-    graph."""
+    """The large-star/small-star components must carry the min-label
+    labelling — every vertex labelled with its component's minimum id, as
+    a plain union-find computes it: known shapes (chain, triangle, pair),
+    a 12-vertex path, self-loops, and a seeded random graph."""
     import random
 
-    from full_data_infrastructure_spark.operators.dedup import (
-        connected_components,
-        connected_components_twostar,
-    )
+    from full_data_infrastructure_spark.operators.dedup import connected_components
 
-    def labels_of(fn, edges):
-        df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-        return {r["id"]: r["cluster_id"] for r in fn(df).collect()}
+    def union_find_labels(edges):
+        parent: dict[int, int] = {}
+
+        def find(v):
+            parent.setdefault(v, v)
+            while parent[v] != v:
+                parent[v] = parent[parent[v]]
+                v = parent[v]
+            return v
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {v: find(v) for v in parent}
 
     cases = [
         [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
@@ -272,9 +280,9 @@ def test_twostar_matches_minlabel_on_known_and_random_graphs(spark):
         [(rng.randrange(40), rng.randrange(40)) for _ in range(45)]
     )
     for edges in cases:
-        assert labels_of(connected_components_twostar, edges) == labels_of(
-            connected_components, edges
-        ), edges
+        df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+        got = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
+        assert got == union_find_labels(edges), edges
 
 
 def test_twostar_converges_logarithmically_on_deep_chain(spark):
@@ -285,14 +293,12 @@ def test_twostar_converges_logarithmically_on_deep_chain(spark):
     from star-shaped at the start: every vertex must still land on the
     component minimum, and a disjoint 2-cycle plus singleton self-loop
     must not leak labels across components."""
-    from full_data_infrastructure_spark.operators.dedup import (
-        connected_components_twostar,
-    )
+    from full_data_infrastructure_spark.operators.dedup import connected_components
 
     edges = [(i, i + 1) for i in range(63)]  # path 0-1-...-63
     edges += [(100, 101), (101, 100), (200, 200)]
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    labels = {r["id"]: r["cluster_id"] for r in connected_components_twostar(df).collect()}
+    labels = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
     assert all(labels[v] == 0 for v in range(64))
     assert labels[100] == labels[101] == 100
     assert labels[200] == 200

@@ -1341,52 +1341,6 @@ def test_scd2_apply_batch_sparse_and_new_users(spark):
     assert sorted(standing_rows) == sorted(folded_rows)
 
 
-def test_scd2_apply_batch_backfill_escape_hatch(spark, sf_dir):
-    """VERDICT r8 item 5: scd2_apply_batch(broadcast_touched=False) — the
-    documented escape for replay/backfill batches whose user set is
-    corpus-sized — is semantics-neutral: on the scd2_incremental corpus
-    shape the False fold must equal the True fold AND the full-history
-    rebuild row-for-row. Also pin that the flag really changes the plan
-    (False plans no broadcast of the touched set into the standing anti
-    join), so a regression can't silently turn the hatch into a no-op."""
-    from full_data_infrastructure_spark.operators.windows import (
-        scd2_apply_batch,
-        scd2_finalize,
-        scd2_versions,
-    )
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    )
-    cut = F.lit("2024-01-25").cast("timestamp")
-    standing = scd2_versions(events.filter(F.col("ts") < cut))
-    batch = events.filter(F.col("ts") >= cut)
-
-    fold_bc = scd2_finalize(scd2_apply_batch(standing, batch))
-    fold_shuffle = scd2_finalize(
-        scd2_apply_batch(standing, batch, broadcast_touched=False)
-    )
-    full = scd2_finalize(scd2_versions(events))
-
-    rows_bc = sorted(map(tuple, fold_bc.collect()))
-    rows_shuffle = sorted(map(tuple, fold_shuffle.collect()))
-    rows_full = sorted(map(tuple, full.collect()))
-    assert rows_shuffle == rows_bc == rows_full
-    assert len(rows_full) > 0
-
-    # The hint must actually flip: the broadcast fold plans the touched
-    # set as a broadcast exchange; the backfill fold must not force one
-    # (AQE may still choose strategies at runtime — the point is the
-    # STATIC plan no longer pins a driver-sized broadcast of a
-    # corpus-sized user set).
-    plan_bc = fold_bc._jdf.queryExecution().toString()
-    plan_shuffle = fold_shuffle._jdf.queryExecution().toString()
-    assert "ResolvedHint" in plan_bc or "broadcast" in plan_bc.lower()
-    analyzed_shuffle = fold_shuffle._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in analyzed_shuffle, analyzed_shuffle[:2000]
-    assert plan_shuffle  # both folds planned successfully
-
-
 def test_jsonl_permissive_quarantine(spark, sf_dir):
     """The dead-letter side of the quarantine ingest: PERMISSIVE mode
     with columnNameOfCorruptRecord must route every corrupted line —

@@ -1482,51 +1482,148 @@ def test_scd2_sink_restart_is_exactly_once(spark, sf_dir, tmp_path, n_buckets):
     assert got == want
 
 
+class _ActionPlans:
+    """A JVM ``QueryExecutionListener`` (through the py4j callback server)
+    that keeps the executed plan of every successful action."""
+
+    def __init__(self) -> None:
+        self.plans: list[str] = []
+
+    def onSuccess(self, func_name, qe, duration_ns) -> None:
+        self.plans.append(qe.executedPlan().toString())
+
+    def onFailure(self, func_name, qe, exception) -> None:
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def _run_two_batches(spark, tmp_path, start, schema, first, second):
+    """Fold ``first`` then ``second`` through ``start(stream)`` as two
+    availableNow runs; returns the executed plans of the actions the
+    second run issued."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    src = str(tmp_path / "src")
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        start(stream).awaitTermination(120)
+
+    spark.createDataFrame(first, schema).coalesce(1).write.parquet(src, mode="append")
+    run()
+    spark.createDataFrame(second, schema).coalesce(1).write.parquet(src, mode="append")
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    # Deliver the events of every earlier action first, or a late one
+    # could reach the probe.
+    bus.waitUntilEmpty()
+    probe = _ActionPlans()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(probe)
+    try:
+        run()
+        bus.waitUntilEmpty()
+    finally:
+        manager.unregister(probe)
+    return probe.plans
+
+
 def test_bucketed_snapshot_read_prunes_partitions(spark, tmp_path):
-    """The bucketed sinks' standing-table read must PRUNE to the touched
-    bucket directories — the read half of the per-batch IO bound (the
-    write half is asserted by the rewrite test above).  The physical scan
-    must carry the bucket partition filter and select only the touched
-    partitions, so untouched buckets cost zero read at any table size."""
-    from pyspark.sql import functions as F
+    """The per-batch write a bucketed upsert sink and a bucketed SCD2 sink
+    actually execute must read only the touched bucket directories of
+    the standing table — the read half of the per-batch IO bound (the
+    write half is asserted by the rewrite tests above) — and broadcast
+    the batch's touched key set into the standing-side anti/semi joins,
+    so the standing table is scanned, never shuffled.  Every stored row
+    sits in bucket crc32(str(key)) % n_buckets."""
+    import re
+    from zlib import crc32
 
     from full_data_infrastructure_spark.streaming.sinks import (
-        _key_bucket,
-        _read_touched_buckets,
+        start_scd2_sink,
+        start_upsert_sink,
     )
 
-    snap = str(tmp_path / "snapshot")
-    rows = spark.range(1, 65).select(
-        F.col("id"), (F.col("id") * 2.0).alias("value")
-    )
-    rows.withColumn("bucket", _key_bucket(F.col("id"), 8)).write.partitionBy(
-        "bucket"
-    ).parquet(snap)
-
-    touched = [0, 3]
-    df = _read_touched_buckets(spark, snap, "parquet", touched, rows.schema)
-    # The declared data schema must survive the pruned read — names and
-    # types verbatim; nullability is normalized to nullable by any file
-    # source read, so it is excluded (ADVICE r10: footer inference forked
-    # the types mid-stream).
-    assert [(f.name, f.dataType) for f in df.schema.fields] == [
-        (f.name, f.dataType) for f in rows.schema.fields
-    ], df.schema
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan, plan
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and m.group(1).strip(), f"no partition filter in scan:\n{plan}"
-    # Row-level truth: exactly the touched buckets' rows come back.
-    expected = {
-        r["id"]
-        for r in rows.withColumn("bucket", _key_bucket(F.col("id"), 8))
-        .filter(F.col("bucket").isin(touched))
-        .collect()
+    # name -> (sink start, schema, first batch, second batch, key,
+    #          standing-side joins, rows stored after both batches)
+    cases = {
+        "upsert": (
+            lambda stream, snap, ckpt: start_upsert_sink(
+                stream, snap, ckpt, key="id", available_now=True, n_buckets=8
+            ),
+            "op string, ts_ms bigint, id bigint, value double",
+            [("c", k, k, float(k)) for k in range(1, 65)],
+            [("u", 100, 1, -1.0), ("u", 101, 2, -2.0)],
+            "id",
+            ("LeftAnti",),
+            64,
+        ),
+        "scd2": (
+            lambda stream, snap, ckpt: start_scd2_sink(
+                stream, snap, ckpt, available_now=True, n_buckets=8
+            ),
+            "user_id bigint, event_type string, ts bigint, event_id bigint",
+            [(u, "a", u, u) for u in range(1, 65)],
+            [(1, "b", 100, 100), (2, "b", 101, 101)],
+            "user_id",
+            ("LeftAnti", "LeftSemi"),
+            66,
+        ),
     }
-    got = {r["id"] for r in df.collect()}
-    assert got == expected and got, (len(got), len(expected))
+    for name, (start, schema, first, second, key, joins, n_rows) in cases.items():
+        snap, ckpt = str(tmp_path / name / "snapshot"), str(tmp_path / name / "ckpt")
+        plans = _run_two_batches(
+            spark,
+            tmp_path / name,
+            lambda stream: start(stream, snap, ckpt),
+            schema,
+            first,
+            second,
+        )
+        writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        assert len(writes) == 1, (name, plans)
+        plan = writes[0]
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and "bucket" in m.group(1), f"{name}: no bucket partition filter:\n{plan}"
+        for kind in joins:
+            assert re.search(
+                rf"BroadcastHashJoin \[[^\]]*\], \[[^\]]*\], {kind}, BuildRight", plan
+            ), f"{name}: {kind} not broadcast:\n{plan}"
+        stored = spark.read.parquet(snap).collect()
+        assert len(stored) == n_rows, name
+        for r in stored:
+            assert r["bucket"] == crc32(str(r[key]).encode()) % 8, (name, r)
+
+
+def test_bucketed_upsert_sink_quotes_identifiers_and_paths(spark, tmp_path):
+    """Column names and paths are spliced into the fold's SQL text: a key
+    column holding a backtick and braces, folded into a snapshot whose
+    path holds a quote, must fold exactly like any other key."""
+    from full_data_infrastructure_spark.sqltext import ident
+    from full_data_infrastructure_spark.streaming.sinks import start_upsert_sink
+
+    key = "k`{0}"
+    snap = str(tmp_path / "it's snapshot")
+    plans = _run_two_batches(
+        spark,
+        tmp_path,
+        lambda stream: start_upsert_sink(
+            stream, snap, str(tmp_path / "ckpt"), key=key,
+            available_now=True, n_buckets=4,
+        ),
+        f"op string, ts_ms bigint, {ident(key)} bigint, value double",
+        [("c", k, k, float(k)) for k in range(1, 9)],
+        [("u", 100, 1, -1.0), ("d", 101, 2, 0.0), ("c", 102, 9, 9.0)],
+    )
+    assert plans
+    got = {r[key]: r["value"] for r in spark.read.parquet(snap).collect()}
+    assert got == {1: -1.0, **{k: float(k) for k in range(3, 10)}}
 
 
 def test_bucket_grouped_replay_batches_are_key_sparse(spark, sf_dir, tmp_path):
@@ -1549,7 +1646,7 @@ def test_bucket_grouped_replay_batches_are_key_sparse(spark, sf_dir, tmp_path):
         "user_id",
         "event_id",
         (
-            _key_bucket(F.col("user_id"), n_buckets).cast("bigint")
+            _key_bucket("user_id", n_buckets).cast("bigint")
             * F.lit(1 << 40).cast("bigint")
             + F.col("event_id")
         ).alias("replay_offset"),
@@ -1621,7 +1718,7 @@ def test_read_bucketed_snapshot_non_empty_uses_declared_schema(spark, tmp_path):
     rows = spark.range(1, 17).select(
         F.col("id"), (F.col("id") * 2).cast("int").alias("value")
     )
-    rows.withColumn("bucket", _key_bucket(F.col("id"), 4)).write.partitionBy(
+    rows.withColumn("bucket", _key_bucket("id", 4)).write.partitionBy(
         "bucket"
     ).parquet(snap)
 
@@ -1674,9 +1771,9 @@ def test_bucket_major_offset_survives_wide_ts_span(spark, tmp_path):
 
     def offsets(mult: int):
         return corpus.select(
-            _key_bucket(F.col("user_id"), n_buckets).cast("bigint").alias("b"),
+            _key_bucket("user_id", n_buckets).cast("bigint").alias("b"),
             (
-                _key_bucket(F.col("user_id"), n_buckets).cast("bigint")
+                _key_bucket("user_id", n_buckets).cast("bigint")
                 * F.lit(mult).cast("bigint")
                 + F.unix_micros("ts")
             ).alias("replay_offset"),
@@ -1707,7 +1804,7 @@ def test_bucket_major_offset_survives_wide_ts_span(spark, tmp_path):
     df = corpus.select(
         "user_id",
         (
-            _key_bucket(F.col("user_id"), n_buckets).cast("bigint")
+            _key_bucket("user_id", n_buckets).cast("bigint")
             * F.lit(1 << 54).cast("bigint")
             + F.unix_micros("ts")
         ).alias("replay_offset"),
@@ -1731,102 +1828,3 @@ def test_bucket_major_offset_survives_wide_ts_span(spark, tmp_path):
         )
         max_touched = max(max_touched, nb)
     assert max_touched <= 4, max_touched
-
-
-def test_scd2_fold_sql_matches_operator(spark):
-    """The r18 SQL-text scd2 fold (one statement per batch instead of
-    ~70 py4j round-trips of lazy plan construction) must be the
-    operator-for-operator twin of scd2_apply_batch / scd2_versions —
-    including NULL-state transitions, untouched users, and equal-ts
-    event_id tiebreaks."""
-    from full_data_infrastructure_spark.operators.windows import (
-        scd2_apply_batch,
-        scd2_versions,
-    )
-    from full_data_infrastructure_spark.streaming.sinks import (
-        _scd2_apply_sql,
-        _scd2_versions_sql,
-    )
-
-    schema = "user_id bigint, event_type string, ts bigint, event_id bigint"
-    old = [(1, "a", 1, 1), (1, None, 2, 2), (2, "a", 2, 3), (4, "x", 1, 9)]
-    new = [(1, "a", 3, 4), (1, "a", 3, 5), (2, None, 4, 6), (3, None, 5, 7)]
-    standing = scd2_versions(spark.createDataFrame(old, schema))
-    batch = spark.createDataFrame(new, schema)
-    batch.createOrReplaceTempView("scd2_sql_twin_b")
-    standing.createOrReplaceTempView("scd2_sql_twin_s")
-
-    def key(rows):
-        return sorted(tuple(repr(x) for x in r) for r in rows)
-
-    got = key(
-        spark.sql(_scd2_apply_sql("scd2_sql_twin_b", "scd2_sql_twin_s")).collect()
-    )
-    want = key(scd2_apply_batch(standing, batch).collect())
-    assert got == want, (got, want)
-    first = key(
-        spark.sql(
-            _scd2_versions_sql(
-                "(SELECT user_id, event_type, ts, event_id FROM scd2_sql_twin_b)"
-            )
-        ).collect()
-    )
-    assert first == key(scd2_versions(batch).collect())
-
-
-def test_cdc_fold_sql_matches_operator(spark):
-    """The r18 SQL-text upsert fold must be the twin of latest_changes +
-    apply_cdc_batch — deletes win equal-ts ties over creates, null data
-    columns survive, extra payload columns keep their order."""
-    from full_data_infrastructure_spark.streaming.cdc import apply_cdc_batch
-    from full_data_infrastructure_spark.streaming.sinks import (
-        _bucket_wrap_sql,
-        _cdc_apply_sql,
-        _key_bucket,
-        _touched_buckets_sql,
-    )
-    from pyspark.sql import functions as F
-
-    cs = "id bigint, name string, v double, op string, ts_ms bigint"
-    snap = spark.createDataFrame(
-        [(1, "old", 1.0), (2, "keep", 2.0)], "id bigint, name string, v double"
-    )
-    ch = [
-        (1, "created", 0.5, "c", 5),
-        (1, "deleted", None, "d", 5),
-        (3, "new", 3.0, "c", 1),
-        (2, None, None, "u", 9),
-    ]
-    chdf = spark.createDataFrame(ch, cs)
-    chdf.createOrReplaceTempView("cdc_sql_twin_b")
-    snap.createOrReplaceTempView("cdc_sql_twin_s")
-    sql = _cdc_apply_sql(
-        "cdc_sql_twin_b",
-        "cdc_sql_twin_s",
-        ("id", "name", "v", "op", "ts_ms"),
-        "id",
-        "ts_ms",
-    )
-
-    def key(rows):
-        return sorted(tuple(repr(x) for x in r) for r in rows)
-
-    assert key(spark.sql(sql).collect()) == key(
-        apply_cdc_batch(snap, chdf, key="id").collect()
-    )
-    # bucket-expression twins: the touched-set SQL and the write-side wrap
-    # must produce _key_bucket's exact values.
-    a = sorted(
-        r["bucket"]
-        for r in chdf.select(_key_bucket(F.col("id"), 8).alias("bucket"))
-        .distinct()
-        .collect()
-    )
-    b = sorted(
-        r["bucket"]
-        for r in spark.sql(_touched_buckets_sql("cdc_sql_twin_b", "id", 8)).collect()
-    )
-    assert a == b
-    wrapped = spark.sql(_bucket_wrap_sql(sql, "id", 8))
-    for r in wrapped.collect():
-        assert r["bucket"] == __import__("zlib").crc32(str(r["id"]).encode()) % 8
