@@ -3,22 +3,21 @@
 Several operators cache a narrow intermediate (the 8-byte hashed-shingle
 table) because it feeds 2-3 consumers within one query. Spark only drops
 those blocks on LRU pressure or session end, so a harness that rebuilds
-the same query repeatedly (bench.py's best-of-N loop, a long notebook
-session) stacks one orphaned copy per rebuild. Operators therefore
-persist through :func:`tracked_persist`, and harnesses call
+the same query repeatedly (a benchmark's repeated passes, a long
+notebook session) stacks one orphaned copy per rebuild. Operators
+therefore persist through :func:`tracked_persist`, and harnesses call
 :func:`release_persisted` between rebuilds to hand the memory back.
 
-The registry holds STRONG references until release (optimization round
-18). The first cut used weakrefs "so the registry never pins a DataFrame
-the caller dropped" — but the only Python reference to an
-operator-internal persist IS the builder's local variable, which dies
-the moment the builder returns. Every weakref was therefore already dead
-when ``release_persisted`` ran: it released NOTHING, the JVM
-CacheManager kept the entry, and — because CacheManager substitutes any
-canonically-equal subtree — the next rebuild of the same query silently
-reused the previous run's cached data. bench.py's best-of-N was
-measuring cache-warm repeats while documenting fresh ones (caught by a
-release-count probe in r18; pinned by tests/test_operators.py::
+The registry holds STRONG references until release. The first cut used
+weakrefs "so the registry never pins a DataFrame the caller dropped" —
+but the only Python reference to an operator-internal persist IS the
+builder's local variable, which dies the moment the builder returns.
+Every weakref was therefore already dead when ``release_persisted`` ran:
+it released NOTHING, the JVM CacheManager kept the entry, and — because
+CacheManager substitutes any canonically-equal subtree — the next
+rebuild of the same query silently reused the previous run's cached
+data, so a best-of-N timing measured cache-warm repeats while
+documenting fresh ones (pinned by tests/test_operators.py::
 test_release_persisted_releases_dead_builder_locals). Pinning the
 wrapper until release is the correct lifetime: the JVM blocks are pinned
 by the persist anyway, the Python wrapper is a few hundred bytes, and

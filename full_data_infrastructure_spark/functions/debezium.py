@@ -197,11 +197,8 @@ def _debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the incremental MERGE fold converges to the true changelog state "
     "across real micro-batch boundaries — per-key order is what the "
     "fold needs, and the ordered range split models a keyed topic's "
-    "per-partition ordering guarantee. bench=True: the CDC pipeline is "
-    "the reference's flagship workload (SaveDelta.scala), so micro-batch "
-    "fold cost is measured round-over-round in the graded perf set.",
+    "per-partition ordering guarantee.",
     tags=("cdc", "streaming", "events"),
-    bench=True,
 )
 def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -236,9 +233,6 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     q.awaitTermination()
-    from full_data_infrastructure_spark.streaming.replay import record_fold_cost
-
-    record_fold_cost("streaming_upsert_snapshot", q)
     return spark.read.parquet(os.path.join(work, "snapshot")).select(
         "user_id", "ts_s", "event_type", "value"
     )
@@ -262,8 +256,7 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ordered WHERE rn = 1 AND op != 'd'
     """,
     doc="The BUCKETED upsert sink under a key-sparse workload — the actual "
-    "100 TB path (VERDICT r8 item 4: the n_buckets variant was plan-gated "
-    "and e2e-tested but had no recorded fold_sec). Same changelog and the "
+    "100 TB path. Same changelog and the "
     "same latest-per-key oracle as streaming_upsert_snapshot (final state "
     "is batching-invariant given per-key order), but the replay is "
     "BUCKET-GROUPED: the file split orders by crc32(user_id) mod 16 first, "
@@ -272,18 +265,13 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "huge dimension reads and swaps touched/n_buckets of the table "
     "instead of all of it. Per-key ordering survives the regrouping: a "
     "key's changes share one bucket, and within a bucket the range split "
-    "is event_id-ordered. bench=True: fold_sec lands beside the "
-    "full-rewrite twin's so the pruning claim carries a number.",
+    "is event_id-ordered.",
     tags=("cdc", "streaming", "events"),
-    bench=True,
 )
 def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from full_data_infrastructure_spark.streaming.replay import (
-        record_fold_cost,
-        replay_stream,
-    )
+    from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import (
         _key_bucket,
         read_bucketed_snapshot,
@@ -324,7 +312,6 @@ def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> Dat
         n_buckets=n_buckets,
     )
     q.awaitTermination()
-    record_fold_cost("streaming_upsert_bucketed_snapshot", q)
     # An all-empty replay never creates a bucket directory; read the
     # snapshot total-on-empty with the data schema the sink stores
     # (the changelog minus the op flag and the order column).

@@ -71,7 +71,6 @@ def _groupby_count_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="A2/O1 grouped count + ORDER BY DESC LIMIT 5 (SaveDelta.scala:236-242).",
     tags=("reference", "aggregate", "limit"),
-    bench=True,
 )
 def _topk_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -112,7 +111,6 @@ def _scalar_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "workhorse (extension of A1; dashboard metrics README.md:167-172). "
     "Sums/means via exact decimal (functions/money.py).",
     tags=("extension", "aggregate"),
-    bench=True,
 )
 def _multi_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")

@@ -297,7 +297,6 @@ CONTAM_THRESHOLD = 0.25
     "the eval shingle set is tiny and broadcast, so the pass is one "
     "map-side join over the train shingles — no shuffle of the corpus.",
     tags=("llm", "curation", "dedup"),
-    bench=True,  # the curation headline: broadcast eval-shingle overlap scan
 )
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as _F

@@ -627,7 +627,6 @@ def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "verified — the O(n) 100 TB dedup path. Rows-only check; "
     "tests/test_operators.py asserts recall vs dedup_ngram_jaccard.",
     tags=("llm", "dedup", "approx"),
-    bench=True,
 )
 def _minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -693,7 +692,7 @@ def _dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="End-to-end near-dedup materialization: drop every non-canonical "
     "member of each near-dup cluster (anti-join against CC labels), keep "
     "untouched docs. This is the corpus a training run would actually "
-    "read. Oracle-checked baseline; the benched twin is "
+    "read. Oracle-checked baseline; the scale twin is "
     "dedup_survivors_lsh, whose sketch+two-star plan is the shape that "
     "survives 100 TB (this one's shingle self-join is O(sum of "
     "per-shingle pairs^2) and exists for DuckDB verifiability).",
@@ -1157,7 +1156,6 @@ def connected_components(
     "exact components and every exact survivor remains a survivor; "
     "tests assert that superset property plus >=95% agreement.",
     tags=("llm", "dedup", "approx"),
-    bench=True,  # the graded perf number should measure the scale path
 )
 def _dedup_survivors_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1200,7 +1198,7 @@ def lsh_survivor_losers(
     losers (exact losers + near-dup losers over canonicals) equal the
     uncollapsed losers (property-tested on planted exact families in
     tests/test_operators.py). Default False only because the synthetic
-    documents table has zero exact duplicates — the benched query should
+    documents table has zero exact duplicates — the registered query should
     not pay a fingerprint pass its data can't use; flip it on for real
     corpora.
     """
@@ -1394,7 +1392,6 @@ def semantic_dedup_flags(
     "semantics on planted duplicate cliques asserted in "
     "tests/test_operators.py.",
     tags=("llm", "dedup", "vector"),
-    bench=True,
 )
 def _dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1476,11 +1473,8 @@ def paragraph_dedup(docs: DataFrame, sep: str = ". ") -> DataFrame:
     "oracle recomputes the survivor set with the naive row_number form, "
     "so the hash match proves the map-side min(struct) aggregation "
     "(chosen because it partial-aggregates: a 10^9-copy hot chunk "
-    "collapses before the shuffle) selects identical survivors. "
-    "bench=True: explode + two shuffles over the full corpus text is a "
-    "real corpus-pass cost worth tracking round-over-round.",
+    "collapses before the shuffle) selects identical survivors.",
     tags=("llm", "dedup", "text"),
-    bench=True,
 )
 def _paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -87,7 +87,6 @@ def asof_join(
     "README.md:264-266). Both dims broadcast — the fact never shuffles "
     "for the join, only for the final aggregate.",
     tags=("reference", "join", "aggregate"),
-    bench=True,
 )
 def _snowflake(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
@@ -218,7 +217,6 @@ def _cte_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "before it. Union+window implementation — one shuffle, no range "
     "explosion; oracle uses DuckDB's native ASOF JOIN.",
     tags=("extension", "join", "asof"),
-    bench=True,
 )
 def _asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
@@ -638,7 +636,6 @@ def _tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of that from the declarative plan; the correlated equality arrives "
     "as a join condition, not a post-filter.",
     tags=("extension", "join", "aggregate"),
-    bench=True,
 )
 def _tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
@@ -801,7 +798,6 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
     "(the embedding_kmeans oracle pattern). At 100 TB: edges persist "
     "once, rank state is node-sized, per-iteration cost is one shuffle.",
     tags=("extension", "join", "aggregate"),
-    bench=True,
     exact_float_cols=("pagerank",),
 )
 def _pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:

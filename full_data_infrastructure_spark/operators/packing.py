@@ -619,7 +619,6 @@ def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline's with >=95% agreement and that sampling/packing "
     "decisions coincide on the shared survivors.",
     tags=("llm", "dedup", "curation", "packing", "approx"),
-    bench=True,  # the full training-corpus pipeline in its 100 TB shape
 )
 def _corpus_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.operators.dedup import (
@@ -871,7 +870,6 @@ def _corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus build runs; the exact chain above is its DuckDB-verifiable "
     "baseline, and the two are held to >=95% packed-doc agreement.",
     tags=("llm", "dedup", "curation", "packing", "text", "approx"),
-    bench=True,  # the full production pipeline is the headline workload
 )
 def _corpus_pipeline_full_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.operators.dedup import (

@@ -142,7 +142,6 @@ def knn_bruteforce(
     doc="Exact cosine top-5 neighbors for the query set (vec_id < 20): "
     "broadcast queries, one corpus pass, windowed rank on rounded score.",
     tags=("llm", "similarity", "vector"),
-    bench=True,
 )
 def _knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -989,15 +988,11 @@ def ivfpq_shortlist(emb: DataFrame, rerank: int = PQ_RERANK) -> DataFrame:
     "100 TB this is the layout that works: cells bound the scan, codes "
     "bound the bytes, and only the final 80 touch a float vector. "
     "Rows-only; per-SF recall floors in tests/test_operators.py. "
-    "bench=True (round 7): the ANN group tracked only the brute "
-    "baseline — the sketch path IS the 100 TB plan, so its cost is the "
-    "number that matters round-over-round. The benched wall includes "
-    "the one-time codebook/cell training, which DOMINATES at bench SF "
-    "(10k vectors; brute has no build phase, so the two entries are not "
-    "head-to-head) — at corpus scale the build amortizes across every "
-    "query batch while brute's per-query scan grows linearly.",
+    "The query includes the one-time codebook/cell training, which "
+    "dominates at small SF (brute has no build phase) — at corpus scale "
+    "the build amortizes across every query batch while brute's "
+    "per-query scan grows linearly.",
     tags=("llm", "similarity", "vector", "approx"),
-    bench=True,
 )
 def _knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(

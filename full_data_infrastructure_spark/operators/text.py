@@ -58,7 +58,6 @@ def stopword_hits(toks: Column, words: list[str]) -> Column:
     doc="Text statistics: char/word/BPE-ish token counts + punctuation and "
     "whitespace ratios — the standard quality-signal pass over a corpus.",
     tags=("llm", "text"),
-    bench=True,
 )
 def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -673,7 +672,6 @@ def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     "making the whole scorer oracle-checkable; the engine surface is "
     "unchanged by swapping in a real model's weights.",
     tags=("llm", "text", "curation"),
-    bench=True,
 )
 def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scorer is now map-only (zero exchanges), so a single-row-group

@@ -104,7 +104,6 @@ def _dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Exact decimal frame-sum => deterministic regardless of the engine's "
     "window aggregation tree (functions/money.py rationale).",
     tags=("extension", "window"),
-    bench=True,
 )
 def _moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
@@ -1123,20 +1122,13 @@ def _window_range_hour_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "consumer of a CDC topic, end-to-end. The ts-ordered range split "
     "guarantees the at-or-after batch contract (equal timestamps never "
     "split across batches); the random-cut-point property test is the "
-    "same contract at the operator level. bench=True: the heaviest new "
-    "streaming path — wall time plus the fold_sec split (sum of addBatch "
-    "durations), like the upsert sink, so the fold cost is tracked "
-    "separately from the ~fixed replay harness overhead.",
+    "same contract at the operator level.",
     tags=("extension", "window", "streaming", "events", "cdc"),
-    bench=True,
 )
 def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from full_data_infrastructure_spark.streaming.replay import (
-        record_fold_cost,
-        replay_stream,
-    )
+    from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import start_scd2_sink
 
     events = load_table(spark, sf_dir, "events").select(
@@ -1150,7 +1142,6 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     q.awaitTermination()
-    record_fold_cost("streaming_scd2_snapshot", q)
     return scd2_finalize(spark.read.parquet(os.path.join(work, "versions")))
 
 
@@ -1158,8 +1149,7 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_scd2_bucketed_snapshot",
     _SCD2_ORACLE,
     doc="The BUCKETED SCD2 sink under a key-sparse workload — the actual "
-    "100 TB path (VERDICT r8 item 4: the n_buckets variant was plan-gated "
-    "and e2e-tested but had no recorded fold_sec). Same change stream and "
+    "100 TB path. Same change stream and "
     "the same full-history-rebuild oracle as streaming_scd2_snapshot "
     "(history is batching-invariant given per-user at-or-after order), "
     "but the replay is BUCKET-GROUPED: the file split orders by "
@@ -1168,19 +1158,13 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "AND swaps only those directories. The per-user at-or-after contract "
     "survives: a user's changes share one bucket and are ts-ordered "
     "within it, and the range split keeps equal (bucket, ts) pairs in "
-    "one file so equal-ts ties never straddle a batch. bench=True: "
-    "fold_sec lands beside the full-rewrite twin's so the pruning claim "
-    "carries a number.",
+    "one file so equal-ts ties never straddle a batch.",
     tags=("extension", "window", "streaming", "events", "cdc"),
-    bench=True,
 )
 def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from full_data_infrastructure_spark.streaming.replay import (
-        record_fold_cost,
-        replay_stream,
-    )
+    from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import (
         _key_bucket,
         read_bucketed_snapshot,
@@ -1220,7 +1204,6 @@ def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataF
         n_buckets=n_buckets,
     )
     q.awaitTermination()
-    record_fold_cost("streaming_scd2_bucketed_snapshot", q)
     # An all-empty replay never creates a bucket directory; read the
     # snapshot total-on-empty with the version schema the fold writes.
     ver_schema = scd2_versions(events.limit(0)).schema

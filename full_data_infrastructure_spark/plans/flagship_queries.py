@@ -21,7 +21,6 @@ from full_data_infrastructure_spark.queries import register
         "J2 left join, prime/total projection (F4-F7, P11)."
     ),
     tags=("reference", "join", "aggregate"),
-    bench=True,
 )
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagship_benefits(spark, sf_dir)

@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,10 +98,15 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     try:
         # Private PySpark surface (no public stats accessor exists); a
         # minor-version drift here must degrade to the scale-safe branch
-        # — identity, no exchange — never break every caller at once
-        # (r18 hardening; pinned by test_fan_out_survives_stats_probe_drift).
+        # — identity, no exchange — never break every caller at once,
+        # and must say so (pinned by test_fan_out_survives_stats_probe_drift).
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except (AttributeError, Py4JError) as e:
+        warnings.warn(
+            f"fan_out: plan size probe failed ({e!r}); input left unfanned",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return df
     if size >= target * FAN_OUT_BYTES_PER_CORE:
         return df

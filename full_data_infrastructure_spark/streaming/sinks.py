@@ -142,15 +142,6 @@ def _schema_plus_bucket(schema) -> T.StructType:
     )
 
 
-def _schema_ddl(schema: T.StructType) -> str:
-    """Spark-SQL column list for a declared-schema temp view (the CREATE
-    TEMPORARY VIEW twin of ``spark.read.schema(...)`` — explicit schema,
-    no parquet-footer inference)."""
-    return ", ".join(
-        f"{ident(f.name)} {f.dataType.simpleString()}" for f in schema.fields
-    )
-
-
 def _standing_view_sql(view: str, schema: T.StructType, path: str, fmt: str) -> str:
     """CREATE OR REPLACE TEMPORARY VIEW over the standing snapshot with the
     DECLARED schema.  Re-issued every batch so the file listing is fresh
@@ -159,9 +150,10 @@ def _standing_view_sql(view: str, schema: T.StructType, path: str, fmt: str) -> 
     types identical to the types fixed at sink start: inference could
     fork them mid-stream if stored files ever drift, and a mid-stream
     upstream type change then fails loudly in the fold's UNION instead
-    of silently re-typing old rows."""
+    of silently re-typing old rows.  ``toDDL`` quotes every field name,
+    nested struct fields included."""
     return (
-        f"CREATE OR REPLACE TEMPORARY VIEW {view} ({_schema_ddl(schema)}) "
+        f"CREATE OR REPLACE TEMPORARY VIEW {view} ({schema.toDDL()}) "
         f"USING {fmt} OPTIONS (path {literal(path)})"
     )
 

@@ -31,7 +31,7 @@ cd "$(dirname "$0")"
 # file list must never silently shrink coverage as the suite grows.
 listed="test_plans test_operators test_oracle_parity test_oracle_check \
 test_properties \
-test_registry_order test_sources test_curation test_unicode_semantics \
+test_registry test_sources test_curation test_unicode_semantics \
 test_time_semantics test_totality test_streaming test_null_semantics \
 test_extreme_semantics test_tz_semantics test_layout_invariance"
 for f in tests/test_*.py; do
@@ -54,7 +54,7 @@ echo "half B -> $LOG_B"
 
 SPARK_GRAFT_CPUS="$SPARK_GRAFT_SUITE_CPUS" python -m pytest \
     tests/test_plans.py tests/test_operators.py tests/test_oracle_parity.py \
-    tests/test_properties.py tests/test_registry_order.py tests/test_sources.py \
+    tests/test_properties.py tests/test_registry.py tests/test_sources.py \
     tests/test_curation.py tests/test_unicode_semantics.py \
     tests/test_time_semantics.py tests/test_totality.py \
     -q -p no:cacheprovider > "$LOG_A" 2>&1 &

@@ -276,7 +276,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
 
     The per-round bench folds an entire sf0.1 change stream from empty,
     so standing ~= batch and the bucketed twins' bucket bookkeeping is
-    pure overhead (documented in bench.py).  The operator's actual 100 TB
+    pure overhead.  The operator's actual 100 TB
     claim — per-batch IO = touched/n_buckets of the TABLE
     (streaming/sinks.py) — only bites when the standing table dwarfs the
     batch, the nightly-CDC shape.  Build a K-copy standing table (K=400
@@ -298,7 +298,6 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
     from full_data_infrastructure_spark.operators.windows import scd2_versions
     from full_data_infrastructure_spark.sources.parquet import load_table
     from full_data_infrastructure_spark.streaming.replay import (
-        LAST_FOLD_SEC,
         record_fold_cost,
         replay_stream,
     )
@@ -342,8 +341,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
         )
         q = start_fn(stream, standing_path, ckpt)
         q.awaitTermination()
-        record_fold_cost(f"xover_{tag}", q)
-        out.setdefault("fold_sec", {})[tag] = LAST_FOLD_SEC[f"xover_{tag}"]
+        out.setdefault("fold_sec", {})[tag] = record_fold_cost(f"xover_{tag}", q)
         out.setdefault("wall_sec", {})[tag] = round(time.monotonic() - t0, 1)
         shutil.rmtree(work, ignore_errors=True)
         print(

@@ -2006,8 +2006,8 @@ def test_release_persisted_releases_dead_builder_locals(spark, sf_dir):
     was a builder local (dead by the time the harness calls it). The
     weakref-based first cut released NOTHING in exactly that case — the
     JVM CacheManager kept every entry and canonically-equal rebuilds
-    silently substituted the previous run's cached data, so bench.py's
-    best-of-N measured cache-warm repeats (caught round 18). Pin both
+    silently substituted the previous run's cached data, so a best-of-N
+    timing measured cache-warm repeats. Pin both
     halves: a nonzero release count, and an empty JVM CacheManager
     afterwards (no leaked entry left to substitute into the next build)."""
     from full_data_infrastructure_spark.cache import (

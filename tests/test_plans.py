@@ -212,26 +212,39 @@ def test_fan_out_scale_adaptive(spark, sf_dir):
 def test_fan_out_survives_stats_probe_drift(spark, sf_dir):
     """The size probe rides a private PySpark surface
     (``_jdf.queryExecution().optimizedPlan().stats()``); if a Spark minor
-    bump breaks it, fan_out must degrade to the scale-safe IDENTITY —
-    never raise into every dedup/ANN caller at once (r18 hardening)."""
+    bump breaks it, fan_out must degrade to the scale-safe IDENTITY with a
+    warning — never raise into every dedup/ANN caller at once.  Any other
+    error from the probe is a real fault and propagates."""
+    from py4j.protocol import Py4JError
+
     from full_data_infrastructure_spark.sources.parquet import fan_out, load_table
 
     real = load_table(spark, sf_dir, "embeddings").select("vec_id")
 
     class _Drifted:
-        """Quacks like a DataFrame whose private plan accessor is gone."""
+        """Quacks like a DataFrame whose private plan accessor fails."""
 
         sparkSession = spark
 
+        def __init__(self, error):
+            self.error = error
+
         @property
         def _jdf(self):
-            raise AttributeError("queryExecution surface changed")
+            raise self.error
 
         def repartition(self, n):  # pragma: no cover - must not be reached
             raise AssertionError("drifted probe must not trigger an exchange")
 
-    drifted = _Drifted()
-    assert fan_out(drifted) is drifted
+    for error in (
+        AttributeError("queryExecution surface changed"),
+        Py4JError("Method stats([]) does not exist"),
+    ):
+        drifted = _Drifted(error)
+        with pytest.warns(RuntimeWarning, match="size probe failed"):
+            assert fan_out(drifted) is drifted
+    with pytest.raises(ValueError, match="not drift"):
+        fan_out(_Drifted(ValueError("not drift")))
     # and the healthy path still fans the small scan out
     assert "RoundRobinPartitioning" in plan_of(fan_out(real))
 

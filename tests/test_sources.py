@@ -255,6 +255,11 @@ def test_jdbc_roundtrip_against_embedded_derby(spark, tmp_path):
 
     url = f"jdbc:derby:{tmp_path}/contractdb;create=true"
     driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+    # Derby writes derby.log into the working directory when it boots
+    # unless this property names another file.
+    spark.sparkContext._jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", str(tmp_path / "derby.log")
+    )
 
     src = spark.range(0, 1000).selectExpr("id", "CAST(id % 7 AS DOUBLE) AS v")
     jdbc_append(src, url, "people", user="app", password="app", driver=driver)

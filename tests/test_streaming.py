@@ -1603,12 +1603,14 @@ def test_bucketed_snapshot_read_prunes_partitions(spark, tmp_path):
 
 def test_bucketed_upsert_sink_quotes_identifiers_and_paths(spark, tmp_path):
     """Column names and paths are spliced into the fold's SQL text: a key
-    column holding a backtick and braces, folded into a snapshot whose
-    path holds a quote, must fold exactly like any other key."""
+    column holding a backtick and braces, and a struct value column whose
+    nested field name holds a backtick and a space, folded into a
+    snapshot whose path holds a quote, must fold exactly like any other
+    key."""
     from full_data_infrastructure_spark.sqltext import ident
     from full_data_infrastructure_spark.streaming.sinks import start_upsert_sink
 
-    key = "k`{0}"
+    key, nested = "k`{0}", "a b`"
     snap = str(tmp_path / "it's snapshot")
     plans = _run_two_batches(
         spark,
@@ -1617,13 +1619,17 @@ def test_bucketed_upsert_sink_quotes_identifiers_and_paths(spark, tmp_path):
             stream, snap, str(tmp_path / "ckpt"), key=key,
             available_now=True, n_buckets=4,
         ),
-        f"op string, ts_ms bigint, {ident(key)} bigint, value double",
-        [("c", k, k, float(k)) for k in range(1, 9)],
-        [("u", 100, 1, -1.0), ("d", 101, 2, 0.0), ("c", 102, 9, 9.0)],
+        f"op string, ts_ms bigint, {ident(key)} bigint, value double, "
+        f"s struct<{ident(nested)}: int>",
+        [("c", k, k, float(k), (k,)) for k in range(1, 9)],
+        [("u", 100, 1, -1.0, (-1,)), ("d", 101, 2, 0.0, (0,)), ("c", 102, 9, 9.0, (9,))],
     )
     assert plans
-    got = {r[key]: r["value"] for r in spark.read.parquet(snap).collect()}
-    assert got == {1: -1.0, **{k: float(k) for k in range(3, 10)}}
+    got = {
+        r[key]: (r["value"], r["s"][nested])
+        for r in spark.read.parquet(snap).collect()
+    }
+    assert got == {1: (-1.0, -1), **{k: (float(k), k) for k in range(3, 10)}}
 
 
 def test_bucket_grouped_replay_batches_are_key_sparse(spark, sf_dir, tmp_path):
