@@ -27,7 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from full_data_infrastructure_spark.cache import tracked_persist
-from full_data_infrastructure_spark.functions.vector import cosine_sql, dot, l2_norm
+from full_data_infrastructure_spark.functions.vector import cosine_sql, rounded_cosine
+from full_data_infrastructure_spark.operators.similarity import (
+    load_embeddings,
+    nearest_cell,
+    stride_centroids,
+)
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import fan_out, load_table
 
@@ -58,9 +63,9 @@ def word_shingles(toks: Column, n: int = NGRAM) -> Column:
     an EMPTY shingle array instead of a negative slice length (a runtime
     error): callers that explode need no guarding pre-filter, which
     matters because such a filter re-runs the whole tokenizer below any
-    fan_out exchange when the optimizer pushes it down (r17 measurement:
-    the pushed filter serialized tokenization back onto the single scan
-    task the exchange existed to escape).
+    fan_out exchange when the optimizer pushes it down (measured: the
+    pushed filter serialized tokenization back onto the single scan task
+    the exchange existed to escape).
     """
     gram_count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     parts = [F.slice(toks, j + 1, gram_count) for j in range(n)]
@@ -135,32 +140,50 @@ def exact_jaccard_pairs(
         )
         sh = tracked_persist(sh.join(F.broadcast(hot), "h", "left_anti"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    return _verified_jaccard(
+        _self_intersections(sh), sizes, "doc_a", "doc_b", threshold
+    )
+
+
+def _self_intersections(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter) for doc_a < doc_b: shared-shingle counts of
+    every pair, by the hashed-shingle self-join (exact baselines only —
+    O(df^2) work per shingle)."""
     a = sh.alias("a")
     b = sh.alias("b")
-    inter = (
+    return (
         a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    # Raw double: identical integer operands + one division => bit-identical
-    # across engines; ROUND would reintroduce repr-tie divergence.
+
+
+def _with_sizes(inter: DataFrame, sizes: DataFrame, a: str, b: str) -> DataFrame:
+    """``inter`` (a, b, inter) plus each side's shingle count ``sz_a`` /
+    ``sz_b`` from ``sizes`` (doc_id, sz)."""
+    return inter.join(
+        sizes.select(F.col("doc_id").alias(a), F.col("sz").alias("sz_a")), a
+    ).join(sizes.select(F.col("doc_id").alias(b), F.col("sz").alias("sz_b")), b)
+
+
+def _verified_jaccard(
+    inter: DataFrame, sizes: DataFrame, a: str, b: str, threshold: float
+) -> DataFrame:
+    """(a, b, jaccard) for the pairs of ``inter`` (a, b, inter — shared
+    shingle counts) whose exact Jaccard reaches ``threshold``. The one
+    verification tail of the exact baseline, the MinHash candidates and
+    both incremental queries.
+
+    Raw double: identical integer operands + one division => bit-identical
+    across engines; ROUND would reintroduce repr-tie divergence."""
     jac = F.col("inter").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("inter")
     ).cast("double")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        _with_sizes(inter, sizes, a, b)
+        .select(a, b, jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, sig array<bigint>): sig[i] = min over shingles of
-    xxhash64(seed_i, shingle). One aggregation — no per-permutation passes."""
-    return _signatures_from_shingles(exploded_shingles(docs), k)
 
 
 def hashed_shingles(docs: DataFrame) -> DataFrame:
@@ -181,31 +204,18 @@ def hashed_shingles(docs: DataFrame) -> DataFrame:
     return exploded_shingles(docs).select("doc_id", F.xxhash64("sh").alias("h"))
 
 
-def _signatures_from_shingles(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    hashed = sh.select("doc_id", F.xxhash64("sh").alias("h"))
-    return _signatures_from_hashed(hashed, k)
-
-
-def _signatures_from_hashed(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"_h{i}") for i in range(k)
-    ]
-    sig = hashed.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"_h{i}") for i in range(k)]).alias("sig")
-    )
-
-
 def _sig_sizes_from_hashed(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, sig, sz): the minhash signature AND the per-doc shingle
-    count from ONE aggregation pass over the hashed-shingle table.
+    """(doc_id, sig, sz): the minhash signature — sig[i] = min over the
+    doc's shingles of xxhash64(seed_i, h), one aggregation with no
+    per-permutation passes — AND the per-doc shingle count, from ONE
+    aggregation pass over the hashed-shingle table.
 
     The signature aggregate already groups by doc_id and touches every
     (doc_id, h) row; folding ``count(1)`` into the same HashAggregate
     makes the separate sizes groupBy — a second full pass + exchange over
-    the shingle table — free (optimization round 17; sz is exact because
-    hashed_shingles is distinct per doc). Values are identical to
-    :func:`_signatures_from_hashed` + a standalone count."""
+    the shingle table — free (sz is exact because hashed_shingles is
+    distinct per doc). A caller that reads only ``sig`` pays nothing for
+    ``sz``: column pruning drops the unused count."""
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"_h{i}") for i in range(k)
     ]
@@ -278,11 +288,10 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -
     # One aggregation pass yields signatures AND sizes; persisting it means
     # the band self-join's two sides and both size lookups read a tiny
     # (doc_id, sig, sz) cache instead of re-running the 32-hash min
-    # aggregate (the r16 plan computed that aggregate twice and the sizes
-    # aggregate twice — four passes over the shingle table for one).
+    # aggregate (unpersisted, the plan computed that aggregate twice and
+    # the sizes aggregate twice — four passes over the shingle table).
     sig_sz = tracked_persist(_sig_sizes_from_hashed(sh))
     cand = lsh_candidate_pairs(sig_sz)
-    sizes = sig_sz.select("doc_id", "sz")
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("h").alias("h_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("h").alias("h_b"))
     inter = (
@@ -291,14 +300,8 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD) -
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return _verified_jaccard(
+        inter, sig_sz.select("doc_id", "sz"), "doc_a", "doc_b", threshold
     )
 
 
@@ -532,21 +535,7 @@ def _dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_doc_id", "dup_of")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("sz_n") + F.col("sz_c") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("new_doc_id"), F.col("sz").alias("sz_n")),
-            "new_doc_id",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("dup_of"), F.col("sz").alias("sz_c")),
-            "dup_of",
-        )
-        .select("new_doc_id", "dup_of", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _verified_jaccard(inter, sizes, "new_doc_id", "dup_of", JACCARD_THRESHOLD)
 
 
 @register(
@@ -569,7 +558,7 @@ def _dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = tracked_persist(hashed_shingles(docs))
     inc = F.col("doc_id") % INCREMENT_MOD == 0
-    banded = banded_signatures(_signatures_from_hashed(sh))
+    banded = banded_signatures(_sig_sizes_from_hashed(sh))
     b_new = banded.filter(inc).select(
         F.col("doc_id").alias("new_doc_id"), "band_idx", "band_hash"
     )
@@ -590,21 +579,7 @@ def _dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_doc_id", "dup_of")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("sz_n") + F.col("sz_c") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("new_doc_id"), F.col("sz").alias("sz_n")),
-            "new_doc_id",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("dup_of"), F.col("sz").alias("sz_c")),
-            "dup_of",
-        )
-        .select("new_doc_id", "dup_of", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _verified_jaccard(inter, sizes, "new_doc_id", "dup_of", JACCARD_THRESHOLD)
 
 
 @register(
@@ -727,21 +702,25 @@ def _dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "vector"),
 )
 def _embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # per-row norms: dot/(n_a*n_b) uses the same operands as the oracle's
-    # per-pair sqrt products, so values stay bit-identical at 3x less work
-    withn = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
+    pairs = _all_pair_cosines(load_embeddings(spark, sf_dir))
+    return pairs.filter(F.col("cos") >= 0.99)
+
+
+def _all_pair_cosines(withn: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cos) for every pair vec_a < vec_b of an (vec_id, e,
+    nrm) table — the quadratic kernel of the exact near-dup baseline and
+    the exact histogram, for test SF only. Per-row norms: dot/(n_a*n_b)
+    uses the same operands as the oracle's per-pair sqrt products, so
+    values stay bit-identical at 3x less work."""
     a = withn.select(
         F.col("vec_id").alias("vec_a"), F.col("e").alias("e_a"), F.col("nrm").alias("n_a")
     )
     b = withn.select(
         F.col("vec_id").alias("vec_b"), F.col("e").alias("e_b"), F.col("nrm").alias("n_b")
     )
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")), 4)
-    return pairs.select("vec_a", "vec_b", cos.alias("cos")).filter(F.col("cos") >= 0.99)
+    return a.join(b, F.col("vec_a") < F.col("vec_b")).select(
+        "vec_a", "vec_b", rounded_cosine("e_a", "n_a", "e_b", "n_b").alias("cos")
+    )
 
 
 @register(
@@ -954,20 +933,7 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = tracked_persist(hashed_shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    paired = inter.join(sa, "doc_a").join(sb, "doc_b")
+    paired = _with_sizes(_self_intersections(sh), sizes, "doc_a", "doc_b")
     fwd = paired.select(
         F.col("doc_a").alias("contained_id"),
         F.col("doc_b").alias("container_id"),
@@ -1224,34 +1190,6 @@ SEM_CELLS = 16  # embedding-space clusters (k-means|| offline at 100 TB)
 SEM_THRESHOLD = 0.95  # within-cluster cosine above which docs are duplicates
 
 
-def semantic_centroids(emb: DataFrame, n_cells: int = SEM_CELLS) -> DataFrame:
-    """Deterministic coarse clustering seeds: every len(corpus)/n_cells-th
-    vector, same stride sampler as the IVF quantizer
-    (similarity.ivf_candidates) — at scale, refine these seeds with the
-    in-repo distributed Lloyd's (similarity.kmeans_refine, the
-    embedding_kmeans operator); stride alone keeps CI and the DuckDB
-    oracle reproducible. One broadcast
-    1-row aggregate derives the stride, so callers stay a single lazy
-    plan."""
-    corpus_n = emb.agg(
-        F.greatest(
-            F.floor(F.count(F.lit(1)) / n_cells), F.lit(1).cast("bigint")
-        ).alias("stride")
-    )
-    return (
-        emb.crossJoin(F.broadcast(corpus_n))
-        .filter(
-            (F.col("vec_id") % F.col("stride") == 0)
-            & (F.col("vec_id") / F.col("stride") < n_cells)
-        )
-        .select(
-            (F.col("vec_id") / F.col("stride")).cast("int").alias("cell_id"),
-            F.col("e").alias("c_e"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-
-
 def semantic_dedup_flags(
     emb: DataFrame, threshold: float = SEM_THRESHOLD, n_cells: int = SEM_CELLS
 ) -> DataFrame:
@@ -1280,23 +1218,19 @@ def semantic_dedup_flags(
 
     Returns (vec_id, cell_id, cos_centroid, kept) for every corpus row.
     """
-    from full_data_infrastructure_spark.operators.similarity import (
-        nearest_cell,
-    )
-
     # MAP-ONLY assignment: similarity.nearest_cell — the one definition
     # of the packed-broadcast rounded-cosine kernel (zero assignment
     # shuffle; the window form exchanged |cells| rows per vector).
-    cents = semantic_centroids(emb, n_cells)
+    cents = stride_centroids(emb, n_cells)
     assigned = nearest_cell(
         emb, cents, carry=("e", "nrm"), cell_alias="cell_id", cos_alias="cos_c"
     )
     w_keep = Window.partitionBy("cell_id").orderBy(F.col("cos_c").asc(), "vec_id")
-    # Persisted (optimization round 17): the ranked assignment feeds BOTH
-    # self-join sides and the final kept-flag join, and without the
-    # persist each consumer re-ran centroid scoring + the ranking window
-    # — the r16 plan held four Window evaluations and 18 scans of the
-    # embedding table for one logical assignment pass. This is the
+    # Persisted: the ranked assignment feeds BOTH self-join sides and the
+    # final kept-flag join, and without the persist each consumer re-ran
+    # centroid scoring + the ranking window — the unpersisted plan held
+    # four Window evaluations and 18 scans of the embedding table for one
+    # logical assignment pass. This is the
     # cluster-assignment table SemDeDup materializes between its two
     # phases; cache budget is the embedding table itself.
     ranked = tracked_persist(
@@ -1318,13 +1252,7 @@ def semantic_dedup_flags(
     dropped = (
         a.join(b, "cell_id")
         .filter(F.col("kr_a") < F.col("kr_b"))
-        .filter(
-            F.round(
-                dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")),
-                4,
-            )
-            >= threshold
-        )
+        .filter(rounded_cosine("e_a", "n_a", "e_b", "n_b") >= threshold)
         .select(F.col("vec_b").alias("_d"))
         .distinct()
     )
@@ -1394,11 +1322,7 @@ def semantic_dedup_flags(
     tags=("llm", "dedup", "vector"),
 )
 def _dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
-    return semantic_dedup_flags(emb)
+    return semantic_dedup_flags(load_embeddings(spark, sf_dir))
 
 
 def paragraph_dedup(docs: DataFrame, sep: str = ". ") -> DataFrame:
@@ -1515,19 +1439,7 @@ def _paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_float_cols=("bucket_low",),
 )
 def _cosine_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    withn = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
-    return cosine_histogram_exact(withn)
-
-
-def _pair_cos() -> Column:
-    """The one rounded pair-cosine kernel both histogram variants score
-    with (built lazily — Columns need a live SparkContext)."""
-    return F.round(
-        dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")), 4
-    )
+    return cosine_histogram_exact(load_embeddings(spark, sf_dir))
 
 
 def _bucketed_cosine_histogram(scored: DataFrame, floor: float) -> DataFrame:
@@ -1550,27 +1462,14 @@ def _bucketed_cosine_histogram(scored: DataFrame, floor: float) -> DataFrame:
 def cosine_histogram_exact(withn: DataFrame, floor: float = 0.5) -> DataFrame:
     """All-pairs pair-cosine histogram over a (vec_id, e, nrm) table — the
     DuckDB-verifiable exact baseline; quadratic, for test SF only."""
-    a = withn.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("e_a"),
-        F.col("nrm").alias("n_a"),
-    )
-    b = withn.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("e_b"),
-        F.col("nrm").alias("n_b"),
-    )
-    scored = a.join(b, F.col("vec_a") < F.col("vec_b")).select(
-        _pair_cos().alias("cos")
-    )
-    return _bucketed_cosine_histogram(scored, floor)
+    return _bucketed_cosine_histogram(_all_pair_cosines(withn), floor)
 
 
 def cosine_histogram_over_candidates(
     withn: DataFrame, n_cells: int = SEM_CELLS, floor: float = 0.5
 ) -> DataFrame:
-    """Candidate-pair twin of ``cosine_histogram_exact`` (VERDICT r6 item
-    3): the SAME rounded-cosine kernel and 0.05 buckets, computed only
+    """Candidate-pair twin of ``cosine_histogram_exact``: the SAME
+    rounded-cosine kernel and 0.05 buckets, computed only
     over the SemDeDup within-cell pairs — each vector shuffles once on
     its coarse cell, pairs form inside cells (sum(|cell|^2), never
     |corpus|^2), and the histogram adds one map-side-combined aggregate.
@@ -1581,11 +1480,7 @@ def cosine_histogram_over_candidates(
     in a cell by construction; the sub-threshold tail under-counts
     cross-cell topical pairs — per-bucket subset + planted high-bucket
     recall pinned in tests/test_operators.py."""
-    from full_data_infrastructure_spark.operators.similarity import (
-        nearest_cell,
-    )
-
-    cents = semantic_centroids(withn, n_cells)
+    cents = stride_centroids(withn, n_cells)
     assigned = nearest_cell(
         withn, cents, carry=("e", "nrm"), cell_alias="cell_id", cos_alias="cos_c"
     )
@@ -1604,7 +1499,7 @@ def cosine_histogram_over_candidates(
     scored = (
         a.join(b, "cell_id")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(_pair_cos().alias("cos"))
+        .select(rounded_cosine("e_a", "n_a", "e_b", "n_b").alias("cos"))
     )
     return _bucketed_cosine_histogram(scored, floor)
 

@@ -16,6 +16,12 @@
   with corpus size).
 * ``vector_norms`` — norm/normalize surface (JVM higher-order functions).
 
+Every approximate index here (LSH, IVF, PQ, IVF x PQ) only generates
+``(query_id, neighbor_id)`` candidates; ``_exact_rerank`` is the one exact
+stage they all feed, scoring with :func:`rounded_cosine` and ranking with
+the same ``_top_k_by_cos`` tail as ``knn_bruteforce``, so every index is
+measured against identical ranking semantics.
+
 Determinism: hyperplanes come from a fixed LCG (no RNG), so signatures are
 stable across runs and engines.
 """
@@ -30,6 +36,7 @@ from full_data_infrastructure_spark.functions.vector import (
     cosine_sql,
     dot,
     l2_norm,
+    rounded_cosine,
 )
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import fan_out, load_table
@@ -38,6 +45,88 @@ N_QUERIES = 20  # query set: vec_id < 20
 TOP_K = 5
 LSH_PLANES = 32
 DIM = 64
+
+
+def load_embeddings(spark: SparkSession, sf_dir: str, *carry: str) -> DataFrame:
+    """(vec_id, *carry, e, nrm): the embeddings table with the vector cast
+    to array<double> (the oracle's DOUBLE[] cast, so folds are
+    bit-deterministic) and its L2 norm computed once per row. Builders
+    that cannot score a zero vector add ``.filter(F.col("nrm") > 0)``."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", *carry, F.col("embedding").cast("array<double>").alias("e")
+    )
+    return emb.select("vec_id", *carry, "e", l2_norm(F.col("e")).alias("nrm"))
+
+
+def _top_k_by_cos(
+    scored: DataFrame, k: int, part: str = "query_id", tie: str = "neighbor_id"
+) -> DataFrame:
+    """The rows of ``scored`` ranked per ``part`` by ``cos`` desc, then
+    ``tie`` asc, keeping the first ``k`` with their rank as ``rnk``. The
+    scores are rounded (:func:`rounded_cosine`) and the tiebreak is a
+    unique id, so the ranking is deterministic across engines and
+    partitionings."""
+    w = Window.partitionBy(part).orderBy(F.col("cos").desc(), tie)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _exact_rerank(
+    emb: DataFrame, shortlist: DataFrame, k: int = TOP_K
+) -> DataFrame:
+    """Exact-cosine rerank of ANN ``(query_id, neighbor_id)`` candidates to
+    top-``k`` — the one final stage of knn_lsh, knn_ivf, knn_pq,
+    knn_ivfpq and the shortlist label vote (same rounded score and
+    ranking tail as knn_bruteforce, so recall is measured against
+    identical ranking semantics). ``emb`` must carry (vec_id, e, nrm);
+    only the candidates' vectors are scored."""
+    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("e_q"),
+        F.col("nrm").alias("n_q"),
+    )
+    cv = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("e").alias("e_c"),
+        F.col("nrm").alias("n_c"),
+    )
+    scored = (
+        shortlist.join(F.broadcast(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            rounded_cosine("e_q", "n_q", "e_c", "n_c").alias("cos"),
+        )
+    )
+    return _top_k_by_cos(scored, k)
+
+
+def stride_centroids(emb: DataFrame, n_cells: int) -> DataFrame:
+    """(cell_id, c_e, c_nrm): deterministic coarse-quantizer seeds — every
+    len(corpus)/n_cells-th vector of an (vec_id, e, nrm) table. The one
+    seed sampler of the IVF quantizer, k-means, SemDeDup and the
+    candidate histogram. At scale the seeds are refined with the
+    distributed Lloyd's (kmeans_refine, the embedding_kmeans operator);
+    the stride alone keeps CI and the DuckDB oracles reproducible. The
+    stride comes from a broadcast 1-row aggregate, so callers stay a
+    single lazy plan with no eager .count() job."""
+    corpus_n = emb.agg(
+        F.greatest(
+            F.floor(F.count(F.lit(1)) / n_cells), F.lit(1).cast("bigint")
+        ).alias("stride")
+    )
+    return (
+        emb.crossJoin(F.broadcast(corpus_n))
+        .filter(
+            (F.col("vec_id") % F.col("stride") == 0)
+            & (F.col("vec_id") / F.col("stride") < n_cells)
+        )
+        .select(
+            (F.col("vec_id") / F.col("stride")).cast("int").alias("cell_id"),
+            F.col("e").alias("c_e"),
+            F.col("nrm").alias("c_nrm"),
+        )
+    )
 
 
 def lcg_plane_value(plane: int, dim: int) -> float:
@@ -95,9 +184,9 @@ def knn_bruteforce(
     )
     # fan_out BEFORE the broadcast join: the per-pair scoring is
     # O(|corpus| * |queries| * DIM) map work chained on the corpus scan,
-    # and a single-row-group embeddings file scans as ONE task (measured
-    # r17: the whole scoring pass serialized on one core, 0.55 s of a
-    # 0.84 s query). No-op at warehouse scale (see fan_out).
+    # and a single-row-group embeddings file scans as ONE task (the whole
+    # scoring pass serialized on one core). No-op at warehouse scale (see
+    # fan_out).
     c = fan_out(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("e").alias("e_c"),
@@ -107,16 +196,9 @@ def knn_bruteforce(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(
-            dot(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c")), 4
-        ).alias("cos"),
+        rounded_cosine("e_q", "n_q", "e_c", "n_c").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return _top_k_by_cos(scored, k)
 
 
 @register(
@@ -144,9 +226,7 @@ def knn_bruteforce(
     tags=("llm", "similarity", "vector"),
 )
 def _knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return knn_bruteforce(emb, queries)
 
@@ -220,51 +300,10 @@ def lsh_candidates(sigs: DataFrame) -> DataFrame:
     tags=("llm", "similarity", "vector", "approx"),
 )
 def _knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    sigs = load_embeddings(spark, sf_dir).withColumn(
+        "sig", lsh_signature(F.col("e"))
     )
-    sigs = emb.select(
-        "vec_id",
-        "e",
-        l2_norm(F.col("e")).alias("nrm"),
-        lsh_signature(F.col("e")).alias("sig"),
-    )
-    cand = lsh_candidates(sigs)
-    vec = sigs.select("vec_id", "e", "nrm")
-    scored = (
-        cand.join(
-            F.broadcast(
-                vec.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("e").alias("e_q"),
-                    F.col("nrm").alias("n_q"),
-                ).filter(F.col("query_id") < N_QUERIES)
-            ),
-            "query_id",
-        )
-        .join(
-            vec.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("e").alias("e_c"),
-                F.col("nrm").alias("n_c"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c")),
-                4,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    return _exact_rerank(sigs, lsh_candidates(sigs))
 
 
 @register(
@@ -284,14 +323,12 @@ def _knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "vector"),
 )
 def _vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     comp_sum = F.aggregate(F.col("e"), F.lit(0.0), lambda acc, x: acc + x)
     return emb.select(
         "vec_id",
         F.size("e").alias("dim"),
-        F.round(l2_norm(F.col("e")), 4).alias("l2_norm"),
+        F.round(F.col("nrm"), 4).alias("l2_norm"),
         F.round(comp_sum, 4).alias("component_sum"),
     )
 
@@ -324,8 +361,8 @@ def ivf_assignments(emb: DataFrame, centroids: DataFrame, n_best: int) -> DataFr
     cells). Ordering matches the window form exactly: score desc,
     cell_id asc."""
     scored = emb.join(F.broadcast(packed_centroids(centroids)), F.lit(True))
-    # The per-cell dot stays the FOLD (r18 measured an unrolled
-    # expansion and reverted it — see pq_encode's rationale).
+    # The per-cell dot stays the FOLD: an unrolled expansion measured
+    # slower (see pq_encode's rationale).
     per_cell = F.transform(
         "_cells",
         lambda c: F.struct(
@@ -345,34 +382,13 @@ def ivf_candidates(emb: DataFrame) -> DataFrame:
     """(query_id, neighbor_id) candidate pairs from the IVF index — the
     recall/cost core of knn_ivf, public so tests can hold the candidate
     fraction to a ceiling. ``emb`` must carry (vec_id, e, nrm)."""
-    # Deterministic coarse quantizer: stride-sample N_CELLS corpus vectors
-    # as centroids (at 100 TB: k-means|| offline; stride keeps CI stable).
-    # The stride is derived from a broadcast 1-row aggregate so the builder
-    # stays a single lazy plan — no eager .count() job before execution.
-    corpus_n = emb.agg(
-        F.greatest(
-            F.floor(F.count(F.lit(1)) / N_CELLS), F.lit(1).cast("bigint")
-        ).alias("stride")
-    )
-    centroids = tracked_persist(
-        # Persisted (optimization round 17): the centroid table feeds both
-        # the corpus assignment and the query assignment, and each
-        # consumer's packed broadcast otherwise re-ran this stride filter
-        # as its own full corpus pass. N_CELLS rows cached.
-        emb.crossJoin(F.broadcast(corpus_n))
-        .filter(
-            (F.col("vec_id") % F.col("stride") == 0)
-            & (F.col("vec_id") / F.col("stride") < N_CELLS)
-        )
-        .select(
-            (F.col("vec_id") / F.col("stride")).cast("int").alias("cell_id"),
-            F.col("e").alias("c_e"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
+    # Persisted: the centroid table feeds both the corpus assignment and
+    # the query assignment, and each consumer's packed broadcast otherwise
+    # re-ran the stride filter as its own full corpus pass. N_CELLS rows.
+    centroids = tracked_persist(stride_centroids(emb, N_CELLS))
 
     # fan_out: the corpus assignment is O(|corpus| * N_CELLS * DIM) map
-    # work; a single-row-group scan would run it on one task (r17). The
+    # work; a single-row-group scan would run it on one task. The
     # centroid derivation above stays on the raw scan — it is persisted
     # and N_CELLS-sized, so it gains nothing from a repartition.
     corpus_cells = ivf_assignments(fan_out(emb), centroids, n_best=CORPUS_ASSIGN)
@@ -406,46 +422,8 @@ def ivf_candidates(emb: DataFrame) -> DataFrame:
     tags=("llm", "similarity", "vector", "approx"),
 )
 def _knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
-    cand = ivf_candidates(emb)
-    query_vecs = emb.filter(F.col("vec_id") < N_QUERIES)
-    scored = (
-        cand.join(
-            F.broadcast(
-                query_vecs.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("e").alias("e_q"),
-                    F.col("nrm").alias("n_q"),
-                )
-            ),
-            "query_id",
-        )
-        .join(
-            emb.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("e").alias("e_c"),
-                F.col("nrm").alias("n_c"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c")),
-                4,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
+    emb = load_embeddings(spark, sf_dir)
+    return _exact_rerank(emb, ivf_candidates(emb))
 
 
 @register(
@@ -475,9 +453,7 @@ def _knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "vector"),
 )
 def _embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     # scale materialized through a projection: HOF lambdas get no CSE, so
     # referencing it inline would recompute the array_max per element
     scaled = emb.select(
@@ -538,9 +514,7 @@ def _embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _embedding_lang_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     v = emb.join(docs, docs.doc_id == emb.vec_id).select("lang", "vec_id", "e")
     pos = v.select(
         "lang", "vec_id", F.posexplode("e").alias("p0", "x")
@@ -617,11 +591,7 @@ def _embedding_lang_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "vector", "quality"),
 )
 def _knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("e"),
-        "label",
-    )
+    emb = load_embeddings(spark, sf_dir, "label")
     vecs = emb.select("vec_id", "e")
     queries = vecs.filter(F.col("vec_id") < N_QUERIES)
     neighbors = knn_bruteforce(vecs, queries)
@@ -638,7 +608,7 @@ def _majority_label_vote(neighbors: DataFrame, emb: DataFrame) -> DataFrame:
     information, and letting NULL be a candidate label also exposes the
     engines' opposite NULL sort order in the tiebreak (Spark ASC is
     NULLS FIRST, ANSI default NULLS LAST — caught by the null-injected
-    parity sweep, round 8).  A query whose entire shortlist is
+    parity sweep).  A query whose entire shortlist is
     unlabeled therefore has no verdict and is absent from the output."""
     labeled = neighbors.join(
         emb.select(
@@ -737,8 +707,8 @@ def pq_encode(subs: DataFrame, codebook: DataFrame) -> DataFrame:
     aggregation exchanged a pre-combined row per (vec, s); this form
     exchanges nothing)."""
     j = subs.join(F.broadcast(packed_codebook(codebook)), "s")
-    # The d² stays the zip_with+aggregate FOLD on purpose (r18 measured
-    # an unrolled (x-y)*(x-y) expansion and REVERTED it): transform
+    # The d² stays the zip_with+aggregate FOLD on purpose (an unrolled
+    # (x-y)*(x-y) expansion measured slower and was reverted): transform
     # lambdas are interpreted either way (CodegenFallback), interpreted
     # trees get no CSE so the expansion re-evaluates each array access
     # per reference (88s vs 13s task-time on the corpus encode), and at
@@ -774,10 +744,7 @@ def pq_codebook(subs: DataFrame, refine_rounds: int = 1) -> DataFrame:
     (Jégou et al. train codebooks on a learning set), and the property
     that makes the build scale-free: at 100 TB the refinement cost is
     per-training-row, the corpus is touched only by the single final
-    encode, and the codebook stays a 512-row broadcast.  (Round 7: the
-    refinement previously assigned every corpus row — one whole extra
-    corpus encode per round, contradicting this docstring's claim;
-    recall at all three SFs is unchanged within the pinned floors.)"""
+    encode, and the codebook stays a 512-row broadcast."""
     vec_ids = subs.select("vec_id").distinct()
     strides = vec_ids.agg(
         F.greatest(
@@ -826,32 +793,28 @@ def _pq_artifacts(emb: DataFrame):
     query ADC lookup table. One definition so the compression path the
     two indexes score with cannot drift.
 
-    The code table and the query LUT are NOT persisted (optimization
-    round 18): in the current plans each has exactly ONE consumer — the
-    ADC join — so a persist buys zero recomputation and costs a
-    materialization barrier (its own AQE stage-job chain plus the cache
-    write) on every run.  The round-7 persists were added when the plan
-    referenced them from several consumers; after the honest-release fix
-    (cache.py r18) the single-consumer fills showed up as pure overhead.
-    At 100 TB the code table is still a materialized artifact — a real
-    deployment WRITES it once per corpus snapshot and every query batch
-    reads the file, which is a storage decision outside a single query's
-    plan, not an in-plan persist."""
+    The code table and the query LUT are NOT persisted: each has exactly
+    ONE consumer — the ADC join — so a persist buys zero recomputation
+    and costs a materialization barrier (its own AQE stage-job chain plus
+    the cache write) on every run.  At 100 TB the code table is still a
+    materialized artifact — a real deployment WRITES it once per corpus
+    snapshot and every query batch reads the file, which is a storage
+    decision outside a single query's plan, not an in-plan persist."""
     # fan_out: everything below — normalize, subvector explode, the
     # persisted subs cache and the Lloyd/encode passes that read it —
     # inherits the scan's partitioning, and a single-row-group scan
-    # serializes the whole PQ construction on one task (r17). The cache
+    # serializes the whole PQ construction on one task. The cache
     # is written already fanned out, so every downstream encode pass
     # parallelizes too. No-op at warehouse scale (see fan_out).
     en = fan_out(emb).select(
         "vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("en")
     )
     subs = tracked_persist(_subvectors(en))
-    # The trained codebook is persisted too (optimization round 17): it
-    # feeds BOTH the corpus encode and the query LUT, and without the
-    # persist each consumer re-ran the whole Lloyd refinement (stride
-    # seed + training-sample encode + recenter) — one redundant training
-    # pass per artifact. 512 rows; it is the third index artifact.
+    # The trained codebook is persisted too: it feeds BOTH the corpus
+    # encode and the query LUT, and without the persist each consumer
+    # re-ran the whole Lloyd refinement (stride seed + training-sample
+    # encode + recenter) — one redundant training pass per artifact.
+    # 512 rows; it is the third index artifact.
     cb = tracked_persist(pq_codebook(subs))
     codes = pq_encode(subs, cb)
     q_subs = subs.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed(
@@ -861,43 +824,6 @@ def _pq_artifacts(emb: DataFrame):
         "query_id", "s", "code", dot(F.col("sub"), F.col("c_sub")).alias("p")
     )
     return codes, lut
-
-
-def _exact_rerank(
-    emb: DataFrame, shortlist: DataFrame, k: int = TOP_K
-) -> DataFrame:
-    """Exact-cosine rerank of an ANN shortlist to top-``k`` — the shared
-    final stage of knn_pq and knn_ivfpq (same rounded score and
-    deterministic tiebreak as knn_bruteforce, so recall is measured
-    against identical ranking semantics)."""
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("e_q"),
-        F.col("nrm").alias("n_q"),
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("e_c"),
-        F.col("nrm").alias("n_c"),
-    )
-    scored = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c")),
-                4,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
-    )
 
 
 def pq_adc_candidates(
@@ -944,12 +870,7 @@ def pq_adc_candidates(
     tags=("llm", "similarity", "vector", "approx"),
 )
 def _knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
+    emb = load_embeddings(spark, sf_dir).filter(F.col("nrm") > 0)
     return _exact_rerank(emb, pq_adc_candidates(emb))
 
 
@@ -960,8 +881,8 @@ def ivfpq_shortlist(emb: DataFrame, rerank: int = PQ_RERANK) -> DataFrame:
     IVFADC index layout (Jégou et al. §V). Public so tests can bound
     the shortlist. The candidate list is consumed exactly once (the ADC
     join), so it is NOT persisted — see _pq_artifacts' code-table
-    rationale (optimization round 18: single-consumer persists are pure
-    materialization-barrier overhead)."""
+    rationale (a single-consumer persist is pure materialization-barrier
+    overhead)."""
     cand = ivf_candidates(emb)
     codes, lut = _pq_artifacts(emb)
     adc = (
@@ -995,12 +916,7 @@ def ivfpq_shortlist(emb: DataFrame, rerank: int = PQ_RERANK) -> DataFrame:
     tags=("llm", "similarity", "vector", "approx"),
 )
 def _knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
+    emb = load_embeddings(spark, sf_dir).filter(F.col("nrm") > 0)
     return _exact_rerank(emb, ivfpq_shortlist(emb))
 
 
@@ -1040,19 +956,10 @@ def _knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "vector"),
 )
 def _hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "label", "e", l2_norm(F.col("e")).alias("nrm"))
-    anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("a_label"),
-        F.col("e").alias("e_q"),
-        F.col("nrm").alias("n_q"),
-    )
+    emb = load_embeddings(spark, sf_dir, "label")
     scored = (
         emb.join(
-            F.broadcast(anchors),
+            F.broadcast(_anchors(emb)),
             (F.col("vec_id") != F.col("anchor_id"))
             & (F.col("label") != F.col("a_label")),
         )
@@ -1061,16 +968,28 @@ def _hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a_label",
             F.col("vec_id").alias("negative_id"),
             F.col("label").alias("n_label"),
-            F.round(
-                dot(F.col("e_q"), F.col("e")) / (F.col("n_q") * F.col("nrm")), 4
-            ).alias("cos"),
+            rounded_cosine("e_q", "n_q", "e", "nrm").alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.col("cos").desc(), "negative_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("anchor_id", "a_label", "negative_id", "n_label", "cos")
+    return _hardest_negative(scored)
+
+
+def _anchors(emb: DataFrame) -> DataFrame:
+    """(anchor_id, a_label, e_q, n_q): the query vectors both hard-negative
+    miners mine for, from an (vec_id, label, e, nrm) table."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("a_label"),
+        F.col("e").alias("e_q"),
+        F.col("nrm").alias("n_q"),
+    )
+
+
+def _hardest_negative(scored: DataFrame) -> DataFrame:
+    """Rank tail of both hard-negative miners: the top-1 by rounded
+    ``cos`` per anchor, ``negative_id`` tiebreak (:func:`_top_k_by_cos`)."""
+    return _top_k_by_cos(scored, 1, part="anchor_id", tie="negative_id").drop(
+        "rnk"
     )
 
 
@@ -1087,12 +1006,6 @@ def hard_negatives_over_shortlist(emb: DataFrame) -> DataFrame:
     floor against the exact miner.  ``emb`` must carry
     (vec_id, label, e, nrm)."""
     shortlist = ivfpq_shortlist(emb.select("vec_id", "e", "nrm"))
-    anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("a_label"),
-        F.col("e").alias("e_q"),
-        F.col("nrm").alias("n_q"),
-    )
     cands = emb.select(
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("n_label"),
@@ -1102,7 +1015,7 @@ def hard_negatives_over_shortlist(emb: DataFrame) -> DataFrame:
     scored = (
         shortlist.withColumnRenamed("query_id", "anchor_id")
         .withColumnRenamed("neighbor_id", "negative_id")
-        .join(F.broadcast(anchors), "anchor_id")
+        .join(F.broadcast(_anchors(emb)), "anchor_id")
         .join(cands, "negative_id")
         .filter(F.col("n_label") != F.col("a_label"))
         .select(
@@ -1110,18 +1023,10 @@ def hard_negatives_over_shortlist(emb: DataFrame) -> DataFrame:
             "a_label",
             "negative_id",
             "n_label",
-            F.round(
-                dot(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c")),
-                4,
-            ).alias("cos"),
+            rounded_cosine("e_q", "n_q", "e_c", "n_c").alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.col("cos").desc(), "negative_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("anchor_id", "a_label", "negative_id", "n_label", "cos")
-    )
+    return _hardest_negative(scored)
 
 
 # ---------------------------------------------------------------------------
@@ -1150,16 +1055,12 @@ def nearest_cell(
     SemDeDup (dedup.semantic_dedup_flags) both rank with — the rounding/
     tiebreak contract cannot drift between them."""
     joined = df.join(F.broadcast(packed_centroids(cents)), F.lit(True))
-    # The per-cell dot stays the FOLD (r18 measured an unrolled
-    # expansion and reverted it — see pq_encode's rationale).
+    # The per-cell dot stays the FOLD: an unrolled expansion measured
+    # slower (see pq_encode's rationale).
     per_cell = F.transform(
         "_cells",
         lambda c: F.struct(
-            (
-                -F.round(
-                    dot(F.col("e"), c["c_e"]) / (F.col("nrm") * c["c_nrm"]), 4
-                )
-            ).alias("neg_cos"),
+            (-rounded_cosine("e", "nrm", c["c_e"], c["c_nrm"])).alias("neg_cos"),
             c["cell_id"].alias("cell_id"),
         ),
     )
@@ -1281,20 +1182,8 @@ def _kmeans_oracle() -> str:
     exact_float_cols=("cos",),
 )
 def _embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
-    # The stride-seed block is the SAME deterministic sampler SemDeDup's
-    # coarse quantizer uses — one definition (dedup.semantic_centroids),
-    # parameterized by cell count, rather than a drift-prone copy.
-    from full_data_infrastructure_spark.operators.dedup import (
-        semantic_centroids,
-    )
-
-    cents = semantic_centroids(emb, n_cells=KMEANS_K)
+    emb = load_embeddings(spark, sf_dir).filter(F.col("nrm") > 0)
+    cents = stride_centroids(emb, KMEANS_K)
     for _ in range(KMEANS_ITERS):
         cents = kmeans_refine(emb, kmeans_assign(emb, cents))
     return kmeans_assign(emb, cents)
@@ -1385,9 +1274,7 @@ def pca_components(emb: DataFrame, k: int = PCA_K, vec_col: str = "e"):
     tags=("llm", "vector", "approx"),
 )
 def _embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     try:
         comps, _evals, mean = pca_components(emb)
     except ValueError:

@@ -28,7 +28,10 @@ from full_data_infrastructure_spark.operators.quality import (
     run_suite,
 )
 from full_data_infrastructure_spark.operators.relational import masked_projection
-from full_data_infrastructure_spark.operators.similarity import knn_bruteforce
+from full_data_infrastructure_spark.operators.similarity import (
+    knn_bruteforce,
+    load_embeddings,
+)
 from full_data_infrastructure_spark.sources.parquet import load_table
 
 
@@ -74,7 +77,6 @@ def test_simhash_finds_exact_dups(near_dup_docs):
 def test_knn_lsh_recall(spark, sf_dir):
     from full_data_infrastructure_spark.operators.similarity import (
         N_QUERIES,
-        l2_norm,
         lsh_candidates,
         lsh_signature,
     )
@@ -97,16 +99,9 @@ def test_knn_lsh_recall(spark, sf_dir):
     # Recall must not be bought with a near-full scan: the candidate set
     # (measured 0.58-0.61 of all query-corpus pairs on near-uniform
     # embeddings, LSH's worst case) stays under a 0.70 ceiling.
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     n_corpus = emb.count()
-    sigs = emb.select(
-        "vec_id",
-        "e",
-        l2_norm(F.col("e")).alias("nrm"),
-        lsh_signature(F.col("e")).alias("sig"),
-    )
+    sigs = emb.select("vec_id", "e", "nrm", lsh_signature(F.col("e")).alias("sig"))
     frac = lsh_candidates(sigs).count() / (N_QUERIES * (n_corpus - 1))
     assert frac <= 0.70, f"knn_lsh candidate fraction {frac:.2f}"
 
@@ -176,9 +171,7 @@ def test_generator_properties(spark, sf_dir):
 
 
 def test_knn_bruteforce_is_symmetric_sane(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = load_embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 3)
     out = knn_bruteforce(emb, queries, k=2).collect()
     assert len(out) == 6
@@ -195,7 +188,6 @@ def test_knn_ivf_recall(spark, sf_dir):
     from full_data_infrastructure_spark.operators.similarity import (
         N_QUERIES,
         ivf_candidates,
-        l2_norm,
     )
     from full_data_infrastructure_spark.queries import REGISTRY
 
@@ -205,11 +197,7 @@ def test_knn_ivf_recall(spark, sf_dir):
     approx = {(r["query_id"], r["neighbor_id"]) for r in ivf}
     recall = len(truth & approx) / len(truth)
     assert recall >= 0.84, f"knn_ivf recall {recall:.2f}"
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("e"),
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
+    emb = load_embeddings(spark, sf_dir)
     n_corpus = emb.count()
     frac = ivf_candidates(emb).count() / (N_QUERIES * (n_corpus - 1))
     assert frac <= 0.70, f"knn_ivf candidate fraction {frac:.2f}"
@@ -221,6 +209,38 @@ def test_knn_ivf_recall(spark, sf_dir):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_scores:
             assert abs(r["cos"] - exact_scores[key]) < 1e-9
+
+
+def test_ann_queries_emit_exact_scores_and_ranks(spark, sf_dir):
+    """Every approximate kNN query ends in the shared exact rerank, so each
+    row's ``cos`` must equal the brute-force rounded cosine of its
+    (query_id, neighbor_id) pair, and ``rnk`` must follow (cos desc,
+    neighbor_id asc) within each query. The recall tests compare only
+    pair sets; this pins the scores and ranks the queries emit."""
+    from full_data_infrastructure_spark.operators.similarity import N_QUERIES
+    from full_data_infrastructure_spark.queries import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    emb = load_embeddings(spark, sf_dir)
+    all_pairs = knn_bruteforce(
+        emb, emb.filter(F.col("vec_id") < N_QUERIES), k=emb.count()
+    )
+    exact = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in all_pairs.collect()}
+    for name in ("knn_lsh", "knn_ivf", "knn_pq", "knn_ivfpq"):
+        rows = REGISTRY[name].build(spark, sf_dir).collect()
+        assert rows, name
+        per_query = {}
+        for r in rows:
+            assert r["cos"] == exact[(r["query_id"], r["neighbor_id"])], (name, r)
+            per_query.setdefault(r["query_id"], []).append(r)
+        for q, ranked in per_query.items():
+            ranked.sort(key=lambda r: r["rnk"])
+            assert [r["rnk"] for r in ranked] == list(range(1, len(ranked) + 1)), (
+                name,
+                q,
+            )
+            order = [(-r["cos"], r["neighbor_id"]) for r in ranked]
+            assert order == sorted(order), (name, q)
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):
@@ -382,7 +402,7 @@ def test_incremental_lsh_subset_and_recall(spark):
     # sf0.001 / sf0.01; 0.05 is the ceiling with margin.
     from full_data_infrastructure_spark.operators.dedup import (
         INCREMENT_MOD,
-        _signatures_from_hashed,
+        _sig_sizes_from_hashed,
         banded_signatures,
         hashed_shingles,
     )
@@ -391,7 +411,7 @@ def test_incremental_lsh_subset_and_recall(spark):
     docs = load_table(spark, sf_dir, "documents")
     sh = hashed_shingles(docs).persist()
     inc = F.col("doc_id") % INCREMENT_MOD == 0
-    banded = banded_signatures(_signatures_from_hashed(sh))
+    banded = banded_signatures(_sig_sizes_from_hashed(sh))
     n_cand = (
         banded.filter(inc)
         .select(F.col("doc_id").alias("new_doc_id"), "band_idx", "band_hash")
@@ -596,10 +616,7 @@ def test_cosine_histogram_candidate_twin_agrees(spark, sf_dir):
     )
 
     # --- real embeddings: subset property -------------------------------
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    withn = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
+    withn = load_embeddings(spark, sf_dir)
     exact = {
         r["bucket"]: r["n_pairs"]
         for r in cosine_histogram_exact(withn).collect()
@@ -675,21 +692,15 @@ def test_semantic_dedup_comparison_volume_bounded(spark, sf_dir):
     comparison volume (sum of |cell|*(|cell|-1)/2) stays under 25% of the
     brute-force n*(n-1)/2 on the real embeddings table — recall cannot
     have been bought with a near-complete scan."""
-    from full_data_infrastructure_spark.functions.vector import l2_norm
-    from full_data_infrastructure_spark.operators.dedup import (
-        SEM_CELLS,
-        semantic_centroids,
-    )
+    from full_data_infrastructure_spark.operators.dedup import SEM_CELLS
     from full_data_infrastructure_spark.operators.similarity import (
         ivf_assignments,
+        stride_centroids,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
+    emb = load_embeddings(spark, sf_dir)
     n = emb.count()
-    cents = semantic_centroids(emb)
+    cents = stride_centroids(emb, SEM_CELLS)
     sizes = (
         ivf_assignments(emb, cents, n_best=1)
         .groupBy("cell_id")
@@ -711,7 +722,6 @@ def test_knn_pq_recall_and_compression(spark, sf_dir):
     ADC shortlist bounded to a fraction of the corpus (recall must not
     be bought with a near-full rerank), and the code table actually
     compressed: one 6-bit code per (vector, subspace)."""
-    from full_data_infrastructure_spark.functions.vector import l2_norm
     from full_data_infrastructure_spark.operators.similarity import (
         N_QUERIES,
         PQ_CODES,
@@ -732,10 +742,7 @@ def test_knn_pq_recall_and_compression(spark, sf_dir):
     floor = 0.85 if not sf_dir.rstrip("/").endswith("0.1") else 0.75
     assert recall >= floor, f"knn_pq recall {recall:.2f} < {floor}"
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm"))
+    emb = load_embeddings(spark, sf_dir)
     n_corpus = emb.count()
     # Shortlist fraction: PQ_RERANK of the corpus per query, by construction.
     assert PQ_RERANK / n_corpus <= 0.25, "ADC shortlist is a near-full scan"
@@ -780,19 +787,12 @@ def test_knn_ivfpq_recall(spark, sf_dir):
     # the probed-cell candidate set the ADC stage scores must stay under
     # 0.70 of all query x corpus pairs, so recall is never bought with a
     # near-full compressed scan.
-    from full_data_infrastructure_spark.functions.vector import l2_norm
     from full_data_infrastructure_spark.operators.similarity import (
         N_QUERIES,
         ivf_candidates,
     )
-    from full_data_infrastructure_spark.sources.parquet import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
+    emb = load_embeddings(spark, sf_dir).filter(F.col("nrm") > 0)
     n_corpus = emb.count()
     n_cand = ivf_candidates(emb).count()
     frac = n_cand / (N_QUERIES * (n_corpus - 1))
@@ -807,7 +807,6 @@ def test_hard_negatives_shortlist_twin_agrees(spark, sf_dir):
     disagreement is a near-tie (sketch negative within 0.05 cosine of
     the exact one: a negative that moves a contrastive loss almost
     identically)."""
-    from full_data_infrastructure_spark.functions.vector import l2_norm
     from full_data_infrastructure_spark.operators.similarity import (
         hard_negatives_over_shortlist,
     )
@@ -818,12 +817,7 @@ def test_hard_negatives_shortlist_twin_agrees(spark, sf_dir):
         r["anchor_id"]: r
         for r in REGISTRY["hard_negative_mining"].build(spark, sf_dir).collect()
     }
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select(
-        "vec_id", "label", "e", l2_norm(F.col("e")).alias("nrm")
-    ).filter(F.col("nrm") > 0)
+    emb = load_embeddings(spark, sf_dir, "label").filter(F.col("nrm") > 0)
     sketch = {
         r["anchor_id"]: r for r in hard_negatives_over_shortlist(emb).collect()
     }
@@ -847,7 +841,6 @@ def test_label_consistency_shortlist_twin_agrees(spark, sf_dir):
     synthetic embeddings the top-5 vote is tie-heavy (random labels, ~1
     vote each), so a single shortlist-vs-exact neighbor swap flips the
     plurality label while the consistent verdict is far more stable."""
-    from full_data_infrastructure_spark.functions.vector import l2_norm
     from full_data_infrastructure_spark.operators.similarity import (
         label_consistency_over_shortlist,
     )
@@ -858,12 +851,7 @@ def test_label_consistency_shortlist_twin_agrees(spark, sf_dir):
         r["query_id"]: r
         for r in REGISTRY["knn_label_consistency"].build(spark, sf_dir).collect()
     }
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select(
-        "vec_id", "label", "e", l2_norm(F.col("e")).alias("nrm")
-    ).filter(F.col("nrm") > 0)
+    emb = load_embeddings(spark, sf_dir, "label").filter(F.col("nrm") > 0)
     twin = {
         r["query_id"]: r
         for r in label_consistency_over_shortlist(emb).collect()
@@ -907,25 +895,16 @@ def test_kmeans_refinement_improves_objective(spark, sf_dir):
     """Lloyd's guarantee, observed: mean cosine-to-assigned-centroid after
     the refinement rounds is at least the seed assignment's (equality
     only possible if the seeds were already stationary)."""
-    from full_data_infrastructure_spark.functions.vector import l2_norm
-    from full_data_infrastructure_spark.operators.dedup import (
-        semantic_centroids,
-    )
     from full_data_infrastructure_spark.operators.similarity import (
         KMEANS_K,
         kmeans_assign,
-        kmeans_refine,
+        stride_centroids,
     )
     from full_data_infrastructure_spark.queries import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
-    seeds = semantic_centroids(emb, n_cells=KMEANS_K)
+    emb = load_embeddings(spark, sf_dir).filter(F.col("nrm") > 0)
+    seeds = stride_centroids(emb, KMEANS_K)
     seed_obj = (
         kmeans_assign(emb, seeds).agg(F.avg("cos").alias("o")).first()["o"]
     )
@@ -1014,9 +993,7 @@ class TestEmbeddingPCA:
 
     @pytest.fixture(scope="class")
     def emb(self, spark, sf_dir):
-        return load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
+        return load_embeddings(spark, sf_dir)
 
     def test_components_match_numpy_pca(self, spark, sf_dir, emb):
         import numpy as np

@@ -1633,11 +1633,10 @@ def test_bucketed_upsert_sink_quotes_identifiers_and_paths(spark, tmp_path):
 
 
 def test_bucket_grouped_replay_batches_are_key_sparse(spark, sf_dir, tmp_path):
-    """The round-9 benched bucketed-sink twins claim a KEY-SPARSE workload:
-    the bucket-major replay offset makes each micro-batch (one part file)
-    touch only a few of the sink's 16 snapshot buckets, so the recorded
-    fold_sec actually measures pruned-IO folds, not full-table rewrites
-    under a different name. Recreate the upsert twin's split and pin
+    """A bucket-major replay offset makes the bucketed sinks' workload
+    KEY-SPARSE: each micro-batch (one part file) touches only a few of
+    the sink's 16 snapshot buckets, so a fold rewrites a few buckets, not
+    the whole table. Recreate the bucketed upsert replay's split and pin
     per-file bucket sparsity plus the per-key ordering the fold needs."""
     import os
 
@@ -1747,13 +1746,13 @@ def test_read_bucketed_snapshot_non_empty_uses_declared_schema(spark, tmp_path):
 
 
 def test_bucket_major_offset_survives_wide_ts_span(spark, tmp_path):
-    """The bucketed SCD2 twin's pruned-IO bench claim rests on bucket-MAJOR
+    """The bucketed SCD2 replay stays key-sparse only under bucket-MAJOR
     replay ordering: bucket b's offset band [b*M, b*M + span) must not
     overlap bucket b+1's, which requires the multiplier M to exceed the
-    corpus's unix_micros SPAN.  ADVICE r9: the old M = 2^44 µs is ~204
-    days (the '557 years' comment confused µs with ms), so any corpus
-    spanning more — the ~75-year epoch-boundary sweep included — silently
-    interleaved the bands and the replay degraded to near time-major.
+    corpus's unix_micros SPAN.  An M = 2^44 µs is only ~204 days, so
+    any corpus spanning more — the ~75-year epoch-boundary sweep
+    included — silently interleaves the bands and the replay degrades
+    to near time-major.
     Pin the fixed M = 2^54 µs (~571 years) on a 75-year pre/post-epoch
     corpus: bands must separate, per-file bucket contact must stay
     sparse, and the OLD multiplier must demonstrably fail the same
