@@ -22,13 +22,27 @@ test_release_persisted_releases_dead_builder_locals). Pinning the
 wrapper until release is the correct lifetime: the JVM blocks are pinned
 by the persist anyway, the Python wrapper is a few hundred bytes, and
 ``release_persisted`` remains the one release point.
+
+Builders that write scratch trees to read back (the streaming replays,
+compaction, the JSON-Lines round-trips) register them with
+:func:`track_dir`, and ``release_persisted`` removes them too. A tree
+outlives the builder, because the returned plan reads it when the caller
+acts on it, so the builder ties it to that plan with :func:`hold_dir`:
+the tree is then removed by the first release after the plan is dropped.
+A harness that keeps the last pass's results to check them after a
+release still reads them.
 """
 
 from __future__ import annotations
 
+import shutil
+import weakref
+
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+# Tracked scratch dir -> weak reference to the plan that reads it, or None.
+_DIRS: dict[str, weakref.ref | None] = {}
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -38,8 +52,21 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def track_dir(path: str) -> None:
+    """Register a scratch directory for removal by ``release_persisted``."""
+    _DIRS[path] = None
+
+
+def hold_dir(path: str, df: DataFrame) -> DataFrame:
+    """Keep the tracked ``path`` through releases while ``df``, the plan
+    that reads it, is still referenced; returns ``df``."""
+    _DIRS[path] = weakref.ref(df)
+    return df
+
+
 def release_persisted() -> int:
-    """Unpersist every tracked DataFrame; returns how many."""
+    """Unpersist every tracked DataFrame and remove every tracked dir
+    whose reading plan is gone; returns how many DataFrames."""
     released = 0
     for df in _TRACKED:
         try:
@@ -49,4 +76,8 @@ def release_persisted() -> int:
             # A stopped session makes unpersist moot — the blocks are gone.
             pass
     _TRACKED.clear()
+    for path, reader in list(_DIRS.items()):
+        if reader is None or reader() is None:
+            shutil.rmtree(path, ignore_errors=True)
+            del _DIRS[path]
     return released

@@ -203,6 +203,7 @@ def _debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import start_upsert_sink
 
@@ -233,9 +234,9 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(work, "snapshot")).select(
+    return hold_dir(work, spark.read.parquet(os.path.join(work, "snapshot")).select(
         "user_id", "ts_s", "event_type", "value"
-    )
+    ))
 
 
 @register(
@@ -271,6 +272,7 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import (
         _key_bucket,
@@ -316,6 +318,6 @@ def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> Dat
     # snapshot total-on-empty with the data schema the sink stores
     # (the changelog minus the op flag and the order column).
     snap_schema = changes.drop("op", "event_id", "replay_offset").schema
-    return read_bucketed_snapshot(
+    return hold_dir(work, read_bucketed_snapshot(
         spark, os.path.join(work, "snapshot"), snap_schema
-    ).select("user_id", "ts_s", "event_type", "value")
+    ).select("user_id", "ts_s", "event_type", "value"))

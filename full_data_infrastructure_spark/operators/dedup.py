@@ -973,12 +973,15 @@ def connected_components(
     # working edge set derive from this checkpoint, so an expensive
     # upstream (the whole MinHash pipeline in dedup_survivors_lsh) is not
     # computed twice.
-    # All checkpoints here are LAZY (eager=False): the is_star_forest
-    # probe's 1-row collect is then the round's single driver-blocking
-    # action, driving materialization of the whole round chain — versus
-    # three blocking pauses (two eager checkpoints + the probe) per round.
-    # Lineage is still truncated: the probe computes-and-caches each
-    # checkpointed RDD before the next round builds on it.
+    # All checkpoints here are LAZY (eager=False), which under AQE defers
+    # only the final stage: localCheckpoint asks for its input's RDD, and
+    # AQE runs every shuffle stage of the input to finalize that plan
+    # before it returns. So each call blocks on its input's shuffles, and
+    # the is_star_forest probe is not the round's only driver-blocking
+    # action. What lazy saves is the separate count job an eager
+    # checkpoint adds; the probe's 1-row collect computes and caches the
+    # checkpointed partitions, so lineage is still truncated before the
+    # next round builds on them.
     raw = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
         eager=False
     )

@@ -678,16 +678,17 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
     never hit.) Symmetrizing the edges leaves no dangling nodes.
 
     Scale design: degree is pre-joined into the edge table ONCE and the
-    result persisted already hash-partitioned on ``src``, so every
-    iteration's propagation join reuses that layout — only the node-sized
-    rank table moves per iteration, never the edges (the naive form
-    re-shuffled the full edge table AND recomputed the degree aggregate
-    every iteration; at sf0.1 this cut the benched time 4.5s -> 2.7s,
-    bit-identical output, and at 100 TB it is the difference between one
-    edge shuffle total and one per iteration). Each iteration is then one
-    equi-join plus a map-side-combinable sum; rank state is node-sized
-    and the plan repeats linearly per iteration (no driver actions;
-    production runs just raise ``iterations``)."""
+    result persisted already hash-partitioned on ``src``, at the session's
+    shuffle width, so every iteration's propagation join reuses that
+    layout — only the node-sized rank table moves per iteration, never
+    the edges (the naive form re-shuffled the full edge table AND
+    recomputed the degree aggregate every iteration; at sf0.1 this cut
+    the benched time 4.5s -> 2.7s, bit-identical output, and at 100 TB it
+    is the difference between one edge shuffle total and one per
+    iteration). Each iteration is then one equi-join plus a
+    map-side-combinable sum; rank state is node-sized and the plan
+    repeats linearly per iteration (no driver actions; production runs
+    just raise ``iterations``)."""
     from full_data_infrastructure_spark.cache import tracked_persist
 
     pairs = edges_undirected
@@ -695,7 +696,13 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
         pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_deg = tracked_persist(sym.join(deg, "src").repartition("src"))
+    # A fixed width, not repartition("src"): AQE coalesces the final
+    # stage of a persisted plan (session.py), and a coalesced cache no
+    # longer matches the width of the rank side's shuffle, so every
+    # iteration's join would re-shuffle the edges. AQE never coalesces
+    # a repartition that names its partition count.
+    width = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    edges_deg = tracked_persist(sym.join(deg, "src").repartition(width, "src"))
     # The node set and its 1-row count are PERSISTED (optimization round
     # 17): n_df is broadcast into r0 and into every iteration's rank
     # update, and without the persist each of those four broadcasts

@@ -160,6 +160,7 @@ def _zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.sources.parquet import load_table as _lt
     from full_data_infrastructure_spark.sources.sinks import compact
     from full_data_infrastructure_spark.streaming.replay import replay_workdir
@@ -172,7 +173,7 @@ def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Simulate micro-batch accretion: 64 files, each a few KB at test SFs.
     docs.repartition(64).write.parquet(path)
     compact(spark, path, fmt="parquet", target_file_bytes=4 * 1024 * 1024)
-    return spark.read.parquet(path)
+    return hold_dir(work, spark.read.parquet(path))
 
 
 @register(
@@ -198,6 +199,7 @@ def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jsonl_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_workdir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -206,7 +208,7 @@ def _jsonl_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = replay_workdir("jsonl_roundtrip_")
     path = os.path.join(work, "documents_jsonl")
     docs.write.mode("overwrite").option("compression", "gzip").json(path)
-    return spark.read.schema(docs.schema).json(path)
+    return hold_dir(work, spark.read.schema(docs.schema).json(path))
 
 
 @register(
@@ -236,6 +238,7 @@ def _jsonl_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jsonl_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_workdir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -255,11 +258,12 @@ def _jsonl_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = replay_workdir("jsonl_quarantine_")
     path = os.path.join(work, "documents_jsonl")
     lines.write.mode("overwrite").text(path)
-    return (
+    ingested = (
         spark.read.schema(docs.schema)
         .option("mode", "DROPMALFORMED")
         .json(path)
     )
+    return hold_dir(work, ingested)
 
 
 # ---------------------------------------------------------------------------

@@ -173,9 +173,9 @@ def mixture_keep(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Filter any (doc_id, lang, ...) DataFrame down to the target language
     mixture; rates derive from the INPUT's own per-lang counts, so the
     same helper composes after dedup/filter stages."""
-    weights = spark.createDataFrame(
-        [(lang, float(w)) for lang, w in MIXTURE_WEIGHTS.items()], ["lang", "wt"]
-    )
+    # The oracles' VALUES relation: a literal local table, so the weights
+    # have one definition and need no Python worker to scan.
+    weights = spark.sql(f"SELECT * FROM {_mixture_weights_sql()}")
     n = (
         docs.join(F.broadcast(weights), "lang")
         .groupBy("lang")

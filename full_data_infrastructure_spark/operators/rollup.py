@@ -198,6 +198,7 @@ def _streaming_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_event_ts,
         table_path,
     )
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_workdir,
         symlink_table_files,
@@ -227,14 +228,14 @@ def _streaming_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     snapshot = spark.read.parquet(partials_path)
-    return snapshot.select(
+    return hold_dir(work, snapshot.select(
         F.date_format("bucket", "yyyy-MM-dd HH:00:00").alias("bucket"),
         "event_type",
         "n_events",
         F.col("sum_value").cast("double").alias("sum_value"),
         "min_value",
         "max_value",
-    )
+    ))
 
 
 @register(

@@ -804,8 +804,9 @@ def _pq_artifacts(emb: DataFrame):
     # persisted subs cache and the Lloyd/encode passes that read it —
     # inherits the scan's partitioning, and a single-row-group scan
     # serializes the whole PQ construction on one task. The cache
-    # is written already fanned out, so every downstream encode pass
-    # parallelizes too. No-op at warehouse scale (see fan_out).
+    # is written already fanned out, at fan_out's fixed width, which AQE
+    # does not coalesce, so every downstream encode pass parallelizes
+    # too. No-op at warehouse scale (see fan_out).
     en = fan_out(emb).select(
         "vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("en")
     )

@@ -265,6 +265,7 @@ def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_parquet,
@@ -287,11 +288,11 @@ def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     out_path = run_stream_to_parquet(sessions, work, "sessions")
     snapshot = spark.read.parquet(out_path).filter(F.col("user_id") >= 0)
     seq_w = Window.partitionBy("user_id").orderBy("session_start")
-    return snapshot.select(
+    return hold_dir(work, snapshot.select(
         "user_id",
         F.row_number().over(seq_w).cast("bigint").alias("session_seq"),
         F.col("n").alias("n_events"),
-    )
+    ))
 
 
 @register(
@@ -319,6 +320,7 @@ def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
 def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_parquet,
@@ -344,13 +346,13 @@ def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = spark.read.parquet(out_path).filter(
         ~F.col("event_type").eqNullSafe("__sentinel__")
     )
-    return snapshot.select(
+    return hold_dir(work, snapshot.select(
         F.date_format("window_start", "yyyy-MM-dd HH:00:00").alias(
             "window_start"
         ),
         "event_type",
         F.col("n").alias("n_events"),
-    )
+    ))
 
 
 @register(
@@ -384,6 +386,7 @@ def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_parquet,
@@ -411,13 +414,13 @@ def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = spark.read.parquet(out_path).filter(
         ~F.col("event_type").eqNullSafe("__sentinel__")
     )
-    return snapshot.select(
+    return hold_dir(work, snapshot.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:00").alias(
             "window_start"
         ),
         "event_type",
         F.col("n").alias("n_events"),
-    )
+    ))
 
 
 @register(
@@ -444,6 +447,7 @@ def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "dedup", "streaming", "events"),
 )
 def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_parquet,
@@ -462,9 +466,9 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deduped = dedup_stream(stream, keys=("event_id",), watermark="2 hours")
     out_path = run_stream_to_parquet(deduped, work, "deduped")
-    return spark.read.parquet(out_path).select(
+    return hold_dir(work, spark.read.parquet(out_path).select(
         "event_id", "user_id", "event_type"
-    )
+    ))
 
 
 @register(
@@ -498,6 +502,7 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events"),
 )
 def _streaming_ema_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_memory,
@@ -515,11 +520,12 @@ def _streaming_ema_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Final state per user = the emission with the highest n_events
     # (strictly monotonic per key: every appearance adds >= 1 event).
     last_w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
+    last = (
         emissions.withColumn("_rn", F.row_number().over(last_w))
         .filter(F.col("_rn") == 1)
         .select("user_id", "n_events", "ema_value")
     )
+    return hold_dir(work, last)
 
 
 @register(
@@ -624,6 +630,7 @@ def _streaming_funnel_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import (
         replay_stream,
         run_stream_to_parquet,
@@ -680,7 +687,7 @@ def _streaming_funnel_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "first_click")
         .agg(F.min("p_ts").alias("first_purchase"))
     )
-    return conv.select(
+    return hold_dir(work, conv.select(
         "user_id",
         F.date_format("first_click", "yyyy-MM-dd HH:mm:ss").alias(
             "first_click_s"
@@ -689,7 +696,7 @@ def _streaming_funnel_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_purchase_s"
         ),
         F.col("first_purchase").isNotNull().cast("int").alias("converted"),
-    )
+    ))
 
 
 @register(
@@ -1128,6 +1135,7 @@ def _window_range_hour_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import start_scd2_sink
 
@@ -1142,7 +1150,8 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     q.awaitTermination()
-    return scd2_finalize(spark.read.parquet(os.path.join(work, "versions")))
+    versions = spark.read.parquet(os.path.join(work, "versions"))
+    return hold_dir(work, scd2_finalize(versions))
 
 
 @register(
@@ -1164,6 +1173,7 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from full_data_infrastructure_spark.cache import hold_dir
     from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import (
         _key_bucket,
@@ -1207,9 +1217,9 @@ def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataF
     # An all-empty replay never creates a bucket directory; read the
     # snapshot total-on-empty with the version schema the fold writes.
     ver_schema = scd2_versions(events.limit(0)).schema
-    return scd2_finalize(
+    return hold_dir(work, scd2_finalize(
         read_bucketed_snapshot(spark, os.path.join(work, "versions"), ver_schema)
-    )
+    ))
 
 
 @register(

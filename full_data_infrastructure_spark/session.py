@@ -9,7 +9,8 @@ reference is missing:
   skew-join splitting, and dynamic join-strategy switching; this is what makes
   a static plan survive a 1000-executor 100 TB run.
 * **Shuffle partition count** sized by env (``SPARK_GRAFT_CPUS`` locally;
-  thousands on a real cluster — AQE coalesces the excess).
+  thousands on a real cluster — AQE coalesces the excess, in the final stage
+  of persisted plans as well).
 * **Arrow** for any pandas-UDF exchange (the slow path, but 10-100x less slow).
 * **UTC session timezone** so timestamp semantics are stable across engines
   (the DuckDB oracle reads the same parquet as naive UTC).
@@ -56,6 +57,14 @@ def build_session(
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
         ),
+        # Let AQE coalesce the final stage of a persisted plan too. Off
+        # (Spark's default), every cache taken after a shuffle is stored
+        # as spark.sql.shuffle.partitions partitions, near-empty at small
+        # scale, and every later scan of it launches that many tasks. A
+        # cache whose consumers rely on its hash layout states it with a
+        # fixed-width repartition, which AQE never coalesces
+        # (joins.pagerank's edge table).
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         # 100 TB note: on a cluster this is set to ~2-3x total cores (e.g.
         # 8000 for 1000 executors x 4 cores) and AQE coalesces small stages.
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),

@@ -9,9 +9,10 @@ computation. Doing that deterministically needs two pieces of harness:
 
 * a work directory that outlives the returned *lazy* plan — the driver
   collects AFTER the builder returns, so the snapshot files must survive
-  until then — but not the process: every dir is registered for
-  ``atexit`` removal so repeated builder invocations don't
-  accumulate disk.
+  until then — but not the plan: every dir is registered with
+  ``cache.release_persisted``, which removes it once the builder's
+  returned plan (``cache.hold_dir``) is dropped, so repeated builder
+  invocations don't accumulate disk. ``atexit`` removal is the backstop.
 * control over micro-batch ORDER: Spark's file source orders files by
   modification time, while parallel write tasks finish in arbitrary
   order. ``ordered_file_split`` range-splits on the offset column and
@@ -33,12 +34,17 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
+from full_data_infrastructure_spark.cache import track_dir
+
 
 def replay_workdir(prefix: str) -> str:
-    """mkdtemp + atexit cleanup: alive for the plan's lifetime, gone at
-    process exit."""
+    """mkdtemp registered with ``cache.release_persisted``: the builder
+    ties it to its returned plan with ``cache.hold_dir``, and the first
+    release after that plan is dropped removes it. ``atexit`` removes
+    whatever a process still holds when it exits."""
     work = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
+    track_dir(work)
     return work
 
 

@@ -2007,3 +2007,39 @@ def test_release_persisted_releases_dead_builder_locals(spark, sf_dir):
         "JVM CacheManager still holds entries after release_persisted — "
         "the next canonically-equal build would reuse stale cached data"
     )
+
+
+def test_release_persisted_removes_dropped_replay_work_dirs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A rebuilt streaming query must leave no work dir behind once its
+    results are dropped and release_persisted runs. A result that is
+    still referenced keeps its dir through the release and stays
+    readable: a harness may check its last pass after releasing."""
+    import gc
+    import tempfile
+
+    from full_data_infrastructure_spark.cache import release_persisted
+    from full_data_infrastructure_spark.queries import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def work_dirs() -> list[str]:
+        return [d for d in os.listdir(tmp_path) if d.startswith("upsert_snapshot_")]
+
+    build = REGISTRY["streaming_upsert_snapshot"].build
+    release_persisted()
+    first = build(spark, sf_dir)
+    n_rows = first.count()
+    second = build(spark, sf_dir)
+    assert len(work_dirs()) == 2
+    del first
+    gc.collect()
+    release_persisted()
+    assert len(work_dirs()) == 1, "the dropped build's work dir survived"
+    assert second.count() == n_rows > 0
+    del second
+    gc.collect()
+    release_persisted()
+    assert work_dirs() == [], "the rebuilt query left its work dir behind"

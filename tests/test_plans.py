@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -730,6 +731,48 @@ def test_cooccurrence_reuses_distinct_projection(spark, sf_dir, queries):
         assert covered, f"uncached FileScan:\n{line}\n\n{plan}"
 
 
+def _plan_node(line: str) -> str:
+    """Operator text of one tree-string line, without the tree prefix
+    and the whole-stage-codegen ``*(n)`` marker."""
+    return re.sub(r"^\*\(\d+\) ", "", line.lstrip(" :+-"))
+
+
+def test_pagerank_iterations_reuse_cached_edge_layout(spark, sf_dir, queries):
+    """pagerank persists its edge table hash-partitioned on src so that
+    every iteration's join reuses that layout and only the node-sized
+    rank table moves. In the executed plan no Exchange may sit directly
+    over a scan of the cached edge table (through nothing but a Filter,
+    a Project or the cache's query stage): that would be one edge
+    shuffle per iteration. AQE coalesces cached plans (session.py), so
+    the layout holds only while the cache keeps a fixed width."""
+    from full_data_infrastructure_spark.cache import release_persisted
+
+    release_persisted()
+    try:
+        df = queries["pagerank_parts"](spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release_persisted()
+    lines = plan.splitlines()
+    # The top-level final plan; the initial plan printed after it is the
+    # pre-AQE one, planned before the cache's layout was known.
+    final = lines[: lines.index("+- == Initial Plan ==")]
+    edge_scan = re.compile(r"InMemoryTableScan \[src#\d+L?, dst#\d+L?, d#\d+L?\]")
+    assert sum(bool(edge_scan.match(_plan_node(l))) for l in final) == 3, plan
+    passthrough = ("Filter", "Project", "TableCacheQueryStage", "InputAdapter")
+    for i, line in enumerate(final):
+        if not _plan_node(line).startswith("Exchange"):
+            continue
+        for below in final[i + 1 :]:
+            node = _plan_node(below)
+            assert not edge_scan.match(node), (
+                f"iteration join re-shuffles the cached edges:\n{line}\n\n{plan}"
+            )
+            if not node.startswith(passthrough):
+                break
+
+
 def test_fuzzy_match_blocks_no_cartesian(qplan):
     """The fuzzy ER join must execute as an equi-join on the mask keys —
     TPC-H supplier names all share one length, so any plan that falls
@@ -950,6 +993,37 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
         assert "coalesced" in plan, f"AQE did not coalesce:\n{plan}"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_aqe_coalesces_cached_plan_partitions(spark, sf_dir):
+    """session.py lets AQE coalesce the final stage of a persisted plan
+    too: a tracked persist taken after a shuffle must be stored in fewer
+    partitions than spark.sql.shuffle.partitions, not as one near-empty
+    block per static reducer that every later scan of the cache launches
+    a task for. The MinHash (doc_id, sig, sz) cache is the probe: one
+    row per document behind a doc_id aggregation."""
+    from full_data_infrastructure_spark.cache import (
+        release_persisted,
+        tracked_persist,
+    )
+    from full_data_infrastructure_spark.operators.dedup import (
+        _sig_sizes_from_hashed,
+        hashed_shingles,
+    )
+    from full_data_infrastructure_spark.sources.parquet import load_table
+
+    release_persisted()
+    try:
+        docs = load_table(spark, sf_dir, "documents")
+        sig_sz = tracked_persist(_sig_sizes_from_hashed(hashed_shingles(docs)))
+        assert sig_sz.count() > 0
+        n_parts = sig_sz.rdd.getNumPartitions()
+    finally:
+        release_persisted()
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_parts < width, (
+        f"cached plan kept {n_parts} of {width} static shuffle partitions"
+    )
 
 
 def test_aqe_switches_smj_to_broadcast_at_runtime(spark):
