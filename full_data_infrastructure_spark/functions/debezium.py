@@ -151,7 +151,7 @@ def build_envelopes(events: DataFrame) -> DataFrame:
     "the literal 'error' type is a tombstone: a NULL event_type is still "
     "a change event and must survive the roundtrip, so the oracle "
     "filters IS DISTINCT FROM, not != (which would three-valued-drop "
-    "null-typed rows; pinned by the null-injected parity sweep, r8).",
+    "null-typed rows; pinned by the null-injected parity sweep).",
     tags=("reference", "cdc", "json"),
 )
 def _debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,9 +170,9 @@ def _debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_upsert_snapshot",
-    """
+# The global latest-per-key state of the events changelog, computed
+# directly: the oracle of every upsert sink replay, however it was batched.
+_UPSERT_LATEST_ORACLE = """
     WITH ordered AS (
         SELECT user_id, event_id,
                strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
@@ -186,7 +186,30 @@ def _debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id, ts_s, event_type, value
     FROM ordered WHERE rn = 1 AND op != 'd'
-    """,
+    """
+
+
+def _upsert_changelog(events: DataFrame, *extra: Column) -> DataFrame:
+    """The events table as a keyed changelog for the upsert sinks:
+    signup=create, error=delete, every other type=update, event_id the
+    offset. ``extra`` columns ride along (the bucketed replay offset)."""
+    return events.select(
+        "user_id",
+        "event_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
+        "event_type",
+        "value",
+        F.when(F.col("event_type") == "signup", F.lit("c"))
+        .when(F.col("event_type") == "error", F.lit("d"))
+        .otherwise(F.lit("u"))
+        .alias("op"),
+        *extra,
+    )
+
+
+@register(
+    "streaming_upsert_snapshot",
+    _UPSERT_LATEST_ORACLE,
     doc="CDC upsert-sink parity (T8's sink side): events become a mutable "
     "keyed changelog (signup=create, error=delete, rest=update; "
     "event_id is the offset/LSN), range-split into event_id-ordered "
@@ -207,18 +230,7 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import start_upsert_sink
 
-    events = load_table(spark, sf_dir, "events")
-    changes = events.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "event_type",
-        "value",
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
-    )
+    changes = _upsert_changelog(load_table(spark, sf_dir, "events"))
     # Range-split by the offset column with mtimes stamped in part order
     # (replay.py): micro-batches replay the changelog in event_id order,
     # the per-key ordering a keyed topic partition guarantees.
@@ -241,21 +253,7 @@ def _streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_upsert_bucketed_snapshot",
-    """
-    WITH ordered AS (
-        SELECT user_id, event_id,
-               strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-               event_type, value,
-               CASE WHEN event_type = 'signup' THEN 'c'
-                    WHEN event_type = 'error' THEN 'd'
-                    ELSE 'u' END AS op,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                                  ORDER BY event_id DESC) AS rn
-        FROM events
-    )
-    SELECT user_id, ts_s, event_type, value
-    FROM ordered WHERE rn = 1 AND op != 'd'
-    """,
+    _UPSERT_LATEST_ORACLE,
     doc="The BUCKETED upsert sink under a key-sparse workload — the actual "
     "100 TB path. Same changelog and the "
     "same latest-per-key oracle as streaming_upsert_snapshot (final state "
@@ -281,17 +279,8 @@ def _streaming_upsert_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> Dat
     )
 
     n_buckets = 16
-    events = load_table(spark, sf_dir, "events")
-    changes = events.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "event_type",
-        "value",
-        F.when(F.col("event_type") == "signup", F.lit("c"))
-        .when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
+    changes = _upsert_changelog(
+        load_table(spark, sf_dir, "events"),
         # Bucket-major replay offset: all of a bucket's changes replay
         # together (event_id-ordered within), so each micro-batch touches
         # ~2 of the sink's 16 snapshot buckets.  2^40 clears any event_id.

@@ -21,6 +21,8 @@ from full_data_infrastructure_spark.functions.money import (
     sql_money_avg,
     sql_money_sum,
 )
+from full_data_infrastructure_spark.operators.text import TOKENS_SQL
+from full_data_infrastructure_spark.operators.windows import GAP_SECONDS_SQL, gap_seconds
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 
@@ -335,7 +337,7 @@ def _grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on integer CENTS: even-count medians interpolate (a+b)/2, and over "
     "doubles the two engines' interpolation differs in the last ulp — "
     "right at a decimal tie when nulls shift a group to even count "
-    "(caught by the null-injected parity sweep, round 8). Integer "
+    "(caught by the null-injected parity sweep). Integer "
     "medians are exact halves in both engines, |v - med| stays exact, "
     "and the /100.0 display division is the same bits on both sides, so "
     "the derived statistics ship unrounded.",
@@ -558,10 +560,9 @@ def heavy_hitters(
 
 @register(
     "heavy_hitters_tokens",
-    """
+    f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> length(t) > 0)) AS tok
+        SELECT unnest({TOKENS_SQL}) AS tok
         FROM documents
     ),
     tot AS (SELECT COUNT(*) AS n FROM toks),
@@ -636,7 +637,7 @@ def _event_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # Persisted: the distinct projection feeds totals, singles, and both
     # sides of the pair self-join — without the persist that (user, type)
-    # distinct shuffle recomputes up to four times (ADVICE r5).
+    # distinct shuffle recomputes up to four times.
     per_user = tracked_persist(events.select("user_id", "event_type").distinct())
     totals = per_user.agg(
         F.countDistinct("user_id").alias("n_users")
@@ -897,15 +898,8 @@ def _repeat_customer_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "max_staleness_by_user",
-    """
-    WITH gaps AS (
-        SELECT user_id, ts,
-               epoch_us(ts) // 1000000
-               - epoch_us(LAG(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id)) // 1000000
-                   AS gap_s
-        FROM events
-    )
+    f"""
+    WITH gaps AS (SELECT user_id, ts, {GAP_SECONDS_SQL} AS gap_s FROM events)
     SELECT user_id,
            CAST(MAX(gap_s) AS BIGINT) AS max_gap_s,
            MAX(ts) AS last_seen
@@ -923,14 +917,8 @@ def _repeat_customer_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "aggregate", "events"),
 )
 def _max_staleness_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.expr("unix_micros(ts) div 1000000") - F.expr(
-        "unix_micros(lag(ts) over (partition by user_id order by ts, event_id)) div 1000000"
-    )
-    gaps = events.select("user_id", "ts", gap.alias("gap_s"))
+    gaps = events.select("user_id", "ts", gap_seconds().alias("gap_s"))
     return (
         gaps.groupBy("user_id")
         .agg(

@@ -26,7 +26,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from full_data_infrastructure_spark.operators.dedup import doc_tokens
+from full_data_infrastructure_spark.operators.dedup import (
+    doc_tokens,
+    exploded_shingles,
+    shingle_ctes,
+)
+from full_data_infrastructure_spark.operators.text import TOKENS_SQL
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 
@@ -168,11 +173,10 @@ def _stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "repetition_signals",
-    """
+    f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
+               {TOKENS_SQL} AS toks
         FROM documents
     ),
     base AS (
@@ -251,21 +255,13 @@ EVAL_BUCKET_MAX = "0c"  # md5 buckets '00'..'0c' = ~5% of docs act as the eval s
 CONTAM_THRESHOLD = 0.25
 
 
-@register(
-    "decontaminate_overlap",
-    f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= 3
-    ),
+def _decontam_scores_sql(source: str = "documents") -> str:
+    """Parenthesized (doc_id, n_shingles, n_shared) subquery: per
+    train-split doc, its shingle count and how many of them occur in the
+    eval split — the one scoring fragment of decontaminate_overlap and
+    contaminated_ids_sql."""
+    return f"""(
+    WITH {shingle_ctes(source)},
     eval_sh AS (
         SELECT DISTINCT sh FROM sh
         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '{EVAL_BUCKET_MAX}'
@@ -273,23 +269,26 @@ CONTAM_THRESHOLD = 0.25
     train_sh AS (
         SELECT * FROM sh
         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) > '{EVAL_BUCKET_MAX}'
-    ),
-    scored AS (
-        SELECT t.doc_id,
-               COUNT(*) AS n_shingles,
-               -- CAST: DuckDB SUM(int) is HUGEINT, which pandas widens to
-               -- float64 and the driver's value hash then mismatches
-               -- Spark's int64. BIGINT keeps both sides integer-typed.
-               CAST(SUM(CASE WHEN e.sh IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_shared
-        FROM train_sh t LEFT JOIN eval_sh e ON t.sh = e.sh
-        GROUP BY t.doc_id
     )
+    SELECT t.doc_id,
+           COUNT(*) AS n_shingles,
+           -- CAST: DuckDB SUM(int) is HUGEINT, which pandas widens to
+           -- float64 and the driver's value hash then mismatches
+           -- Spark's int64. BIGINT keeps both sides integer-typed.
+           CAST(SUM(CASE WHEN e.sh IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_shared
+    FROM train_sh t LEFT JOIN eval_sh e ON t.sh = e.sh
+    GROUP BY t.doc_id)"""
+
+
+@register(
+    "decontaminate_overlap",
+    f"""
     SELECT doc_id, n_shingles, n_shared,
            CAST(n_shared AS DOUBLE) / n_shingles AS contam_frac,
            CAST(n_shared AS DOUBLE) / n_shingles >= {CONTAM_THRESHOLD}
                AS contaminated
-    FROM scored
+    FROM {_decontam_scores_sql()} scored
     """,
     doc="Benchmark decontamination: each training doc scored by the "
     "fraction of its word-3-gram shingles that appear anywhere in the "
@@ -299,10 +298,6 @@ CONTAM_THRESHOLD = 0.25
     tags=("llm", "curation", "dedup"),
 )
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as _F
-
-    from full_data_infrastructure_spark.operators.dedup import exploded_shingles
-
     docs = load_table(spark, sf_dir, "documents")
     sh = exploded_shingles(docs)
     bucket = hash_bucket(F.col("doc_id"))
@@ -314,7 +309,7 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train_sh = sh.filter(bucket > EVAL_BUCKET_MAX)
     scored = (
-        train_sh.join(_F.broadcast(eval_sh), "sh", "left")
+        train_sh.join(F.broadcast(eval_sh), "sh", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
@@ -437,38 +432,9 @@ def _snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def contaminated_ids_sql(source: str = "documents") -> str:
     """Parenthesized subquery of the train-split doc_ids whose eval-shingle
     overlap crosses CONTAM_THRESHOLD — the reusable oracle fragment
-    corpus_pipeline_full subtracts before dedup. Mirrors the
-    decontaminate_overlap oracle exactly, minus the score projection."""
+    corpus_pipeline_full subtracts before dedup."""
     return f"""(
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM {source}
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= 3
-    ),
-    eval_sh AS (
-        SELECT DISTINCT sh FROM sh
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '{EVAL_BUCKET_MAX}'
-    ),
-    train_sh AS (
-        SELECT * FROM sh
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) > '{EVAL_BUCKET_MAX}'
-    ),
-    scored AS (
-        SELECT t.doc_id,
-               COUNT(*) AS n_shingles,
-               CAST(SUM(CASE WHEN e.sh IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_shared
-        FROM train_sh t LEFT JOIN eval_sh e ON t.sh = e.sh
-        GROUP BY t.doc_id
-    )
-    SELECT doc_id FROM scored
+    SELECT doc_id FROM {_decontam_scores_sql(source)} scored
     WHERE CAST(n_shared AS DOUBLE) / n_shingles >= {CONTAM_THRESHOLD})"""
 
 

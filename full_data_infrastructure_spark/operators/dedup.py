@@ -33,6 +33,7 @@ from full_data_infrastructure_spark.operators.similarity import (
     nearest_cell,
     stride_centroids,
 )
+from full_data_infrastructure_spark.operators.text import TOKENS_SQL
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import fan_out, load_table
 
@@ -68,11 +69,18 @@ def word_shingles(toks: Column, n: int = NGRAM) -> Column:
     the exchange existed to escape).
     """
     gram_count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    return F.array_distinct(_ngram_array(toks, gram_count, n))
+
+
+def _ngram_array(toks: Column, gram_count: Column, n: int = NGRAM) -> Column:
+    """The first ``gram_count`` space-joined word n-grams of ``toks``, in
+    position order (duplicates kept): n aligned ``slice`` views folded
+    with ``zip_with``."""
     parts = [F.slice(toks, j + 1, gram_count) for j in range(n)]
     acc = parts[-1]
     for prev in reversed(parts[:-1]):
         acc = F.zip_with(prev, acc, lambda a, b: F.concat_ws(" ", a, b))
-    return F.array_distinct(acc)
+    return acc
 
 
 def exploded_shingles(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -378,11 +386,42 @@ def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING)
     )
 
 
-def _cc_oracle_sql() -> str:
-    """Recursive-CTE twin: transitive closure over the symmetric pair
-    graph, then min reachable id per vertex."""
-    return f"""
-    WITH RECURSIVE pairs AS ({_ngram_jaccard_sql(JACCARD_THRESHOLD)}),
+def shingle_ctes(source: str = "documents") -> str:
+    """CTE items over ``source``: ``toks`` (doc_id, lowercased whitespace
+    tokens), ``g`` (doc_id, 0-based pos, word-NGRAM shingle at pos) and
+    ``sh`` (doc_id, distinct shingle) — the DuckDB mirror of
+    :func:`exploded_shingles`, shared by every shingle oracle."""
+    return f"""toks AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {source}),
+    g AS (
+        SELECT doc_id, i - 1 AS pos,
+               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
+        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
+        WHERE len(toks) >= {NGRAM}
+    ),
+    sh AS (SELECT DISTINCT doc_id, sh FROM g)"""
+
+
+def _pair_overlap_ctes(source: str = "documents") -> str:
+    """:func:`shingle_ctes` plus ``sizes`` (doc_id, sz) and ``inter``
+    (doc_a < doc_b, shared-shingle count) — the DuckDB mirror of
+    :func:`_self_intersections` and its size table."""
+    return f"""{shingle_ctes(source)},
+    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    )"""
+
+
+def cc_labels_sql(pairs: str) -> str:
+    """Parenthesized (doc_id, cluster_id) subquery: the recursive-CTE
+    mirror of :func:`connected_components` over the (doc_a, doc_b) rows
+    of the ``pairs`` query — transitive closure of the symmetric pair
+    graph, then the min reachable id per vertex. Only vertices with at
+    least one pair appear, as in the engine's labels."""
+    return f"""(
+    WITH RECURSIVE pairs AS ({pairs}),
     edges AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
         UNION
@@ -393,12 +432,9 @@ def _cc_oracle_sql() -> str:
         UNION
         SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
     )
-    SELECT s AS doc_id,
-           LEAST(s, MIN(d)) AS cluster_id,
-           LEAST(s, MIN(d)) = s AS is_keeper
+    SELECT s AS doc_id, LEAST(s, MIN(d)) AS cluster_id
     FROM reach
-    GROUP BY s
-    """
+    GROUP BY s)"""
 
 
 # ---------------------------------------------------------------------------
@@ -440,24 +476,7 @@ def _ngram_jaccard_sql(threshold: float, source: str = "documents") -> str:
     """``source`` lets pipeline oracles run the identical pair SQL over a
     pre-filtered CTE instead of the base table (corpus_pipeline_full)."""
     return f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM {source}
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= {NGRAM}
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
+    WITH {_pair_overlap_ctes(source)}
     SELECT doc_a, doc_b,
            CAST(inter AS DOUBLE)
                  / CAST(sa.sz + sb.sz - inter AS DOUBLE) AS jaccard
@@ -475,18 +494,7 @@ INCREMENT_MOD = 20  # doc_id % 20 == 0 plays the freshly-arrived batch
 @register(
     "dedup_incremental",
     f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= {NGRAM}
-    ),
+    WITH {shingle_ctes()},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
     inter AS (
         SELECT n.doc_id AS new_doc_id, c.doc_id AS dup_of, COUNT(*) AS inter
@@ -622,7 +630,10 @@ def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_cluster_cc",
-    _cc_oracle_sql(),
+    f"""
+    SELECT doc_id, cluster_id, cluster_id = doc_id AS is_keeper
+    FROM {cc_labels_sql(_ngram_jaccard_sql(JACCARD_THRESHOLD))} cc
+    """,
     doc="Near-dup cluster resolution: connected components over the exact "
     "n-gram-Jaccard pair graph via alternating large-star/small-star "
     "rounds (the O(log^2 n) 100 TB path; recursive-CTE oracle). Emits "
@@ -644,24 +655,10 @@ def _dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_survivors",
     f"""
-    WITH RECURSIVE pairs AS ({_ngram_jaccard_sql(JACCARD_THRESHOLD)}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(s, d) AS (
-        SELECT s, d FROM edges
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ),
-    cc AS (
-        SELECT s AS doc_id, LEAST(s, MIN(d)) AS cluster_id
-        FROM reach GROUP BY s
-    )
     SELECT d.doc_id, d.lang, d.source
     FROM documents d
-    LEFT JOIN cc ON d.doc_id = cc.doc_id
+    LEFT JOIN {cc_labels_sql(_ngram_jaccard_sql(JACCARD_THRESHOLD))} cc
+      ON d.doc_id = cc.doc_id
     WHERE cc.doc_id IS NULL OR cc.cluster_id = d.doc_id
     """,
     doc="End-to-end near-dedup materialization: drop every non-canonical "
@@ -726,18 +723,7 @@ def _all_pair_cosines(withn: DataFrame) -> DataFrame:
 @register(
     "dup_span_signal",
     f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= {NGRAM}
-    ),
+    WITH {shingle_ctes()},
     freq AS (SELECT sh, COUNT(*) AS n_docs FROM sh GROUP BY sh)
     SELECT s.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_shingles,
@@ -785,22 +771,8 @@ def _dup_span_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_span_removal",
     f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id, i - 1 AS pos,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= {NGRAM}
-    ),
-    freq AS (
-        SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM g)
-        GROUP BY sh HAVING COUNT(*) >= 2
-    ),
+    WITH {shingle_ctes()},
+    freq AS (SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) >= 2),
     bad AS (
         SELECT DISTINCT g.doc_id, g.pos + u.o AS p
         FROM g JOIN freq USING (sh), UNNEST([0, 1, 2]) AS u(o)
@@ -840,13 +812,9 @@ def _dup_span_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tokd = docs.select("doc_id", doc_tokens().alias("toks"))
-    # Positional grams: same slice/zip_with fold as word_shingles but
-    # WITHOUT the distinct — position matters here.
-    gram_count = F.size("toks") - (NGRAM - 1)
-    parts = [F.slice("toks", j + 1, gram_count) for j in range(NGRAM)]
-    acc = parts[-1]
-    for prev in reversed(parts[:-1]):
-        acc = F.zip_with(prev, acc, lambda a, b: F.concat_ws(" ", a, b))
+    # Positional grams: word_shingles' fold WITHOUT the distinct —
+    # position matters here.
+    acc = _ngram_array(F.col("toks"), F.size("toks") - (NGRAM - 1))
     grams = (
         tokd.filter(F.size("toks") >= NGRAM)
         .select("doc_id", F.posexplode(acc).alias("pos", "sh"))
@@ -891,24 +859,7 @@ CONTAINMENT_THRESHOLD = 0.85
 @register(
     "dedup_containment",
     f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS sh
-        FROM toks, UNNEST(range(1, len(toks) - 1)) AS r(i)
-        WHERE len(toks) >= {NGRAM}
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
+    WITH {_pair_overlap_ctes()},
     both_dirs AS (
         SELECT doc_a AS contained_id, doc_b AS container_id,
                CAST(inter AS DOUBLE) / CAST(sa.sz AS DOUBLE) AS containment
@@ -1510,24 +1461,10 @@ def cosine_histogram_over_candidates(
 @register(
     "dup_cluster_size_histogram",
     f"""
-    WITH RECURSIVE pairs AS ({_ngram_jaccard_sql(JACCARD_THRESHOLD)}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(s, d) AS (
-        SELECT s, d FROM edges
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ),
-    cc AS (
-        SELECT s AS doc_id, LEAST(s, MIN(d)) AS cluster_id
-        FROM reach GROUP BY s
-    ),
-    sizes AS (
+    WITH sizes AS (
         SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-        FROM cc GROUP BY cluster_id
+        FROM {cc_labels_sql(_ngram_jaccard_sql(JACCARD_THRESHOLD))} cc
+        GROUP BY cluster_id
     )
     SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
     FROM sizes GROUP BY cluster_size

@@ -82,7 +82,7 @@ def enrich_with_distance(
                     last_call = time.monotonic()
                 # A null mode must stay NULL through the batch boundary —
                 # str(None) would smuggle the string 'None' into the lake
-                # (caught by the null-injected parity sweep, round 8).
+                # (caught by the null-injected parity sweep).
                 mode_norm = None if pd.isna(mode) else str(mode)
                 try:
                     distance_m, duration_s = provider(int(key), mode_norm)

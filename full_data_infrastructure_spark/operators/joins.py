@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 from full_data_infrastructure_spark.functions.money import (
     money,
     money_sum,
-    sql_money,
     sql_money_sum,
 )
+from full_data_infrastructure_spark.operators.windows import session_seq, session_seq_sql
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 
@@ -473,7 +473,7 @@ def fuzzy_match(
     The blocking is exact ONLY for edit distance <= 1 on equal-length
     strings: single-position masks cannot reach a pair two substitutions
     apart, so a ``max_lev >= 2`` call would silently drop qualifying
-    pairs the blocking never generates (ADVICE r6). Guarded below;
+    pairs the blocking never generates. Guarded below;
     deeper radii need deletion-neighborhood keys of that depth."""
     if max_lev != 1:
         raise ValueError(
@@ -703,8 +703,8 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
     # a repartition that names its partition count.
     width = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     edges_deg = tracked_persist(sym.join(deg, "src").repartition(width, "src"))
-    # The node set and its 1-row count are PERSISTED (optimization round
-    # 17): n_df is broadcast into r0 and into every iteration's rank
+    # The node set and its 1-row count are PERSISTED: n_df is broadcast
+    # into r0 and into every iteration's rank
     # update, and without the persist each of those four broadcasts
     # re-ran the distinct + count aggregation over the edge table — three
     # redundant corpus passes for one scalar. Both caches are node-sized
@@ -824,29 +824,10 @@ def _pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_overlap_pairs",
-    """
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id)
-                         > INTERVAL 30 MINUTE
-                    OR LAG(ts) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) IS NULL
-               THEN 1 ELSE 0 END AS new_session
-        FROM events
-    ),
-    sess AS (
-        SELECT user_id,
-               CAST(SUM(new_session) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS seq,
-               ts
-        FROM flagged
-    ),
-    bounds AS (
-        SELECT user_id, seq, MIN(ts) AS s, MAX(ts) AS e
-        FROM sess GROUP BY user_id, seq
+    f"""
+    WITH bounds AS (
+        SELECT user_id, session_seq AS seq, MIN(ts) AS s, MAX(ts) AS e
+        FROM {session_seq_sql()} sess GROUP BY user_id, session_seq
     )
     SELECT a.user_id AS user_a, b.user_id AS user_b,
            CAST(COUNT(*) AS BIGINT) AS n_concurrent
@@ -871,17 +852,7 @@ def _session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from full_data_infrastructure_spark.cache import tracked_persist
 
     events = load_table(spark, sf_dir, "events")
-    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(order_w)
-    new_session = F.when(
-        prev_ts.isNull()
-        | ((F.col("ts") - prev_ts) > F.expr("INTERVAL 30 MINUTES")),
-        1,
-    ).otherwise(0)
-    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = events.select(
-        "user_id", "ts", F.sum(new_session).over(run_w).alias("seq")
-    )
+    sess = events.select("user_id", "ts", session_seq().alias("seq"))
     bounds = sess.groupBy("user_id", "seq").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     )

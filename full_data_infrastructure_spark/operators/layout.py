@@ -267,7 +267,7 @@ def _jsonl_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic training-shard layout (round 8)
+# Deterministic training-shard layout
 # ---------------------------------------------------------------------------
 
 TRAINING_SHARDS = 16  # demo shard count; a 100 TB corpus uses O(10^4) shards

@@ -34,8 +34,8 @@ DECODED_SCHEMA = (
 # Shared oracle fragment: expand text to its UTF-8 byte values, per code
 # point, in pure SQL — so every byte-level feature oracle below is exact
 # for ANY text, not just ASCII (where code points happen to equal bytes;
-# the pre-round-8 oracles leaned on that and diverged from the real
-# byte-summing UDFs the moment the unicode-injected parity sweep ran).
+# an oracle that leans on that diverges from the real byte-summing UDFs
+# on any non-ASCII text, as the unicode-injected parity sweep shows).
 _UTF8_CASE = """
     CASE WHEN unicode(c) < 128 THEN [unicode(c)]
          WHEN unicode(c) < 2048 THEN [192 + unicode(c) // 64,
@@ -304,10 +304,9 @@ def fake_feature_extract(payload: bytes, dim: int = EMBED_DIM) -> list[float]:
     is correctly rounded on every engine, and the one division after it
     is too — so the emitted doubles are BIT-identical to the oracle's
     ``x / sqrt(list_sum(...))``.  ``** 0.5`` is ``pow``, which is not
-    correctly rounded, and was the repo's single last-ulp cross-engine
-    divergence (round-10 exact-compare audit: 160/161 oracled queries
-    bit-identical on every float column at every tested SF; this was the
-    161st)."""
+    correctly rounded, and was the one oracled query whose floats
+    differed from DuckDB in the last ulp when every float column of every
+    oracled query was compared exactly at every tested SF."""
     import math
 
     hist = [0] * dim

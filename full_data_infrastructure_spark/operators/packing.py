@@ -31,12 +31,30 @@ pandas float64 would break the driver's exact value hash).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from full_data_infrastructure_spark.cache import tracked_persist
-from full_data_infrastructure_spark.operators.curation import hash_bucket
-from full_data_infrastructure_spark.operators.text import tokens
+from full_data_infrastructure_spark.operators.curation import (
+    EVAL_BUCKET_MAX,
+    contaminated_ids_sql,
+    _decontaminate,
+    hash_bucket,
+)
+from full_data_infrastructure_spark.operators.dedup import (
+    JACCARD_THRESHOLD,
+    cc_labels_sql,
+    connected_components,
+    exact_jaccard_pairs,
+    minhash_dedup_pairs,
+    _ngram_jaccard_sql,
+)
+from full_data_infrastructure_spark.operators.text import (
+    TOKENS_SQL,
+    qc_keep_col,
+    qc_keep_sql,
+    tokens,
+)
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 
@@ -51,32 +69,39 @@ MIXTURE_WEIGHTS: dict[str, float] = {
     "de": 0.05,
 }
 
-_TOK_SQL = "len(list_filter(string_split_regex(lower(text), '\\s+'), t -> length(t) > 0))"
+_TOK_SQL = f"len({TOKENS_SQL})"
 
 
-@register(
-    "pack_sequences",
-    f"""
+def pack_sql(source: str, carry: tuple[str, ...] = ()) -> str:
+    """Parenthesized subquery mirroring :func:`pack_assign` over the
+    (doc_id, text, *carry) rows of ``source`` (a table, CTE or
+    parenthesized subquery)."""
+    kept = "".join(f"{c}, " for c in carry)
+    return f"""(
     WITH sized AS (
-        SELECT doc_id,
+        SELECT doc_id, {kept}
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket,
                md5(CAST(doc_id AS VARCHAR)) AS ord_key,
                CAST({_TOK_SQL} AS BIGINT) AS n_tok
-        FROM documents
+        FROM {source}
     ),
     packed AS (
-        SELECT doc_id, bucket, n_tok,
+        SELECT doc_id, {kept}bucket, n_tok,
                CAST(COALESCE(SUM(n_tok) OVER (
                    PARTITION BY bucket ORDER BY ord_key
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
                ), 0) AS BIGINT) AS cum_before
         FROM sized
     )
-    SELECT doc_id, bucket, n_tok,
+    SELECT doc_id, {kept}bucket, n_tok,
            CAST(FLOOR(cum_before / {CONTEXT_TOKENS}.0) AS BIGINT) AS bin_id,
            cum_before % {CONTEXT_TOKENS} AS bin_offset
-    FROM packed
-    """,
+    FROM packed)"""
+
+
+@register(
+    "pack_sequences",
+    f"SELECT * FROM {pack_sql('documents')} packed",
     doc="Sequence packing: documents assigned to 2048-token training bins "
     "within 256 deterministic md5 hash buckets — parallel windowed "
     "cumulative token counts, no global sort. Output: (bucket, bin_id) "
@@ -128,14 +153,16 @@ def _mixture_weights_sql() -> str:
     return f"(VALUES {rows}) AS w(lang, wt)"
 
 
-@register(
-    "mixture_sample",
-    f"""
+def mixture_keep_sql(source: str) -> str:
+    """Parenthesized subquery mirroring :func:`mixture_keep`: the rows of
+    ``source`` (a table or CTE with doc_id and lang) that the target
+    mixture keeps, with rates derived from ``source``'s own counts."""
+    return f"""(
     WITH w AS (SELECT * FROM {_mixture_weights_sql()}),
     n AS (
-        SELECT d.lang, CAST(COUNT(*) AS DOUBLE) AS n_l, ANY_VALUE(w.wt) AS wt
-        FROM documents d JOIN w ON d.lang = w.lang
-        GROUP BY d.lang
+        SELECT s.lang, CAST(COUNT(*) AS DOUBLE) AS n_l, ANY_VALUE(w.wt) AS wt
+        FROM {source} s JOIN w ON s.lang = w.lang
+        GROUP BY s.lang
     ),
     t AS (SELECT MIN(n_l / wt) AS t_max FROM n),
     rates AS (
@@ -146,20 +173,24 @@ def _mixture_weights_sql() -> str:
                    1) AS k
         FROM n CROSS JOIN t
     )
-    SELECT d.doc_id, d.lang, d.source
-    FROM documents d
-    JOIN rates r ON d.lang = r.lang
+    SELECT s.*
+    FROM {source} s
+    JOIN rates r ON s.lang = r.lang
     WHERE r.k >= 256
-       OR substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 2) < printf('%02x', r.k)
-    """,
+       OR substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 2) < printf('%02x', r.k))"""
+
+
+@register(
+    "mixture_sample",
+    f"SELECT doc_id, lang, source FROM {mixture_keep_sql('documents')} kept",
     doc="Domain-mixture sampling: keep a deterministic md5-bucket fraction "
     "of each language sized so the OUTPUT hits the target proportions "
     "(en .50 / zh .20 / es .15 / fr .10 / de .05) at the largest feasible "
     "total T = min(n_l / w_l). The 5-row rate table broadcasts; the keep "
     "predicate is scan-local — the corpus never shuffles and retries "
     "agree. Rate granularity is 1/256 (the 2-hex-char bucket); the rate "
-    "clamps to at least one bucket (GREATEST(k,1), the ADVICE r8 class "
-    "fixed in mixture_sqrt_temperature) so a weighted language whose "
+    "clamps to at least one bucket (GREATEST(k,1), as in "
+    "mixture_sqrt_temperature) so a weighted language whose "
     "fair share floors below 1/256 under extreme count-vs-weight skew "
     "is still sampled, never silently dropped.",
     tags=("llm", "curation", "sampling", "packing"),
@@ -167,6 +198,14 @@ def _mixture_weights_sql() -> str:
 def _mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return mixture_keep(spark, docs).select("doc_id", "lang", "source")
+
+
+def _within_rate() -> Column:
+    """Keep predicate of both mixture samplers: the doc's md5 bucket falls
+    below its group's rate ``k`` (in 1/256 steps; k >= 256 keeps all)."""
+    return (F.col("k") >= 256) | (
+        hash_bucket(F.col("doc_id")) < F.format_string("%02x", F.col("k"))
+    )
 
 
 def mixture_keep(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -191,9 +230,9 @@ def mixture_keep(spark: SparkSession, docs: DataFrame) -> DataFrame:
     t_w = Window.partitionBy(F.lit(1))
     # GREATEST(k, 1): a weighted language whose fair share floors below
     # one 1/256 bucket (extreme count-vs-weight skew) keeps the single
-    # bucket instead of vanishing — same ADVICE r8 class as
-    # mixture_sqrt_temperature's clamp. Never dropping a weighted
-    # language outranks hitting the target share exactly in that regime.
+    # bucket instead of vanishing, as mixture_sqrt_temperature's clamp
+    # does. Never dropping a weighted language outranks hitting the
+    # target share exactly in that regime.
     rates = n.select(
         "lang",
         F.greatest(
@@ -211,19 +250,16 @@ def mixture_keep(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     return (
         docs.join(F.broadcast(rates), "lang")
-        .filter(
-            (F.col("k") >= 256)
-            | (hash_bucket(F.col("doc_id")) < F.format_string("%02x", F.col("k")))
-        )
+        .filter(_within_rate())
         .drop("k")
     )
 
 
-# NULL-lang documents participate in the rebalance as their own group
-# (ADVICE r8): grouping/joining on raw lang would silently drop them via
-# the inner join — consistently on both engines, so no parity sweep could
-# catch it.  The sentinel starts with \x01 so it cannot collide with a
-# real language tag (the corpus schema pins lang to printable ISO codes).
+# NULL-lang documents participate in the rebalance as their own group:
+# grouping/joining on raw lang would silently drop them via the inner
+# join — consistently on both engines, so no parity sweep could catch it.
+# The sentinel starts with \x01 so it cannot collide with a real
+# language tag (the corpus schema pins lang to printable ISO codes).
 _NULL_LANG_SENTINEL = "\x01<unlabeled>"
 
 
@@ -261,8 +297,8 @@ _NULL_LANG_SENTINEL = "\x01<unlabeled>"
     "without upsampling. alpha=1/2 rather than a pow() knob because "
     "IEEE-754 requires correctly-rounded sqrt, so the 1/256 bucket "
     "rates are bit-identical cross-engine where pow(p, 0.3) is not. "
-    "The 1/256-granular rate clamps to at least one bucket (GREATEST(k,1), "
-    "ADVICE r8): without it a language >65536x the smallest floors to "
+    "The 1/256-granular rate clamps to at least one bucket "
+    "(GREATEST(k,1)): without it a language >65536x the smallest floors to "
     "k=0 and is dropped ENTIRELY — the opposite of downsampling, and "
     "routine at web scale where a dominant language dwarfs a minority "
     "one. NULL-lang documents form their own kept-whole group via a "
@@ -292,10 +328,7 @@ def _mixture_sqrt_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.join(F.broadcast(rates), "lk")
-        .filter(
-            (F.col("k") >= 256)
-            | (hash_bucket(F.col("doc_id")) < F.format_string("%02x", F.col("k")))
-        )
+        .filter(_within_rate())
         .select("doc_id", "lang", "source")
     )
 
@@ -382,8 +415,7 @@ CHUNK_STRIDE = 24  # (~45 tokens avg) genuinely produce multi-chunk output
     f"""
     WITH toked AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
+               {TOKENS_SQL} AS toks
         FROM documents
     ),
     sized AS (
@@ -448,74 +480,35 @@ def _chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _corpus_pipeline_oracle() -> str:
-    """Chains the recursive-CC survivor oracle + mixture + packing SQL —
-    the same fragments the individual queries' oracles use."""
-    from full_data_infrastructure_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _ngram_jaccard_sql,
-    )
-
+def _corpus_pipeline_oracle(clean: bool = False) -> str:
+    """Oracle of the exact corpus pipelines, mirroring
+    :func:`_survivors_mixture_pack`: near-dup survivors of the source ->
+    mixture -> packing, each stage its standalone query's fragment. The
+    source is ``documents``, or with ``clean`` the classifier-kept,
+    eval-withheld, decontaminated corpus (:func:`_clean_corpus`)."""
+    source = "clean" if clean else "documents"
+    head = f"""quality_keep AS {qc_keep_sql()},
+    contaminated AS {contaminated_ids_sql()},
+    clean AS (
+        SELECT d.doc_id, d.lang, d.text
+        FROM documents d
+        JOIN quality_keep q ON d.doc_id = q.doc_id
+        LEFT JOIN contaminated c ON d.doc_id = c.doc_id
+        WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 2) > '{EVAL_BUCKET_MAX}'
+          AND c.doc_id IS NULL
+    ),
+    """ if clean else ""
+    labels = cc_labels_sql(_ngram_jaccard_sql(JACCARD_THRESHOLD, source=source))
     return f"""
-    WITH RECURSIVE pairs AS ({_ngram_jaccard_sql(JACCARD_THRESHOLD)}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(s, d) AS (
-        SELECT s, d FROM edges
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ),
-    losers AS (
-        SELECT s AS doc_id FROM reach GROUP BY s HAVING LEAST(s, MIN(d)) <> s
+    WITH {head}losers AS (
+        SELECT doc_id FROM {labels} cc WHERE cluster_id <> doc_id
     ),
     survivors AS (
         SELECT d.doc_id, d.lang, d.text
-        FROM documents d LEFT JOIN losers l ON d.doc_id = l.doc_id
+        FROM {source} d LEFT JOIN losers l ON d.doc_id = l.doc_id
         WHERE l.doc_id IS NULL
-    ),
-    w AS (SELECT * FROM {_mixture_weights_sql()}),
-    n AS (
-        SELECT s.lang, CAST(COUNT(*) AS DOUBLE) AS n_l, ANY_VALUE(w.wt) AS wt
-        FROM survivors s JOIN w ON s.lang = w.lang
-        GROUP BY s.lang
-    ),
-    t AS (SELECT MIN(n_l / wt) AS t_max FROM n),
-    rates AS (
-        SELECT n.lang,
-               GREATEST(
-                   CAST(FLOOR(LEAST(n.wt * t.t_max / n.n_l, 1.0) * 256)
-                        AS BIGINT),
-                   1) AS k
-        FROM n CROSS JOIN t
-    ),
-    sampled AS (
-        SELECT s.doc_id, s.lang, s.text
-        FROM survivors s JOIN rates r ON s.lang = r.lang
-        WHERE r.k >= 256
-           OR substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 2) < printf('%02x', r.k)
-    ),
-    sized AS (
-        SELECT doc_id, lang,
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket,
-               md5(CAST(doc_id AS VARCHAR)) AS ord_key,
-               CAST({_TOK_SQL} AS BIGINT) AS n_tok
-        FROM sampled
-    ),
-    packed AS (
-        SELECT doc_id, lang, bucket, n_tok,
-               CAST(COALESCE(SUM(n_tok) OVER (
-                   PARTITION BY bucket ORDER BY ord_key
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS cum_before
-        FROM sized
     )
-    SELECT doc_id, lang, bucket, n_tok,
-           CAST(FLOOR(cum_before / {CONTEXT_TOKENS}.0) AS BIGINT) AS bin_id,
-           cum_before % {CONTEXT_TOKENS} AS bin_offset
-    FROM packed
+    SELECT * FROM {pack_sql(mixture_keep_sql('survivors'), carry=('lang',))} packed
     """
 
 
@@ -532,11 +525,11 @@ def _survivors_mixture_pack(
     # Persisted because mixture_keep consumes the survivor set TWICE —
     # once to derive the per-language rates, once for the keep join —
     # and without the persist each consumer re-ran the dedup anti-join
-    # and the label chain above it (optimization round 17: two
-    # corpus-sized subtree evaluations for one). Production pipelines
-    # materialize exactly this intermediate to the lake as the dedup
-    # snapshot (the _clean_corpus rationale); the tracked in-memory
-    # persist is its test-scale stand-in.
+    # and the label chain above it (two corpus-sized subtree
+    # evaluations for one). Production pipelines materialize exactly
+    # this intermediate to the lake as the dedup snapshot (the
+    # _clean_corpus rationale); the tracked in-memory persist is its
+    # test-scale stand-in.
     survivors = tracked_persist(
         base.join(losers, "doc_id", "left_anti").select("doc_id", "lang", "text")
     )
@@ -551,13 +544,7 @@ def _clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run this subtree. At production scale this intermediate is WRITTEN
     to the lake as the clean snapshot (every real pipeline materializes
     it); the tracked in-memory persist is its test-scale stand-in."""
-    from full_data_infrastructure_spark.operators.curation import (
-        EVAL_BUCKET_MAX,
-        _decontaminate,
-    )
-    from full_data_infrastructure_spark.operators.text import qc_keep_col
-
-    # NOT fanned out (r17, considered and rejected): the classifier lives
+    # NOT fanned out (considered and rejected): the classifier lives
     # in a WHERE, and Catalyst pushes deterministic predicates below any
     # repartition — a fan_out here leaves the fold on the single-task
     # scan and adds a useless exchange above the join. Scan-local
@@ -593,12 +580,6 @@ def _clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "curation", "packing"),
 )
 def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        connected_components,
-        exact_jaccard_pairs,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     labels = connected_components(exact_jaccard_pairs(docs, JACCARD_THRESHOLD))
     return _survivors_mixture_pack(spark, docs, labels)
@@ -621,11 +602,6 @@ def _corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "curation", "packing", "approx"),
 )
 def _corpus_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.operators.dedup import (
-        connected_components,
-        minhash_dedup_pairs,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     labels = connected_components(minhash_dedup_pairs(docs))
     return _survivors_mixture_pack(spark, docs, labels)
@@ -635,32 +611,11 @@ def _corpus_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pack_bin_stats",
     f"""
-    WITH sized AS (
-        SELECT doc_id,
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket,
-               md5(CAST(doc_id AS VARCHAR)) AS ord_key,
-               CAST({_TOK_SQL} AS BIGINT) AS n_tok
-        FROM documents
-    ),
-    packed AS (
-        SELECT doc_id, bucket, n_tok,
-               CAST(COALESCE(SUM(n_tok) OVER (
-                   PARTITION BY bucket ORDER BY ord_key
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS cum_before
-        FROM sized
-    ),
-    binned AS (
-        SELECT bucket,
-               CAST(FLOOR(cum_before / {CONTEXT_TOKENS}.0) AS BIGINT) AS bin_id,
-               n_tok
-        FROM packed
-    )
     SELECT bucket, bin_id,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
            ROUND(SUM(n_tok) / {CONTEXT_TOKENS}.0, 4) AS fill_fraction
-    FROM binned
+    FROM {pack_sql('documents')} packed
     GROUP BY bucket, bin_id
     """,
     doc="Packing observability: per (bucket, bin) document count, token "
@@ -690,8 +645,7 @@ TOKEN_BUDGET = 20_000  # per-source assembly budget for token_budget_sample
     WITH sized AS (
         SELECT doc_id, source,
                md5(CAST(doc_id AS VARCHAR)) AS ord_key,
-               len(list_filter(string_split_regex(lower(text), '\\s+'),
-                               t -> length(t) > 0)) AS n_tok
+               {_TOK_SQL} AS n_tok
         FROM documents
     ),
     c AS (
@@ -741,98 +695,9 @@ def _token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.filter(F.col("cum_tokens_before") < TOKEN_BUDGET)
 
 
-def _corpus_pipeline_full_oracle() -> str:
-    """The production corpus build end to end: quality-classifier keep ->
-    eval-split withholding + decontamination -> near-dup removal ->
-    mixture -> packing, every fragment the one its standalone query's
-    oracle uses (qc_keep_sql / contaminated_ids_sql / _ngram_jaccard_sql
-    parameterized over the cleaned CTE)."""
-    from full_data_infrastructure_spark.operators.curation import (
-        EVAL_BUCKET_MAX,
-        contaminated_ids_sql,
-    )
-    from full_data_infrastructure_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _ngram_jaccard_sql,
-    )
-    from full_data_infrastructure_spark.operators.text import qc_keep_sql
-
-    return f"""
-    WITH RECURSIVE quality_keep AS {qc_keep_sql()},
-    contaminated AS {contaminated_ids_sql()},
-    clean AS (
-        SELECT d.doc_id, d.lang, d.text
-        FROM documents d
-        JOIN quality_keep q ON d.doc_id = q.doc_id
-        LEFT JOIN contaminated c ON d.doc_id = c.doc_id
-        WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 2) > '{EVAL_BUCKET_MAX}'
-          AND c.doc_id IS NULL
-    ),
-    pairs AS ({_ngram_jaccard_sql(JACCARD_THRESHOLD, source="clean")}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(s, d) AS (
-        SELECT s, d FROM edges
-        UNION
-        SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    ),
-    losers AS (
-        SELECT s AS doc_id FROM reach GROUP BY s HAVING LEAST(s, MIN(d)) <> s
-    ),
-    survivors AS (
-        SELECT d.doc_id, d.lang, d.text
-        FROM clean d LEFT JOIN losers l ON d.doc_id = l.doc_id
-        WHERE l.doc_id IS NULL
-    ),
-    w AS (SELECT * FROM {_mixture_weights_sql()}),
-    n AS (
-        SELECT s.lang, CAST(COUNT(*) AS DOUBLE) AS n_l, ANY_VALUE(w.wt) AS wt
-        FROM survivors s JOIN w ON s.lang = w.lang
-        GROUP BY s.lang
-    ),
-    t AS (SELECT MIN(n_l / wt) AS t_max FROM n),
-    rates AS (
-        SELECT n.lang,
-               GREATEST(
-                   CAST(FLOOR(LEAST(n.wt * t.t_max / n.n_l, 1.0) * 256)
-                        AS BIGINT),
-                   1) AS k
-        FROM n CROSS JOIN t
-    ),
-    sampled AS (
-        SELECT s.doc_id, s.lang, s.text
-        FROM survivors s JOIN rates r ON s.lang = r.lang
-        WHERE r.k >= 256
-           OR substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 2) < printf('%02x', r.k)
-    ),
-    sized AS (
-        SELECT doc_id, lang,
-               substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket,
-               md5(CAST(doc_id AS VARCHAR)) AS ord_key,
-               CAST({_TOK_SQL} AS BIGINT) AS n_tok
-        FROM sampled
-    ),
-    packed AS (
-        SELECT doc_id, lang, bucket, n_tok,
-               CAST(COALESCE(SUM(n_tok) OVER (
-                   PARTITION BY bucket ORDER BY ord_key
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) AS BIGINT) AS cum_before
-        FROM sized
-    )
-    SELECT doc_id, lang, bucket, n_tok,
-           CAST(FLOOR(cum_before / {CONTEXT_TOKENS}.0) AS BIGINT) AS bin_id,
-           cum_before % {CONTEXT_TOKENS} AS bin_offset
-    FROM packed
-    """
-
-
 @register(
     "corpus_pipeline_full",
-    _corpus_pipeline_full_oracle(),
+    _corpus_pipeline_oracle(clean=True),
     doc="The PRODUCTION corpus build, end to end and oracle-checked: "
     "model-based quality filtering (hashed-ngram classifier keep), "
     "eval-split withholding plus 3-gram decontamination, exact-Jaccard "
@@ -846,12 +711,6 @@ def _corpus_pipeline_full_oracle() -> str:
     tags=("llm", "dedup", "curation", "packing", "text"),
 )
 def _corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        connected_components,
-        exact_jaccard_pairs,
-    )
-
     clean = _clean_corpus(spark, sf_dir)
     labels = connected_components(exact_jaccard_pairs(clean, JACCARD_THRESHOLD))
     return _survivors_mixture_pack(spark, clean, labels)
@@ -872,11 +731,6 @@ def _corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "curation", "packing", "text", "approx"),
 )
 def _corpus_pipeline_full_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.operators.dedup import (
-        connected_components,
-        minhash_dedup_pairs,
-    )
-
     clean = _clean_corpus(spark, sf_dir)
     labels = connected_components(minhash_dedup_pairs(clean))
     return _survivors_mixture_pack(spark, clean, labels)

@@ -380,7 +380,7 @@ def _profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.col(c).cast("double")).alias(f"{c}_max"),
             # DECIMAL-exact accumulation (partition-order-insensitive),
             # cast once to double, then round — a double F.avg could
-            # drift a near-.005 ulp across partitionings (ADVICE r5).
+            # drift a near-.005 ulp across partitionings.
             F.round(
                 F.sum(F.col(c).cast("decimal(18,2)")).cast("double")
                 / F.count(c),

@@ -62,7 +62,7 @@ def membership_validation(
     three-valued IN would let nulls slip through ``WHERE NOT
     is_member_valid`` silently — so the flag coalesces to FALSE and the
     message renders the null as the literal 'null' (pinned cross-engine
-    by the null-injected parity sweep, round 8)."""
+    by the null-injected parity sweep)."""
     ok = F.coalesce(F.col(col).isin(allowed), F.lit(False))
     return df.withColumn("is_member_valid", ok).withColumn(
         "error_message",
@@ -295,7 +295,7 @@ def _case_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="F8/F10 date formatting + string concat (sport_generation.py:198; "
     "commute_validation.py:112 f-strings). concat_ws on BOTH sides: the "
     "label skips NULL parts instead of || null-propagating the whole "
-    "string away (pinned by the null-injected parity sweep, round 8).",
+    "string away (pinned by the null-injected parity sweep).",
     tags=("reference", "scalar"),
 )
 def _date_format(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -106,10 +106,12 @@ def with_avg(df: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "hypertable_rollup_hourly",
-    """
-    SELECT date_trunc('hour', ts) AS bucket,
+def _hourly_rollup_sql(bucket: str) -> str:
+    """Hourly partials of the events table aggregated directly — the
+    oracle of the batch and the streaming rollups, which differ only in
+    how the ``bucket`` SQL expression renders the hour."""
+    return f"""
+    SELECT {bucket} AS bucket,
            event_type,
            COUNT(*) AS n_events,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
@@ -117,7 +119,12 @@ def with_avg(df: DataFrame) -> DataFrame:
            MAX(value) AS max_value
     FROM events
     GROUP BY 1, 2
-    """,
+    """
+
+
+@register(
+    "hypertable_rollup_hourly",
+    _hourly_rollup_sql("date_trunc('hour', ts)"),
     doc="Hourly continuous-aggregate partials over events: count / decimal "
     "sum / min / max per (hour, event_type) — the stored layer of the "
     "hypertable rollup. The stored partial stays DECIMAL (order-independent "
@@ -169,16 +176,7 @@ def _rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_rollup_snapshot",
-    """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS bucket,
-           event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-           MIN(value) AS min_value,
-           MAX(value) AS max_value
-    FROM events
-    GROUP BY 1, 2
-    """,
+    _hourly_rollup_sql("strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00')"),
     doc="Streaming continuous-aggregate parity: run the events table "
     "through start_rollup_sink (streaming/sinks.py) as a real "
     "availableNow file stream — micro-batch partials folded into the "

@@ -35,17 +35,20 @@ def tokens(col: Column | str) -> Column:
     )
 
 
+# DuckDB twin of tokens(col("text")), spliced into the oracles.
+TOKENS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), t -> length(t) > 0)"
+
+
 def stopword_hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(words)))
 
 
 @register(
     "text_stats",
-    """
+    f"""
     SELECT doc_id,
            length(text) AS n_chars_measured,
-           len(list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0)) AS n_tokens,
+           len({TOKENS_SQL}) AS n_tokens,
            len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\\s]'))
                AS n_bpe_tokens,
            CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
@@ -80,15 +83,26 @@ def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_id_sql() -> str:
-    """DuckDB oracle mirroring the Spark stopword-score argmax exactly."""
-    scores = ",\n           ".join(
-        f"len(list_filter(toks, t -> t IN ({', '.join(repr(w) for w in words)})))"
-        f" AS score_{lang}"
-        for lang, words in LANG_STOPWORDS.items()
-    )
-    langs = list(LANG_STOPWORDS)
-    # argmax with fixed priority order on ties; 'und' when all scores are 0
+def lang_argmax(langs: list[str]) -> Column:
+    """Argmax over the ``score_<lang>`` columns: the earlier language in
+    ``langs`` wins a tie, and 'und' when every score is 0."""
+    pred = F.lit("und")
+    # build backwards so earlier languages win ties
+    for lang in reversed(langs):
+        others = [o for o in langs if o != lang]
+        before = langs[: langs.index(lang)]
+        cond = F.col(f"score_{lang}") > 0
+        for o in others:
+            cond = cond & (F.col(f"score_{lang}") >= F.col(f"score_{o}"))
+        for b in before:
+            cond = cond & (F.col(f"score_{lang}") > F.col(f"score_{b}"))
+        pred = F.when(cond, F.lit(lang)).otherwise(pred)
+    return pred
+
+
+def lang_argmax_sql(langs: list[str]) -> str:
+    """DuckDB twin of :func:`lang_argmax`: a ``CASE`` over the
+    ``score_<lang>`` columns with the same tie priority and 'und'."""
     when_chain = "CASE\n"
     for lang in langs:
         others = [o for o in langs if o != lang]
@@ -97,12 +111,20 @@ def _lang_id_sql() -> str:
         conds += [f"score_{lang} >= score_{o}" for o in others]
         conds += [f"score_{lang} > score_{b}" for b in before]  # earlier wins ties
         when_chain += f"        WHEN {' AND '.join(conds)} THEN '{lang}'\n"
-    when_chain += "        ELSE 'und' END"
+    return when_chain + "        ELSE 'und' END"
+
+
+def _lang_id_sql() -> str:
+    """DuckDB oracle mirroring the Spark stopword-score argmax exactly."""
+    scores = ",\n           ".join(
+        f"len(list_filter(toks, t -> t IN ({', '.join(repr(w) for w in words)})))"
+        f" AS score_{lang}"
+        for lang, words in LANG_STOPWORDS.items()
+    )
     return f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
+               {TOKENS_SQL} AS toks
         FROM documents
     ),
     scored AS (
@@ -110,7 +132,7 @@ def _lang_id_sql() -> str:
            {scores}
         FROM toks
     )
-    SELECT doc_id, {when_chain} AS lang_pred
+    SELECT doc_id, {lang_argmax_sql(list(LANG_STOPWORDS))} AS lang_pred
     FROM scored
     """
 
@@ -132,19 +154,7 @@ def _lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lang, words in LANG_STOPWORDS.items()
         ],
     )
-    langs = list(LANG_STOPWORDS)
-    pred = F.lit("und")
-    # build backwards so earlier languages win ties
-    for lang in reversed(langs):
-        others = [o for o in langs if o != lang]
-        before = langs[: langs.index(lang)]
-        cond = F.col(f"score_{lang}") > 0
-        for o in others:
-            cond = cond & (F.col(f"score_{lang}") >= F.col(f"score_{o}"))
-        for b in before:
-            cond = cond & (F.col(f"score_{lang}") > F.col(f"score_{b}"))
-        pred = F.when(cond, F.lit(lang)).otherwise(pred)
-    return scored.select("doc_id", pred.alias("lang_pred"))
+    return scored.select("doc_id", lang_argmax(list(LANG_STOPWORDS)).alias("lang_pred"))
 
 
 # Characteristic character trigrams per language (frequency-profile
@@ -177,16 +187,6 @@ def _lang_id_trigram_sql() -> str:
         + f") AS score_{lang}"
         for lang, grams in LANG_TRIGRAMS.items()
     )
-    langs = list(LANG_TRIGRAMS)
-    when_chain = "CASE\n"
-    for lang in langs:
-        others = [o for o in langs if o != lang]
-        before = langs[: langs.index(lang)]
-        conds = [f"score_{lang} > 0"]
-        conds += [f"score_{lang} >= score_{o}" for o in others]
-        conds += [f"score_{lang} > score_{b}" for b in before]
-        when_chain += f"        WHEN {' AND '.join(conds)} THEN '{lang}'\n"
-    when_chain += "        ELSE 'und' END"
     return f"""
     WITH lowered AS (
         SELECT doc_id, lower(text) AS t FROM documents
@@ -196,7 +196,7 @@ def _lang_id_trigram_sql() -> str:
            {scores}
         FROM lowered
     )
-    SELECT doc_id, {when_chain} AS lang_pred
+    SELECT doc_id, {lang_argmax_sql(list(LANG_TRIGRAMS))} AS lang_pred
     FROM scored
     """
 
@@ -224,47 +224,34 @@ def _lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lang, grams in LANG_TRIGRAMS.items()
         ],
     )
-    langs = list(LANG_TRIGRAMS)
-    pred = F.lit("und")
-    for lang in reversed(langs):
-        others = [o for o in langs if o != lang]
-        before = langs[: langs.index(lang)]
-        cond = F.col(f"score_{lang}") > 0
-        for o in others:
-            cond = cond & (F.col(f"score_{lang}") >= F.col(f"score_{o}"))
-        for b in before:
-            cond = cond & (F.col(f"score_{lang}") > F.col(f"score_{b}"))
-        pred = F.when(cond, F.lit(lang)).otherwise(pred)
-    return scored.select("doc_id", pred.alias("lang_pred"))
+    return scored.select("doc_id", lang_argmax(list(LANG_TRIGRAMS)).alias("lang_pred"))
 
 
 @register(
     "quality_score",
-    """
+    f"""
     WITH feats AS (
         SELECT doc_id,
                length(text) AS n_chars,
-               len(list_filter(string_split_regex(lower(text), '\\s+'),
-                               t -> length(t) > 0)) AS n_tokens,
+               len({TOKENS_SQL}) AS n_tokens,
                len(list_filter(string_split_regex(lower(text), '\\s+'),
                                t -> t IN ('the', 'a', 'of', 'and', 'to')))
                    AS n_stop
         FROM documents
         WHERE length(text) > 0
+    ),
+    scored AS (
+        SELECT doc_id,
+               0.4 * LEAST(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
+                 + 0.4 * LEAST(5.0 * CAST(n_stop AS DOUBLE)
+                               / CAST(n_tokens AS DOUBLE), 1.0)
+                 + 0.2 * CASE WHEN n_chars BETWEEN 50 AND 10000 THEN 1.0 ELSE 0.0 END
+                   AS quality
+        FROM feats
     )
-    SELECT doc_id,
-           0.4 * LEAST(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-             + 0.4 * LEAST(5.0 * CAST(n_stop AS DOUBLE)
-                           / CAST(n_tokens AS DOUBLE), 1.0)
-             + 0.2 * CASE WHEN n_chars BETWEEN 50 AND 10000 THEN 1.0 ELSE 0.0 END
-               AS quality,
-           CASE WHEN
-             0.4 * LEAST(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-             + 0.4 * LEAST(5.0 * CAST(n_stop AS DOUBLE)
-                           / CAST(n_tokens AS DOUBLE), 1.0)
-             + 0.2 * CASE WHEN n_chars BETWEEN 50 AND 10000 THEN 1.0 ELSE 0.0 END
-             >= 0.5 THEN true ELSE false END AS keep
-    FROM feats
+    SELECT doc_id, quality,
+           CASE WHEN quality >= 0.5 THEN true ELSE false END AS keep
+    FROM scored
     """,
     doc="Composite document quality score (length + stopword-density + "
     "char-bounds heuristics), with a keep/drop gate — the C4-style "
@@ -372,8 +359,7 @@ def _poly_hash(s):
     f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS t
+               {TOKENS_SQL} AS t
         FROM documents
     ),
     sh AS (
@@ -455,10 +441,9 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
 
 @register(
     "vocab_topk",
-    """
+    f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> length(t) > 0)) AS tok
+        SELECT unnest({TOKENS_SQL}) AS tok
         FROM documents
     )
     SELECT tok, COUNT(*) AS n
@@ -486,11 +471,10 @@ def _vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tfidf_top_token",
-    """
+    f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> length(t) > 0)) AS tok
+               unnest({TOKENS_SQL}) AS tok
         FROM documents
     ),
     tf AS (
@@ -571,6 +555,34 @@ def _qc_weight(bucket: int) -> int:
     return ((1103515245 * bucket + 12345) % QC_SCALE) - QC_SCALE // 2
 
 
+def _qc_grams(toks: Column) -> Column:
+    """A token array's unigrams followed by its space-joined bigrams."""
+    bigrams = F.zip_with(
+        F.slice(toks, 1, F.size(toks) - 1),
+        F.slice(toks, 2, F.size(toks) - 1),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+    return F.concat(toks, bigrams)
+
+
+def _qc_weight_sum(grams: Column) -> Column:
+    """Integer classifier weight summed over a gram array, folded in place:
+    w(g) = ((1103515245 * int(md5(g)[:2], 16) + 12345) % 2^31) - 2^30 —
+    :func:`_qc_weight` of the gram's md5 bucket, evaluated inline (conv()
+    on the hex prefix; all operands positive, so Spark's ``%`` equals the
+    mathematical mod)."""
+
+    def gram_weight(g):
+        bucket = F.conv(F.substring(F.md5(g), 1, 2), 16, 10).cast("bigint")
+        return (
+            F.lit(1103515245).cast("bigint") * bucket + F.lit(12345)
+        ) % F.lit(QC_SCALE) - F.lit(QC_SCALE // 2)
+
+    return F.aggregate(
+        grams, F.lit(0).cast("bigint"), lambda acc, g: acc + gram_weight(g)
+    )
+
+
 def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     """fastText-shaped quality scorer (Joulin et al. 2016 architecture,
     deterministic stand-in weights): features are word unigrams + bigrams
@@ -580,47 +592,22 @@ def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     identical; here it is the LCG lattice so the DuckDB oracle recomputes
     it exactly.
 
-    Scale shape (optimization round 17): the whole scorer is scan-local
-    codegen — ZERO exchanges, zero joins. The weight "table" is a pure
-    function of the bucket byte (the LCG below), so instead of exploding
-    grams, broadcast-joining a 256-row weight frame and re-aggregating by
-    doc_id, each row folds its own gram array with ``F.aggregate``:
-    w(g) = ((1103515245 * int(md5(g)[:2], 16) + 12345) % 2^31) - 2^30
-    evaluated inline (conv() on the hex prefix; all operands positive, so
-    Spark's ``%`` equals the mathematical mod the Python weight used).
-    The per-doc integer sum is associative/commutative, so the result is
-    bit-identical to the join+groupBy form — the r16 plan's Generate,
-    BroadcastExchange (a Python-RDD weight frame that cost a ~0.9 s
-    single-task job per run), and doc_id Exchange all disappear. At
-    100 TB this removes the corpus-sized gram explode AND the per-doc
-    shuffle: the scorer becomes a map-only pass.
+    Scale shape: the whole scorer is scan-local codegen — ZERO exchanges,
+    zero joins. The weight "table" is a pure function of the bucket byte,
+    so instead of exploding grams, broadcast-joining a 256-row weight
+    frame and re-aggregating by doc_id, each row folds its own gram array
+    (:func:`_qc_weight_sum`). The per-doc integer sum is
+    associative/commutative, so the result is bit-identical to that
+    join+groupBy form. At 100 TB this avoids the corpus-sized gram explode
+    AND the per-doc shuffle: the scorer is a map-only pass.
     """
     toks = docs.select("doc_id", tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    bigrams = F.zip_with(
-        F.slice("toks", 1, F.size("toks") - 1),
-        F.slice("toks", 2, F.size("toks") - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    half = QC_SCALE // 2
-
-    def gram_weight(g):
-        bucket = F.conv(F.substring(F.md5(g), 1, 2), 16, 10).cast("bigint")
-        return (
-            F.lit(1103515245).cast("bigint") * bucket + F.lit(12345)
-        ) % F.lit(QC_SCALE) - F.lit(half)
-
-    grams = toks.select(
-        "doc_id", F.concat("toks", bigrams).alias("grams")
-    )
+    grams = toks.select("doc_id", _qc_grams(F.col("toks")).alias("grams"))
     scored = grams.select(
         "doc_id",
-        F.aggregate(
-            "grams",
-            F.lit(0).cast("bigint"),
-            lambda acc, g: acc + gram_weight(g),
-        ).alias("sw"),
+        _qc_weight_sum(F.col("grams")).alias("sw"),
         F.size("grams").cast("bigint").alias("n_grams"),
     )
     return scored.select(
@@ -633,14 +620,14 @@ def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "quality_classifier",
-    f"""
-    WITH toks AS (
+def _qc_scored_ctes(source: str = "documents") -> str:
+    """CTE items ending in ``scored`` (doc_id, sw = integer weight sum,
+    ng = gram count) over ``source`` — the classifier's oracle core,
+    shared by quality_classifier and :func:`qc_keep_sql`."""
+    return f"""toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM documents
+               {TOKENS_SQL} AS toks
+        FROM {source}
     ),
     nonempty AS (SELECT * FROM toks WHERE len(toks) > 0),
     grams AS (
@@ -658,7 +645,13 @@ def quality_classifier_scores(docs: DataFrame) -> DataFrame:
         SELECT doc_id, SUM(w.w_int) AS sw, COUNT(*) AS ng
         FROM grams JOIN w ON substr(md5(grams.g), 1, 2) = w.bucket
         GROUP BY doc_id
-    )
+    )"""
+
+
+@register(
+    "quality_classifier",
+    f"""
+    WITH {_qc_scored_ctes()}
     SELECT doc_id, CAST(ng AS BIGINT) AS n_grams,
            ROUND(sw / (ng * {QC_SCALE}.0), 6) AS score,
            CAST(sw > 0 AS INT) AS keep
@@ -683,10 +676,9 @@ def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_pair_counts",
-    """
+    f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> length(t) > 0)) AS tok
+        SELECT unnest({TOKENS_SQL}) AS tok
         FROM documents
     ),
     words AS (
@@ -741,41 +733,17 @@ def _bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qc_keep_sql(source: str = "documents") -> str:
     """Parenthesized subquery of the doc_ids the quality classifier KEEPS
     (positive integer weight sum) — the reusable oracle fragment
-    corpus_pipeline_full chains in front of dedup. Mirrors the
-    quality_classifier oracle exactly, minus the score projection."""
+    corpus_pipeline_full chains in front of dedup."""
     return f"""(
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> length(t) > 0) AS toks
-        FROM {source}
-    ),
-    nonempty AS (SELECT * FROM toks WHERE len(toks) > 0),
-    grams AS (
-        SELECT doc_id, g FROM nonempty, UNNEST(toks) AS u(g)
-        UNION ALL
-        SELECT doc_id, toks[i] || ' ' || toks[i+1] AS g
-        FROM nonempty, UNNEST(range(1, len(toks))) AS r(i)
-    ),
-    w AS (
-        SELECT printf('%02x', i) AS bucket,
-               (1103515245 * i + 12345) % {QC_SCALE} - {QC_SCALE // 2} AS w_int
-        FROM range({QC_BUCKETS}) t(i)
-    ),
-    scored AS (
-        SELECT doc_id, SUM(w.w_int) AS sw
-        FROM grams JOIN w ON substr(md5(grams.g), 1, 2) = w.bucket
-        GROUP BY doc_id
-    )
+    WITH {_qc_scored_ctes(source)}
     SELECT doc_id FROM scored WHERE sw > 0)"""
 
 
 def qc_keep_col(text_col: Column | str) -> Column:
-    """Scan-local twin of the classifier's keep decision: the same
-    unigram+bigram features, md5 bucket, and integer weight sum as
-    :func:`quality_classifier_scores`, but with the weight DERIVED
-    arithmetically from the bucket inside a JVM ``aggregate`` fold — no
-    explode, no weight-table join, no shuffle. This is what lets
+    """Scan-local form of the classifier's keep decision: the same
+    :func:`_qc_grams` features and :func:`_qc_weight_sum` fold as
+    :func:`quality_classifier_scores`, as one Column — no explode, no
+    weight-table join, no shuffle. This is what lets
     corpus_pipeline_full filter the corpus at the scan instead of
     shuffling document text through a keep-id join: at 100 TB the filter
     costs zero extra data movement. (With a trained model the 256-bucket
@@ -786,22 +754,7 @@ def qc_keep_col(text_col: Column | str) -> Column:
     ``size(toks) > 0`` filter.
     """
     toks = tokens(text_col)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    grams = F.concat(toks, bigrams)
-
-    def add_weight(acc: Column, g: Column) -> Column:
-        bucket = F.conv(F.substring(F.md5(g), 1, 2), 16, 10).cast("long")
-        w = (F.lit(1103515245) * bucket + F.lit(12345)) % F.lit(
-            QC_SCALE
-        ) - F.lit(QC_SCALE // 2)
-        return acc + w
-
-    total = F.aggregate(grams, F.lit(0).cast("long"), add_weight)
-    return (F.size(toks) > 0) & (total > 0)
+    return (F.size(toks) > 0) & (_qc_weight_sum(_qc_grams(toks)) > 0)
 
 
 BPE_MERGES = 8  # merges learned by the bpe_learn surface
@@ -970,11 +923,10 @@ def _bpe_tokenize_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rare_bigram_quality",
-    """
+    f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           t -> len(t) > 0) AS tk
+               {TOKENS_SQL} AS tk
         FROM documents
     ),
     idx AS (

@@ -14,13 +14,36 @@ bounded ROWS BETWEEN, never RANGE over unbounded state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import datetime
+import os
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from full_data_infrastructure_spark.cache import hold_dir
 from full_data_infrastructure_spark.functions.money import money
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 from full_data_infrastructure_spark.sqltext import run_over_views
+from full_data_infrastructure_spark.streaming.replay import (
+    replay_stream,
+    run_stream_to_memory,
+    run_stream_to_parquet,
+    symlink_table_files,
+)
+from full_data_infrastructure_spark.streaming.sinks import (
+    _key_bucket,
+    read_bucketed_snapshot,
+    start_scd2_sink,
+)
+from full_data_infrastructure_spark.streaming.windows import (
+    dedup_stream,
+    interval_join_clicks_purchases,
+    session_counts,
+    sliding_counts,
+    tumbling_counts,
+)
 
 
 def keep_latest(df: DataFrame, keys: list[str], order: list) -> DataFrame:
@@ -161,9 +184,26 @@ def _lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sessionize_batch",
-    """
+def session_seq() -> Column:
+    """Per-user running session number over (ts, event_id): a new session
+    starts at a user's first event and after every gap > 30 minutes.
+    Interval comparison (not epoch-long casts): works for both TIMESTAMP
+    and TIMESTAMP_NTZ inputs — NTZ -> BIGINT is an illegal cast in Spark 4."""
+    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(order_w)
+    new_session = F.when(
+        prev_ts.isNull()
+        | ((F.col("ts") - prev_ts) > F.expr("INTERVAL 30 MINUTES")),
+        1,
+    ).otherwise(0)
+    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return F.sum(new_session).over(run_w)
+
+
+def session_seq_sql() -> str:
+    """Parenthesized (user_id, ts, event_id, session_seq) subquery over
+    the events table: the DuckDB twin of :func:`session_seq`."""
+    return f"""(
     WITH flagged AS (
         SELECT user_id, ts, event_id,
                CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
@@ -173,45 +213,38 @@ def _lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                                           ORDER BY ts, event_id) IS NULL
                     THEN 1 ELSE 0 END AS new_session
         FROM events
-    ),
-    sessions AS (
-        SELECT user_id, event_id,
-               -- CAST: DuckDB windowed SUM(int) is HUGEINT -> pandas
-               -- float64, which breaks the driver's value hash vs Spark's
-               -- int64 session_seq. BIGINT keeps both sides integer-typed.
-               CAST(SUM(new_session) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                                    AND CURRENT ROW)
-                    AS BIGINT) AS session_seq
-        FROM flagged
     )
+    SELECT user_id, ts, event_id,
+           -- CAST: DuckDB windowed SUM(int) is HUGEINT -> pandas float64,
+           -- which breaks the driver's value hash vs Spark's int64
+           -- session_seq. BIGINT keeps both sides integer-typed.
+           CAST(SUM(new_session) OVER (PARTITION BY user_id
+                                       ORDER BY ts, event_id
+                                       ROWS BETWEEN UNBOUNDED PRECEDING
+                                                AND CURRENT ROW)
+                AS BIGINT) AS session_seq
+    FROM flagged)"""
+
+
+# Sessions per user and their sizes: the oracle of the batch and the
+# streaming sessionizers alike.
+_SESSIONIZE_ORACLE = f"""
     SELECT user_id, session_seq, COUNT(*) AS n_events
-    FROM sessions
+    FROM {session_seq_sql()} sessions
     GROUP BY user_id, session_seq
-    """,
+    """
+
+
+@register(
+    "sessionize_batch",
+    _SESSIONIZE_ORACLE,
     doc="Batch sessionization with a 30-minute inactivity gap (engine "
     "surface; the batch twin of streaming session windows, §2.9 note).",
     tags=("extension", "window", "session"),
 )
 def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(order_w)
-    # Interval comparison (not epoch-long casts): works for both TIMESTAMP
-    # and TIMESTAMP_NTZ inputs — NTZ -> BIGINT is an illegal cast in Spark 4 —
-    # and mirrors the oracle SQL verbatim.
-    new_session = F.when(
-        prev_ts.isNull()
-        | ((F.col("ts") - prev_ts) > F.expr("INTERVAL 30 MINUTES")),
-        1,
-    ).otherwise(0)
-    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sessions = events.select(
-        "user_id",
-        "event_id",
-        F.sum(new_session).over(run_w).alias("session_seq"),
-    )
+    sessions = events.select("user_id", "event_id", session_seq().alias("session_seq"))
     return sessions.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -219,30 +252,7 @@ def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_sessionize_snapshot",
-    """
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN LAG(ts) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id) IS NULL
-                         OR ts - LAG(ts) OVER (PARTITION BY user_id
-                                               ORDER BY ts, event_id)
-                            > INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-    ),
-    sessions AS (
-        SELECT user_id,
-               CAST(SUM(new_session) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                                    AND CURRENT ROW)
-                    AS BIGINT) AS session_seq
-        FROM flagged
-    )
-    SELECT user_id, session_seq, COUNT(*) AS n_events
-    FROM sessions
-    GROUP BY user_id, session_seq
-    """,
+    _SESSIONIZE_ORACLE,
     doc="Event-time session-window streaming parity (the last §2.9 "
     "extension family without an oracle-checked driver surface): events "
     "replayed as a time-ordered availableNow file stream (one file per "
@@ -263,15 +273,6 @@ def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "session", "streaming", "events"),
 )
 def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_parquet,
-    )
-    from full_data_infrastructure_spark.streaming.windows import session_counts
-
     # Time-range split: batch i+1 never holds a ts below batch i's max, so
     # a 0-second watermark delay drops nothing (replay.py docstring). The
     # split re-writes the already-normalized frame, so the stream's ts is
@@ -318,38 +319,47 @@ def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("extension", "window", "streaming", "events"),
 )
 def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_parquet,
+    return _window_counts_snapshot(
+        spark,
+        sf_dir,
+        "tumbling_snapshot_",
+        lambda stream: tumbling_counts(stream, window="1 hour", watermark="0 seconds"),
+        "yyyy-MM-dd HH:00:00",
     )
-    from full_data_infrastructure_spark.streaming.windows import tumbling_counts
 
+
+def _window_counts_snapshot(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    counts_of: Callable[[DataFrame], DataFrame],
+    start_format: str,
+) -> DataFrame:
+    """Replay the (ts, event_type) events as a time-ordered file stream
+    with a far-future sentinel, run ``counts_of`` (a watermarked window
+    count) into a parquet sink, and read back (window_start rendered with
+    ``start_format``, event_type, n_events) — the tumbling and sliding
+    snapshots."""
     events = load_table(spark, sf_dir, "events").select("ts", "event_type")
     work, stream = replay_stream(
         spark,
         events,
         "ts",
-        prefix="tumbling_snapshot_",
+        prefix=prefix,
         sentinel_fn=lambda mx: (
             mx + datetime.timedelta(days=1),
             "__sentinel__",
         ),
     )
-    counts = tumbling_counts(stream, window="1 hour", watermark="0 seconds")
-    out_path = run_stream_to_parquet(counts, work, "windows")
+    out_path = run_stream_to_parquet(counts_of(stream), work, "windows")
     # Null-safe: a NULL event_type is a real group key (a corpus with
     # missing types still has windows); a plain != would three-valued-drop
-    # every NULL-keyed window along with the sentinel (null sweep, r8).
+    # every NULL-keyed window along with the sentinel.
     snapshot = spark.read.parquet(out_path).filter(
         ~F.col("event_type").eqNullSafe("__sentinel__")
     )
     return hold_dir(work, snapshot.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:00:00").alias(
-            "window_start"
-        ),
+        F.date_format("window_start", start_format).alias("window_start"),
         "event_type",
         F.col("n").alias("n_events"),
     ))
@@ -384,43 +394,15 @@ def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events"),
 )
 def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_parquet,
-    )
-    from full_data_infrastructure_spark.streaming.windows import sliding_counts
-
-    events = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    work, stream = replay_stream(
+    return _window_counts_snapshot(
         spark,
-        events,
-        "ts",
-        prefix="sliding_snapshot_",
-        sentinel_fn=lambda mx: (
-            mx + datetime.timedelta(days=1),
-            "__sentinel__",
+        sf_dir,
+        "sliding_snapshot_",
+        lambda stream: sliding_counts(
+            stream, window="1 hour", slide="30 minutes", watermark="0 seconds"
         ),
+        "yyyy-MM-dd HH:mm:00",
     )
-    counts = sliding_counts(
-        stream, window="1 hour", slide="30 minutes", watermark="0 seconds"
-    )
-    out_path = run_stream_to_parquet(counts, work, "windows")
-    # Null-safe: a NULL event_type is a real group key (a corpus with
-    # missing types still has windows); a plain != would three-valued-drop
-    # every NULL-keyed window along with the sentinel (null sweep, r8).
-    snapshot = spark.read.parquet(out_path).filter(
-        ~F.col("event_type").eqNullSafe("__sentinel__")
-    )
-    return hold_dir(work, snapshot.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:00").alias(
-            "window_start"
-        ),
-        "event_type",
-        F.col("n").alias("n_events"),
-    ))
 
 
 @register(
@@ -447,13 +429,6 @@ def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "dedup", "streaming", "events"),
 )
 def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_parquet,
-    )
-    from full_data_infrastructure_spark.streaming.windows import dedup_stream
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
@@ -471,9 +446,9 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
-@register(
-    "streaming_ema_snapshot",
-    """
+# Per-user EMA over the whole ordered history: the oracle of the batch fold
+# and of the streaming state-store accumulator alike.
+_EMA_ORACLE = """
     WITH seq AS (
         SELECT user_id,
                list(value ORDER BY ts, event_id) AS vs,
@@ -484,7 +459,12 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n AS BIGINT) AS n_events,
            list_reduce(vs, (acc, x) -> 0.5 * acc + 0.5 * x) AS ema_value
     FROM seq
-    """,
+    """
+
+
+@register(
+    "streaming_ema_snapshot",
+    _EMA_ORACLE,
     doc="Custom-stateful-operator streaming parity — the driver surface "
     "for the applyInPandasWithState family (previously pytest-only): "
     "events replayed as a time-ordered availableNow file stream through "
@@ -502,11 +482,6 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events"),
 )
 def _streaming_ema_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_memory,
-    )
     from full_data_infrastructure_spark.streaming.stateful import running_user_ema
 
     events = load_table(spark, sf_dir, "events").select(
@@ -528,10 +503,10 @@ def _streaming_ema_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hold_dir(work, last)
 
 
-@register(
-    "funnel_conversion",
-    """
-    WITH clicks AS (
+# CTE items ending in ``conv`` (user_id, first_click, first_purchase): each
+# user's first click and the earliest purchase within the following hour.
+# The core of the batch and the stream-stream funnel oracles.
+_FUNNEL_CTES = """clicks AS (
         SELECT user_id, MIN(ts) AS first_click
         FROM events WHERE event_type = 'click'
         GROUP BY user_id
@@ -545,7 +520,13 @@ def _streaming_ema_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND p.ts >= c.first_click
          AND p.ts <= c.first_click + INTERVAL 1 HOUR
         GROUP BY c.user_id, c.first_click
-    )
+    )"""
+
+
+@register(
+    "funnel_conversion",
+    f"""
+    WITH {_FUNNEL_CTES}
     SELECT user_id, first_click, first_purchase,
            first_purchase IS NOT NULL AS converted
     FROM conv
@@ -588,22 +569,8 @@ def _funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_funnel_snapshot",
-    """
-    WITH clicks AS (
-        SELECT user_id, MIN(ts) AS first_click
-        FROM events WHERE event_type = 'click'
-        GROUP BY user_id
-    ),
-    conv AS (
-        SELECT c.user_id, c.first_click, MIN(p.ts) AS first_purchase
-        FROM clicks c
-        LEFT JOIN events p
-          ON p.user_id = c.user_id
-         AND p.event_type = 'purchase'
-         AND p.ts >= c.first_click
-         AND p.ts <= c.first_click + INTERVAL 1 HOUR
-        GROUP BY c.user_id, c.first_click
-    )
+    f"""
+    WITH {_FUNNEL_CTES}
     SELECT user_id,
            strftime(first_click, '%Y-%m-%d %H:%M:%S') AS first_click_s,
            strftime(first_purchase, '%Y-%m-%d %H:%M:%S') AS first_purchase_s,
@@ -627,19 +594,6 @@ def _funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events"),
 )
 def _streaming_funnel_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-    import os
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import (
-        replay_stream,
-        run_stream_to_parquet,
-        symlink_table_files,
-    )
-    from full_data_infrastructure_spark.streaming.windows import (
-        interval_join_clicks_purchases,
-    )
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
@@ -846,18 +800,7 @@ def _rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ema_by_user",
-    """
-    WITH seq AS (
-        SELECT user_id,
-               list(value ORDER BY ts, event_id) AS vs,
-               COUNT(*) AS n
-        FROM events GROUP BY user_id
-    )
-    SELECT user_id,
-           CAST(n AS BIGINT) AS n_events,
-           list_reduce(vs, (acc, x) -> 0.5 * acc + 0.5 * x) AS ema_value
-    FROM seq
-    """,
+    _EMA_ORACLE,
     doc="Per-user exponential moving average of event values (alpha = 0.5) "
     "— the decayed-metric companion to the hypertable rollup, and a "
     "recursive fold Spark's window frames can't express: computed as "
@@ -1133,12 +1076,6 @@ def _window_range_hour_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events", "cdc"),
 )
 def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import replay_stream
-    from full_data_infrastructure_spark.streaming.sinks import start_scd2_sink
-
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -1171,16 +1108,6 @@ def _streaming_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "window", "streaming", "events", "cdc"),
 )
 def _streaming_scd2_bucketed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from full_data_infrastructure_spark.cache import hold_dir
-    from full_data_infrastructure_spark.streaming.replay import replay_stream
-    from full_data_infrastructure_spark.streaming.sinks import (
-        _key_bucket,
-        read_bucketed_snapshot,
-        start_scd2_sink,
-    )
-
     n_buckets = 16
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
@@ -1324,16 +1251,25 @@ def _window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def gap_seconds() -> Column:
+    """Whole seconds since the user's previous event in (ts, event_id)
+    order, NULL on a user's first event: integer division of epoch
+    microseconds, so exact on any engine."""
+    return F.expr("unix_micros(ts) div 1000000") - F.expr(
+        "unix_micros(lag(ts) over (partition by user_id order by ts, event_id)) div 1000000"
+    )
+
+
+# DuckDB twin of gap_seconds().
+GAP_SECONDS_SQL = """epoch_us(ts) // 1000000
+               - epoch_us(LAG(ts) OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id)) // 1000000"""
+
+
 @register(
     "event_gap_histogram",
-    """
-    WITH gaps AS (
-        SELECT epoch_us(ts) // 1000000
-               - epoch_us(LAG(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id)) // 1000000
-                   AS gap_s
-        FROM events
-    )
+    f"""
+    WITH gaps AS (SELECT {GAP_SECONDS_SQL} AS gap_s FROM events)
     SELECT CASE WHEN gap_s < 60 THEN 'a_under_1m'
                 WHEN gap_s < 3600 THEN 'b_under_1h'
                 WHEN gap_s < 86400 THEN 'c_under_1d'
@@ -1356,11 +1292,7 @@ def _window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _event_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.expr("unix_micros(ts) div 1000000") - F.expr(
-        "unix_micros(lag(ts) over (partition by user_id order by ts, event_id)) div 1000000"
-    )
-    gaps = events.select(gap.alias("gap_s")).filter(F.col("gap_s").isNotNull())
+    gaps = events.select(gap_seconds().alias("gap_s")).filter(F.col("gap_s").isNotNull())
     bucket = (
         F.when(F.col("gap_s") < 60, "a_under_1m")
         .when(F.col("gap_s") < 3600, "b_under_1h")

@@ -56,7 +56,7 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 # matters — a single-row-group file that scans as ONE task — fans out.
 FAN_OUT_BYTES_PER_CORE = 16 * 1024 * 1024
 
-# Width cap for the DERIVED target (r18; ADVICE r17): defaultParallelism
+# Width cap for the DERIVED target: defaultParallelism
 # on a large cluster can be thousands, and a Catalyst size mis-estimate on
 # a derived input would then inject a thousands-of-partitions round-robin
 # exchange (target * 16 MiB of shuffle) where none was needed.  fan_out
@@ -141,7 +141,7 @@ def load_table(
     at action time, not load time, so a scoped set-and-restore would
     not actually protect the result) — so when it overrides a non-UTC
     value the caller chose deliberately, say so instead of clobbering
-    silently (ADVICE r8).
+    silently.
     """
     prior_tz = spark.conf.get("spark.sql.session.timeZone", None)
     if prior_tz not in (None, "UTC", "Etc/UTC", "+00:00", "Z", "GMT"):

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from full_data_infrastructure_spark.session import _delta_available
+from full_data_infrastructure_spark.sqltext import ident, literal
 
 
 def default_table_format() -> str:
@@ -87,10 +88,14 @@ def register_table(
     spark: SparkSession, name: str, path: str, fmt: str | None = None
 ) -> None:
     """S14 — external-catalog registration (Trino register_table,
-    README.md:115-121) as a Spark SQL external table."""
+    README.md:115-121) as a Spark SQL external table. ``name`` is one
+    unqualified table name; it and the format are quoted as identifiers
+    and ``path`` as a string literal, so a quote in either cannot change
+    the statement."""
     fmt = fmt or default_table_format()
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} USING {fmt} LOCATION '{path}'"
+        f"CREATE TABLE IF NOT EXISTS {ident(name)} USING {ident(fmt)} "
+        f"LOCATION {literal(path)}"
     )
 
 

@@ -1,8 +1,11 @@
 """Deterministic micro-batch replay scaffolding for the streaming parity
-queries (``streaming_rollup_snapshot``, ``streaming_upsert_snapshot``,
-``streaming_sessionize_snapshot``).
+queries — every ``streaming_*_snapshot`` builder (rollup, upsert and its
+bucketed twin, SCD2 and its bucketed twin, sessionize, tumbling, sliding,
+dedup, EMA, funnel) — and for the work directories of the file-layout
+builders in ``operators/layout.py`` (compaction, JSON-Lines round trip
+and quarantine ingest).
 
-Those builders prove fold parity: a table is replayed as a REAL
+The streaming builders prove fold parity: a table is replayed as a REAL
 ``availableNow`` file stream through a streaming sink/aggregation, and the
 resulting snapshot is hash-compared against a direct batch/DuckDB
 computation. Doing that deterministically needs two pieces of harness:

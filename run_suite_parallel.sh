@@ -1,16 +1,15 @@
 #!/bin/sh
-# Full test suite in two concurrent pytest processes (VERDICT r9 item 5).
+# Full test suite in two concurrent pytest processes.
 #
-# pytest-xdist is absent from the container (and installs are off-limits),
-# but the same lever works with two plain pytest processes, each building
-# its own SparkSession on local[16] (the 128 GiB host fits two 8 GB
-# driver JVMs with room to spare).  The split is by test FILE, balanced
-# so each half carries roughly half of the ~18 min of availableNow
-# streaming replays; coverage is identical to the serial suite — same
-# files, same tests, nothing sampled.
+# pytest-xdist is not a dependency, so the split is two plain pytest
+# processes, each with its own SparkSession on local[N]. Each half
+# defaults to half the host's cores (nproc, with OMP_NUM_THREADS unset as
+# in the Tier-1 command, at least 1); SPARK_GRAFT_SUITE_CPUS overrides N
+# for both halves. The split is by test FILE, balanced so each half
+# carries roughly half of the availableNow streaming replays; coverage is
+# identical to the serial suite — same files, same tests, nothing sampled.
 #
-# Cross-process safety (verified empirically, round 10: two clean runs,
-# 1193 passed / 1 skipped, zero interference):
+# Cross-process safety:
 #   * all test data dirs are tmp_path / mkdtemp scoped;
 #   * the embedded-Derby JDBC test and the catalog (spark-warehouse)
 #     tests all live in test_sources.py, so only one process touches
@@ -18,14 +17,16 @@
 #   * .pytest_cache is disabled (-p no:cacheprovider) to avoid the one
 #     genuinely shared write.
 #
-# Measured (round 10, otherwise-idle host): 18-21 min wall vs 32-35 min
-# serial — the remaining gap to /2 is the imbalance floor set by
-# test_streaming + the adversarial replay sweeps being indivisible at
-# file granularity.
+# The wall time is set by the larger half: test_streaming and the
+# adversarial replay sweeps cannot be split below file granularity.
 set -e
 cd "$(dirname "$0")"
 
-: "${SPARK_GRAFT_SUITE_CPUS:=16}"
+if [ -z "${SPARK_GRAFT_SUITE_CPUS:-}" ]; then
+    host_cpus=$(env -u OMP_NUM_THREADS nproc)
+    SPARK_GRAFT_SUITE_CPUS=$((host_cpus / 2))
+    [ "$SPARK_GRAFT_SUITE_CPUS" -ge 1 ] || SPARK_GRAFT_SUITE_CPUS=1
+fi
 
 # Fail loudly if a test file exists that neither half runs — an explicit
 # file list must never silently shrink coverage as the suite grows.
@@ -44,9 +45,9 @@ done
 
 # Per-invocation log paths: fixed names let two concurrent runs (or two
 # users on a shared host) clobber each other's logs and mis-tail the
-# summary (ADVICE r10).  No suffix after the X's: that form is a GNU
-# coreutils extension, and under busybox/minimal mktemp this #!/bin/sh
-# script would die at startup via set -e (ADVICE r11).
+# summary.  No suffix after the X's: that form is a GNU coreutils
+# extension, and under busybox/minimal mktemp this #!/bin/sh script would
+# die at startup via set -e.
 LOG_A="$(mktemp /tmp/fdi_suite_half_a.XXXXXX)"
 LOG_B="$(mktemp /tmp/fdi_suite_half_b.XXXXXX)"
 echo "half A -> $LOG_A"

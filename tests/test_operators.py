@@ -291,6 +291,48 @@ def test_lang_id_trigram_on_real_sentences(spark):
     assert preds == {1: "en", 2: "es", 3: "fr", 4: "de", 5: "und"}
 
 
+@pytest.mark.parametrize("table", ["LANG_STOPWORDS", "LANG_TRIGRAMS"])
+def test_lang_argmax_ties_and_no_signal(spark, table):
+    """The Spark argmax Column and its DuckDB CASE pick the EARLIER
+    language of a tie and 'und' when every score is 0, for both language
+    tables."""
+    import duckdb
+
+    import full_data_infrastructure_spark.operators.text as txt
+
+    langs = list(getattr(txt, table))
+    assert langs == ["en", "es", "fr", "de"]
+    cases = [
+        ((2, 2, 0, 0), "en"),  # en ties es
+        ((0, 3, 3, 1), "es"),  # es ties fr
+        ((0, 0, 1, 1), "fr"),  # fr ties de
+        ((4, 4, 4, 4), "en"),  # four-way tie
+        ((1, 0, 2, 2), "fr"),  # tie on the top score only
+        ((0, 0, 0, 0), "und"),  # no signal
+        ((0, 0, 0, 5), "de"),
+    ]
+    cols = [f"score_{lang}" for lang in langs]
+    rows = [(i, *scores) for i, (scores, _) in enumerate(cases)]
+    expected = {i: want for i, (_, want) in enumerate(cases)}
+
+    df = spark.createDataFrame(rows, ["i", *cols])
+    got_spark = {
+        r["i"]: r["p"]
+        for r in df.select("i", txt.lang_argmax(langs).alias("p")).collect()
+    }
+    values = ", ".join(str(r) for r in rows)
+    got_duck = dict(
+        duckdb.connect()
+        .execute(
+            f"SELECT i, {txt.lang_argmax_sql(langs)} AS p "
+            f"FROM (VALUES {values}) t(i, {', '.join(cols)})"
+        )
+        .fetchall()
+    )
+    assert got_spark == expected
+    assert got_duck == expected
+
+
 def test_approx_count_distinct_error_bound(spark, sf_dir):
     """The HLL estimate (rsd=0.01) must land within 5% of the exact
     distinct count per group — the bound that justifies using it as the

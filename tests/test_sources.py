@@ -127,6 +127,18 @@ def test_register_table_and_views(spark, sf_dir, tmp_path):
     assert joined.count() == 5
 
 
+def test_register_table_quotes_name_and_path(spark, sf_dir, tmp_path):
+    """A quote in the location and a reserved word as the table name reach
+    the catalog as data; unquoted, either is a parse error."""
+    path = str(tmp_path / "o'brien reg")
+    write_overwrite(load_table(spark, sf_dir, "region"), path, fmt="parquet")
+    register_table(spark, "order", path, fmt="parquet")
+    try:
+        assert spark.sql("SELECT COUNT(*) n FROM `order`").first()["n"] == 5
+    finally:
+        spark.sql("DROP TABLE IF EXISTS `order`")
+
+
 def test_compact_reduces_file_count(spark, sf_dir, tmp_path):
     from full_data_infrastructure_spark.sources.sinks import compact
 
