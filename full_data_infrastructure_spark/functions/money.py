@@ -45,12 +45,6 @@ def money_avg(col: Column | str) -> Column:
     return F.sum(money(col)).cast("double") / F.count(F.lit(1))
 
 
-def pct_of(col: Column | str, rate: str, scale: int = 2) -> Column:
-    """Exact decimal percentage, e.g. the 5% commute prime: ROUND in decimal
-    (half-away-from-zero in both engines), emitted as double."""
-    return F.round(money(col) * F.lit(rate).cast("decimal(6,4)"), scale).cast("double")
-
-
 # --- SQL mirrors for DuckDB oracles -------------------------------------
 
 
@@ -64,10 +58,3 @@ def sql_money_sum(expr: str) -> str:
 
 def sql_money_avg(expr: str) -> str:
     return f"(CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*))"
-
-
-def sql_pct_of(expr: str, rate: str, scale: int = 2) -> str:
-    return (
-        f"CAST(ROUND(CAST({expr} AS DECIMAL(18,2)) * CAST({rate} AS DECIMAL(6,4)), "
-        f"{scale}) AS DOUBLE)"
-    )

@@ -27,11 +27,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from full_data_infrastructure_spark.operators.dedup import (
-    doc_tokens,
     exploded_shingles,
     shingle_ctes,
 )
-from full_data_infrastructure_spark.operators.text import TOKENS_SQL
+from full_data_infrastructure_spark.operators.text import TOKENS_SQL, tokens
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
 
@@ -214,7 +213,7 @@ def _stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tokd = docs.select("doc_id", doc_tokens().alias("toks")).filter(
+    tokd = docs.select("doc_id", tokens("text").alias("toks")).filter(
         F.size("toks") >= 2
     )
     gram_count = F.size("toks") - 1
@@ -255,13 +254,13 @@ EVAL_BUCKET_MAX = "0c"  # md5 buckets '00'..'0c' = ~5% of docs act as the eval s
 CONTAM_THRESHOLD = 0.25
 
 
-def _decontam_scores_sql(source: str = "documents") -> str:
+def _decontam_scores_sql() -> str:
     """Parenthesized (doc_id, n_shingles, n_shared) subquery: per
-    train-split doc, its shingle count and how many of them occur in the
+    train-split document, its shingle count and how many of them occur in the
     eval split — the one scoring fragment of decontaminate_overlap and
     contaminated_ids_sql."""
     return f"""(
-    WITH {shingle_ctes(source)},
+    WITH {shingle_ctes()},
     eval_sh AS (
         SELECT DISTINCT sh FROM sh
         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '{EVAL_BUCKET_MAX}'
@@ -429,12 +428,12 @@ def _snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def contaminated_ids_sql(source: str = "documents") -> str:
+def contaminated_ids_sql() -> str:
     """Parenthesized subquery of the train-split doc_ids whose eval-shingle
     overlap crosses CONTAM_THRESHOLD — the reusable oracle fragment
     corpus_pipeline_full subtracts before dedup."""
     return f"""(
-    SELECT doc_id FROM {_decontam_scores_sql(source)} scored
+    SELECT doc_id FROM {_decontam_scores_sql()} scored
     WHERE CAST(n_shared AS DOUBLE) / n_shingles >= {CONTAM_THRESHOLD})"""
 
 

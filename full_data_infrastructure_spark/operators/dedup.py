@@ -33,7 +33,7 @@ from full_data_infrastructure_spark.operators.similarity import (
     nearest_cell,
     stride_centroids,
 )
-from full_data_infrastructure_spark.operators.text import TOKENS_SQL
+from full_data_infrastructure_spark.operators.text import TOKENS_SQL, tokens
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import fan_out, load_table
 
@@ -42,25 +42,25 @@ MINHASH_K = 32
 LSH_BANDS = 8  # r = K / BANDS = 4 rows per band
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 3
+# Star rounds connected_components may run before it gives up.
+CC_MAX_ROUNDS = 30
 
 
-def normalized_text(col: str = "text") -> Column:
-    return F.lower(F.trim(F.regexp_replace(col, "\\s+", " ")))
+def normalized_text() -> Column:
+    """``text`` lowercased, trimmed, with whitespace runs collapsed."""
+    return F.lower(F.trim(F.regexp_replace("text", "\\s+", " ")))
 
 
-def doc_tokens(col: str = "text") -> Column:
-    return F.filter(F.split(F.lower(col), "\\s+"), lambda t: F.length(t) > 0)
+def word_shingles(toks: Column) -> Column:
+    """Distinct word NGRAM-gram shingles of a token array (JVM-side
+    transform).
 
-
-def word_shingles(toks: Column, n: int = NGRAM) -> Column:
-    """Distinct word n-gram shingles of a token array (JVM-side transform).
-
-    Built from n aligned ``slice`` views folded with ``zip_with`` — NOT
+    Built from NGRAM aligned ``slice`` views folded with ``zip_with`` — NOT
     ``sequence`` + per-index ``element_at``, which re-evaluates the whole
     token-array expression per element (no common-subexpression elimination
     across lambda boundaries; ~20x slower measured at sf0.1).
 
-    ``gram_count`` is clamped at zero so arrays shorter than ``n`` yield
+    ``gram_count`` is clamped at zero so arrays shorter than NGRAM yield
     an EMPTY shingle array instead of a negative slice length (a runtime
     error): callers that explode need no guarding pre-filter, which
     matters because such a filter re-runs the whole tokenizer below any
@@ -68,22 +68,22 @@ def word_shingles(toks: Column, n: int = NGRAM) -> Column:
     pushed filter serialized tokenization back onto the single scan task
     the exchange existed to escape).
     """
-    gram_count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    return F.array_distinct(_ngram_array(toks, gram_count, n))
+    gram_count = F.greatest(F.size(toks) - (NGRAM - 1), F.lit(0))
+    return F.array_distinct(_ngram_array(toks, gram_count))
 
 
-def _ngram_array(toks: Column, gram_count: Column, n: int = NGRAM) -> Column:
-    """The first ``gram_count`` space-joined word n-grams of ``toks``, in
-    position order (duplicates kept): n aligned ``slice`` views folded
-    with ``zip_with``."""
-    parts = [F.slice(toks, j + 1, gram_count) for j in range(n)]
+def _ngram_array(toks: Column, gram_count: Column) -> Column:
+    """The first ``gram_count`` space-joined word NGRAM-grams of ``toks``,
+    in position order (duplicates kept): NGRAM aligned ``slice`` views
+    folded with ``zip_with``."""
+    parts = [F.slice(toks, j + 1, gram_count) for j in range(NGRAM)]
     acc = parts[-1]
     for prev in reversed(parts[:-1]):
         acc = F.zip_with(prev, acc, lambda a, b: F.concat_ws(" ", a, b))
     return acc
 
 
-def exploded_shingles(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def exploded_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) pairs, distinct per doc; docs shorter than NGRAM drop.
 
     Tokens are materialized through a projection first so the ``split`` runs
@@ -97,11 +97,11 @@ def exploded_shingles(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # size(toks) pre-filter: it would push below the exchange and re-run
     # the tokenizer on the lone scan task — short docs instead produce an
     # empty shingle array (word_shingles clamps) that explode drops.
-    tokd = fan_out(docs.select(id_col, "text")).select(
-        id_col, doc_tokens().alias("toks")
+    tokd = fan_out(docs.select("doc_id", "text")).select(
+        "doc_id", tokens("text").alias("toks")
     )
     return tokd.select(
-        id_col, F.explode(word_shingles(F.col("toks"))).alias("sh")
+        "doc_id", F.explode(word_shingles(F.col("toks"))).alias("sh")
     )
 
 
@@ -212,7 +212,7 @@ def hashed_shingles(docs: DataFrame) -> DataFrame:
     return exploded_shingles(docs).select("doc_id", F.xxhash64("sh").alias("h"))
 
 
-def _sig_sizes_from_hashed(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def _sig_sizes_from_hashed(hashed: DataFrame) -> DataFrame:
     """(doc_id, sig, sz): the minhash signature — sig[i] = min over the
     doc's shingles of xxhash64(seed_i, h), one aggregation with no
     per-permutation passes — AND the per-doc shingle count, from ONE
@@ -225,23 +225,22 @@ def _sig_sizes_from_hashed(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
     distinct per doc). A caller that reads only ``sig`` pays nothing for
     ``sz``: column pruning drops the unused count."""
     mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"_h{i}") for i in range(k)
+        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"_h{i}")
+        for i in range(MINHASH_K)
     ]
     agg = hashed.groupBy("doc_id").agg(*mins, F.count(F.lit(1)).alias("sz"))
     return agg.select(
         "doc_id",
-        F.array(*[F.col(f"_h{i}") for i in range(k)]).alias("sig"),
+        F.array(*[F.col(f"_h{i}") for i in range(MINHASH_K)]).alias("sig"),
         "sz",
     )
 
 
-def banded_signatures(
-    signatures: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
+def banded_signatures(signatures: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_hash): the LSH bucket index of a signature
     table — shared by the self-join (lsh_candidate_pairs) and the
     increment-vs-corpus lookup (dedup_incremental_lsh)."""
-    rows_per_band = k // bands
+    rows_per_band = MINHASH_K // LSH_BANDS
     band_structs = F.array(
         *[
             F.struct(
@@ -253,7 +252,7 @@ def banded_signatures(
                     )
                 ).alias("band_hash"),
             )
-            for i in range(bands)
+            for i in range(LSH_BANDS)
         ]
     )
     return signatures.select(
@@ -261,12 +260,10 @@ def banded_signatures(
     ).select("doc_id", "b.band_idx", "b.band_hash")
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Band the signature and bucket-join: docs sharing any band's hash are
     candidates. Shuffle key is (band_idx, band_hash) — high cardinality."""
-    banded = banded_signatures(signatures, bands, k)
+    banded = banded_signatures(signatures)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -321,7 +318,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     columns (constant shift amounts keep everything in codegen), then OR
     the sign bits together. One shuffle keyed on doc_id.
     """
-    toks = doc_tokens()
+    toks = tokens("text")
     tok_hash = (
         docs.filter(F.size(toks) > 0)
         .select("doc_id", F.explode(toks).alias("tok"))
@@ -345,7 +342,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return bit_sums.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
+def simhash_dedup_pairs(docs: DataFrame) -> DataFrame:
     """Candidate pairs share one of 4 16-bit bands (pigeonhole for
     Hamming <= 3), verified by bit_count(a XOR b)."""
     sigs = simhash_signatures(docs)
@@ -382,7 +379,7 @@ def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING)
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= SIMHASH_MAX_HAMMING
     )
 
 
@@ -811,7 +808,7 @@ def _dup_span_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tokd = docs.select("doc_id", doc_tokens().alias("toks"))
+    tokd = docs.select("doc_id", tokens("text").alias("toks"))
     # Positional grams: word_shingles' fold WITHOUT the distinct —
     # position matters here.
     acc = _ngram_array(F.col("toks"), F.size("toks") - (NGRAM - 1))
@@ -902,14 +899,10 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionAll(rev).filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond").
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of the (doc_a, doc_b) edge table by
+    alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond").
 
     Min-label propagation needs O(component diameter) rounds; the star
     operations contract whole subtrees onto component minima, converging
@@ -933,9 +926,9 @@ def connected_components(
     # checkpoint adds; the probe's 1-row collect computes and caches the
     # checkpointed partitions, so lineage is still truncated before the
     # next round builds on them.
-    raw = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
-        eager=False
-    )
+    raw = edges.select(
+        F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
+    ).localCheckpoint(eager=False)
     # Vertices come from the RAW pair set: a vertex whose only edge is a
     # self-loop must still appear in the output (as its own singleton
     # cluster), as the transitive-closure oracle reports it. Lazy — only
@@ -1012,10 +1005,10 @@ def connected_components(
     converged = is_star_forest(e)
     rounds = 0
     while not converged:
-        if rounds >= max_iterations:
+        if rounds >= CC_MAX_ROUNDS:
             raise RuntimeError(
                 f"connected_components did not converge within "
-                f"{max_iterations} rounds"
+                f"{CC_MAX_ROUNDS} rounds"
             )
         # Large-star: every neighbor v > u re-points to u's neighborhood min.
         m = neighborhood_min(e)
@@ -1144,14 +1137,12 @@ SEM_CELLS = 16  # embedding-space clusters (k-means|| offline at 100 TB)
 SEM_THRESHOLD = 0.95  # within-cluster cosine above which docs are duplicates
 
 
-def semantic_dedup_flags(
-    emb: DataFrame, threshold: float = SEM_THRESHOLD, n_cells: int = SEM_CELLS
-) -> DataFrame:
+def semantic_dedup_flags(emb: DataFrame, n_cells: int = SEM_CELLS) -> DataFrame:
     """SemDeDup over an (vec_id, e, nrm) embedding table: cluster with a
     broadcast coarse quantizer, then WITHIN each cluster rank vectors by
     distance from the centroid (farthest first — the paper keeps the
     "edge" examples) and drop any vector whose cosine to an
-    earlier-ranked cluster-mate reaches ``threshold``. That
+    earlier-ranked cluster-mate reaches ``SEM_THRESHOLD``. That
     dominated-by-earlier rule is exactly the public SemDeDup
     implementation's sorted pairwise-similarity sweep; for a duplicate
     clique it keeps precisely the min-ranked member.
@@ -1206,7 +1197,7 @@ def semantic_dedup_flags(
     dropped = (
         a.join(b, "cell_id")
         .filter(F.col("kr_a") < F.col("kr_b"))
-        .filter(rounded_cosine("e_a", "n_a", "e_b", "n_b") >= threshold)
+        .filter(rounded_cosine("e_a", "n_a", "e_b", "n_b") >= SEM_THRESHOLD)
         .select(F.col("vec_b").alias("_d"))
         .distinct()
     )
@@ -1279,12 +1270,12 @@ def _dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup_flags(load_embeddings(spark, sf_dir))
 
 
-def paragraph_dedup(docs: DataFrame, sep: str = ". ") -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-wide chunk-level dedup with document reassembly (Lee et al.,
     "Deduplicating Training Data Makes Language Models Better" — their
     ExactSubstr operates on suffixes; this is the chunk-granular form
     production corpora actually ship): split every document into
-    ``sep``-delimited chunks, keep each distinct chunk ONLY at its first
+    ``". "``-delimited chunks, keep each distinct chunk ONLY at its first
     occurrence (lowest (doc_id, position)), and reassemble documents from
     their surviving chunks in original order.
 
@@ -1313,7 +1304,7 @@ def paragraph_dedup(docs: DataFrame, sep: str = ". ") -> DataFrame:
                 F.array_sort(F.collect_list(F.struct("pos", "chunk"))),
                 lambda s: s["chunk"],
             ),
-            sep,
+            ". ",
         ).alias("dedup_text"),
         F.count(F.lit(1)).alias("kept_chunks"),
     )
@@ -1396,12 +1387,12 @@ def _cosine_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_histogram_exact(load_embeddings(spark, sf_dir))
 
 
-def _bucketed_cosine_histogram(scored: DataFrame, floor: float) -> DataFrame:
+def _bucketed_cosine_histogram(scored: DataFrame) -> DataFrame:
     """Shared tail of the exact and candidate-pair histograms: 0.05
-    buckets over a pre-rounded ``cos`` pair-score column.  One map-side-
+    buckets from 0.5 up over a pre-rounded ``cos`` pair-score column.  One map-side-
     combined aggregate — at most ~10 bucket rows cross the shuffle."""
     return (
-        scored.filter(F.col("cos") >= floor)
+        scored.filter(F.col("cos") >= 0.5)
         .select(F.floor(F.col("cos") * 20).cast("bigint").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -1413,14 +1404,14 @@ def _bucketed_cosine_histogram(scored: DataFrame, floor: float) -> DataFrame:
     )
 
 
-def cosine_histogram_exact(withn: DataFrame, floor: float = 0.5) -> DataFrame:
+def cosine_histogram_exact(withn: DataFrame) -> DataFrame:
     """All-pairs pair-cosine histogram over a (vec_id, e, nrm) table — the
     DuckDB-verifiable exact baseline; quadratic, for test SF only."""
-    return _bucketed_cosine_histogram(_all_pair_cosines(withn), floor)
+    return _bucketed_cosine_histogram(_all_pair_cosines(withn))
 
 
 def cosine_histogram_over_candidates(
-    withn: DataFrame, n_cells: int = SEM_CELLS, floor: float = 0.5
+    withn: DataFrame, n_cells: int = SEM_CELLS
 ) -> DataFrame:
     """Candidate-pair twin of ``cosine_histogram_exact``: the SAME
     rounded-cosine kernel and 0.05 buckets, computed only
@@ -1455,7 +1446,7 @@ def cosine_histogram_over_candidates(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select(rounded_cosine("e_a", "n_a", "e_b", "n_b").alias("cos"))
     )
-    return _bucketed_cosine_histogram(scored, floor)
+    return _bucketed_cosine_histogram(scored)
 
 
 @register(

@@ -460,9 +460,9 @@ def fuzzy_match(
     key: str,
     dirty_key: str,
     name: str = "name",
-    max_lev: int = 1,
 ) -> DataFrame:
-    """Entity resolution via neighborhood blocking + exact verify: explode
+    """Entity resolution at edit distance <= 1 via neighborhood blocking +
+    exact verify: explode
     each side's single-position masks, equi-join on the mask (candidates
     = strings within Hamming 1, a few rows per entity), then verify with
     the exact levenshtein. At 100 TB the mask join is n x L rows shuffled
@@ -472,14 +472,9 @@ def fuzzy_match(
 
     The blocking is exact ONLY for edit distance <= 1 on equal-length
     strings: single-position masks cannot reach a pair two substitutions
-    apart, so a ``max_lev >= 2`` call would silently drop qualifying
-    pairs the blocking never generates. Guarded below;
-    deeper radii need deletion-neighborhood keys of that depth."""
-    if max_lev != 1:
-        raise ValueError(
-            "fuzzy_match's single-position mask blocking generates exactly "
-            f"the Hamming<=1 candidates; max_lev={max_lev} would drop pairs"
-        )
+    apart, so a larger radius would silently drop qualifying pairs the
+    blocking never generates; it needs deletion-neighborhood keys of that
+    depth."""
     c = clean.select(
         F.col(key).alias("clean_key"),
         F.col(name).alias("clean_name"),
@@ -495,7 +490,7 @@ def fuzzy_match(
         .select("clean_key", "dirty_key", "clean_name", "dirty_name")
         .distinct()
         .withColumn("lev", F.levenshtein("clean_name", "dirty_name"))
-        .filter(F.col("lev") <= max_lev)
+        .filter(F.col("lev") <= 1)
         .select("clean_key", "dirty_key", F.col("lev").cast("bigint").alias("lev"))
     )
 
@@ -663,14 +658,17 @@ def _tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
-    """Distributed PageRank (damping 0.85) over a canonical u < v edge set,
-    cross-engine deterministic: per-edge contributions rank/degree are
-    quantized to integer 1e-12 units via ``floor(r/d * 1e12 + 0.5)`` —
-    division, multiply, add, floor are each a single IEEE operation with
-    one correctly-rounded result, so both engines produce the identical
-    BIGINT — and summed exactly as BIGINT, making the only
-    float-order-sensitive reduction in the algorithm exact. (The first
+PAGERANK_ITERATIONS = 3
+
+
+def pagerank(edges_undirected: DataFrame) -> DataFrame:
+    """Distributed PageRank (damping 0.85, PAGERANK_ITERATIONS rounds) over a
+    canonical u < v edge set, cross-engine deterministic: per-edge
+    contributions rank/degree are quantized to integer 1e-12 units via
+    ``floor(r/d * 1e12 + 0.5)`` — division, multiply, add, floor are each a
+    single IEEE operation with one correctly-rounded result, so both engines
+    produce the identical BIGINT — and summed exactly as BIGINT, making the
+    only float-order-sensitive reduction in the algorithm exact. (The first
     cut rounded the double to 12dp with ROUND(), breaking the engine's
     own never-ROUND-a-double rule: Spark and DuckDB disagree on decimal
     ties of a binary double, which surfaced as last-unit contribution
@@ -688,7 +686,7 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
     iteration). Each iteration is then one equi-join plus a
     map-side-combinable sum; rank state is node-sized and the plan
     repeats linearly per iteration (no driver actions; production runs
-    just raise ``iterations``)."""
+    just raise PAGERANK_ITERATIONS)."""
     from full_data_infrastructure_spark.cache import tracked_persist
 
     pairs = edges_undirected
@@ -718,7 +716,7 @@ def pagerank(edges_undirected: DataFrame, iterations: int = 3) -> DataFrame:
         .crossJoin(F.broadcast(n_df))
         .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("r"))
     )
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = (
             # SHUFFLE_HASH on the node-sized rank side: the statically
             # planned alternative is a sort-merge join that re-SORTS the
@@ -819,7 +817,7 @@ def _pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
     )
-    return pagerank(pairs, iterations=3)
+    return pagerank(pairs)
 
 
 @register(

@@ -296,34 +296,28 @@ def shard_column(key: Column, n_shards: int) -> Column:
     ).cast("int")
 
 
-def write_training_shards(
-    df: DataFrame,
-    key: str,
-    path: str,
-    n_shards: int = TRAINING_SHARDS,
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` as a hash-sharded training corpus: ``shard_id=K/``
-    directories, each written by exactly one task.
+def write_training_shards(df: DataFrame, key: str, path: str) -> None:
+    """Write ``df`` as a hash-sharded parquet training corpus of
+    TRAINING_SHARDS ``shard_id=K/`` directories, each written by exactly
+    one task.
 
-    One narrow shuffle total: ``repartition(n_shards, shard_id)`` hashes
-    rows to their writer task, and ``partitionBy(shard_id)`` makes the
-    directory layout self-describing so a filtered read
+    One narrow shuffle total: ``repartition(TRAINING_SHARDS, shard_id)``
+    hashes rows to their writer task, and ``partitionBy(shard_id)`` makes
+    the directory layout self-describing so a filtered read
     (``shard_id = K``) lists ONE directory — trainer ranks and backfills
     read only their slice (partition pruning asserted in
     tests/test_plans.py::test_training_shards_prune_on_read).  Because
     the shard id is deterministic (see shard_column), rewriting after an
     upstream fix touches the same shard set, so downstream caches keyed
-    on shard content invalidate precisely.  At 100 TB, raise n_shards so
-    each shard is a few GB; the plan shape is unchanged.
+    on shard content invalidate precisely.  At 100 TB, raise
+    TRAINING_SHARDS so each shard is a few GB; the plan shape is unchanged.
     """
-    sharded = df.withColumn("shard_id", shard_column(F.col(key), n_shards))
+    sharded = df.withColumn("shard_id", shard_column(F.col(key), TRAINING_SHARDS))
     (
-        sharded.repartition(n_shards, "shard_id")
+        sharded.repartition(TRAINING_SHARDS, "shard_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 

@@ -1,12 +1,14 @@
 """Multimodal columns (north-star extension): opaque ``binary`` payloads with
 typed metadata, decoded/feature-extracted through Arrow-batched pandas UDFs.
 
-The container has no image/audio libraries, so the actual decode is STUBBED
-(``NotImplementedError`` behind a provider seam) — but everything Spark-side
-is real and tested: binary column handling, metadata struct schema, the
-``mapInPandas`` batch shape, and partition-parallel execution. The
-deterministic fake decoder computes byte-level features so the whole UDF
-path is *oracle-checkable* against plain SQL.
+The container has no image/audio libraries, so every media stage runs a
+deterministic fake (``fake_decode``, ``fake_resize``, frame byte slices,
+``fake_feature_extract``) that computes byte-level features — but
+everything Spark-side is real and tested: binary column handling, metadata
+struct schema, the ``mapInPandas`` batch shape, and partition-parallel
+execution. Because the fakes are deterministic, the whole UDF path is
+*oracle-checkable* against plain SQL. A deployment with Pillow, torchaudio
+or a model encoder replaces the fake called inside the stage's ``run``.
 
 Scale notes: binary payloads ride in parquet as byte arrays; decode is
 embarrassingly parallel over ``mapInPandas`` with bounded Arrow batch sizes
@@ -17,7 +19,7 @@ payload bytes never re-shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -59,15 +61,6 @@ _UTF8_BYTES_CTE = f"""
     )"""
 
 
-def real_image_decode(payload: bytes) -> dict:
-    """The production decode seam. Image/audio libs are not shipped in this
-    container — wire Pillow/torchaudio/etc. here on a real cluster."""
-    raise NotImplementedError(
-        "media decoding requires image/audio libraries not present in this "
-        "environment; use fake_decode (deterministic) or install a decoder"
-    )
-
-
 def fake_decode(payload: bytes) -> dict:
     """Deterministic stand-in decoder: byte-level features."""
     return {
@@ -89,16 +82,12 @@ def attach_binary_payload(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", payload.alias("payload"), meta.alias("media_meta"))
 
 
-def decode_media(
-    df: DataFrame,
-    decoder: Callable[[bytes], dict] = fake_decode,
-    batch_schema: str = DECODED_SCHEMA,
-) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads (Arrow batches)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decoder(p) for p in pdf["payload"]]
+            feats = [fake_decode(p) for p in pdf["payload"]]
             out = pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
@@ -110,7 +99,7 @@ def decode_media(
             )
             yield out
 
-    return df.mapInPandas(run, batch_schema)
+    return df.mapInPandas(run, DECODED_SCHEMA)
 
 
 @register(
@@ -168,34 +157,32 @@ RESIZED_SCHEMA = (
 
 FRAMES_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes int, frame_sum_mod bigint"
 
+THUMB_SIDE = 8  # thumbnails are THUMB_SIDE x THUMB_SIDE
+N_FRAMES = 4  # frames sampled per payload
 
-def fake_resize(payload: bytes, width: int, height: int) -> dict:
+
+def fake_resize(payload: bytes) -> dict:
     """Deterministic stand-in for an image resize: the 'thumbnail' is a
-    byte-stride sample of the payload sized width*height."""
-    target = max(width * height, 1)
+    byte-stride sample of the payload sized THUMB_SIDE squared."""
+    target = THUMB_SIDE * THUMB_SIDE
     stride = max(len(payload) // target, 1)
     thumb = payload[::stride][:target]
     return {"n_bytes": len(thumb), "thumb_sum_mod": sum(thumb) % 997}
 
 
-def resize_media(
-    df: DataFrame, width: int = 8, height: int = 8,
-    resizer: Callable[[bytes, int, int], dict] = fake_resize,
-) -> DataFrame:
+def resize_media(df: DataFrame) -> DataFrame:
     """Resize/thumbnail stage as mapInPandas — the Spark-side shape for
     image preprocessing: binary in, fixed-size features out, narrow output
-    schema so full payloads never leave the scan stage. Swap ``resizer``
-    for a Pillow-backed implementation on a real cluster
-    (:func:`real_image_decode` documents the seam)."""
+    schema so full payloads never leave the scan stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [resizer(p, width, height) for p in pdf["payload"]]
+            feats = [fake_resize(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "width": width,
-                    "height": height,
+                    "width": THUMB_SIDE,
+                    "height": THUMB_SIDE,
                     "n_bytes": [f["n_bytes"] for f in feats],
                     "thumb_sum_mod": [f["thumb_sum_mod"] for f in feats],
                 }
@@ -204,9 +191,9 @@ def resize_media(
     return df.mapInPandas(run, RESIZED_SCHEMA)
 
 
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling as a row-EXPANDING mapInPandas (the UDTF shape for
-    video): each payload yields ``n_frames`` evenly-spaced 'frames' (byte
+    video): each payload yields ``N_FRAMES`` evenly-spaced 'frames' (byte
     slices in the fake decoder). Output rows >> input rows — the schema and
     batch handling are exactly what a real video frame sampler needs."""
 
@@ -215,8 +202,8 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
             rows = {"doc_id": [], "frame_idx": [], "frame_bytes": [], "frame_sum_mod": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n = len(payload)
-                chunk = max(n // n_frames, 1)
-                for i in range(n_frames):
+                chunk = max(n // N_FRAMES, 1)
+                for i in range(N_FRAMES):
                     frame = payload[i * chunk : (i + 1) * chunk]
                     if not len(frame):
                         continue
@@ -295,9 +282,9 @@ EMBED_DIM = 16
 EMBED_SCHEMA = "doc_id bigint, embedding array<double>"
 
 
-def fake_feature_extract(payload: bytes, dim: int = EMBED_DIM) -> list[float]:
+def fake_feature_extract(payload: bytes) -> list[float]:
     """Deterministic stand-in for a neural feature extractor: L2-normalized
-    byte-value histogram folded into ``dim`` buckets.
+    byte-value histogram folded into ``EMBED_DIM`` buckets.
 
     The norm uses ``math.sqrt``, not ``** 0.5``: the histogram counts and
     their square-sum are exact integers, IEEE ``sqrt`` of an exact value
@@ -309,29 +296,25 @@ def fake_feature_extract(payload: bytes, dim: int = EMBED_DIM) -> list[float]:
     oracled query was compared exactly at every tested SF."""
     import math
 
-    hist = [0] * dim
+    hist = [0] * EMBED_DIM
     for b in payload:
-        hist[b % dim] += 1
+        hist[b % EMBED_DIM] += 1
     norm = math.sqrt(sum(h * h for h in hist))
-    return [h / norm for h in hist] if norm else [0.0] * dim
+    return [h / norm for h in hist] if norm else [0.0] * EMBED_DIM
 
 
-def extract_features(
-    df: DataFrame,
-    extractor: Callable[[bytes], list[float]] = fake_feature_extract,
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature-extraction stage (mapInPandas): binary payload -> fixed-size
-    embedding vector. The production seam for a vision/audio encoder —
-    swap ``extractor`` for a model-backed batch function; the Arrow batch
-    shape here is exactly what a GPU encoder wants (amortized per-batch
-    model dispatch, bounded by arrow.maxRecordsPerBatch)."""
+    embedding vector. The Arrow batch shape here is exactly what a GPU
+    vision/audio encoder wants (amortized per-batch model dispatch,
+    bounded by arrow.maxRecordsPerBatch)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "embedding": [extractor(p) for p in pdf["payload"]],
+                    "embedding": [fake_feature_extract(p) for p in pdf["payload"]],
                 }
             )
 

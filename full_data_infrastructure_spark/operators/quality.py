@@ -43,22 +43,18 @@ def expect_between(
     min_value: float | None = None,
     max_value: float | None = None,
     mostly: float = 1.0,
-    ignore_nulls: bool = True,
 ) -> Expectation:
     """V2/V3 — expect_column_values_to_be_between with ``mostly``
-    (data_validation_dag.py:308-320). Null-tolerant variant matches V3's
-    ``distance >= 0 OR distance IS NULL``."""
+    (data_validation_dag.py:308-320). Null-tolerant, matching V3's
+    ``distance >= 0 OR distance IS NULL``: nulls count neither for nor
+    against ``mostly``."""
     pred = F.lit(True)
     if min_value is not None:
         pred = pred & (F.col(col) >= min_value)
     if max_value is not None:
         pred = pred & (F.col(col) <= max_value)
-    if ignore_nulls:
-        denom = F.sum(F.when(F.col(col).isNotNull(), 1).otherwise(0))
-        num = F.sum(F.when(F.col(col).isNotNull() & pred, 1).otherwise(0))
-    else:
-        denom = F.count(F.lit(1))
-        num = F.sum(F.when(pred, 1).otherwise(0))
+    denom = F.sum(F.when(F.col(col).isNotNull(), 1).otherwise(0))
+    num = F.sum(F.when(F.col(col).isNotNull() & pred, 1).otherwise(0))
     frac = F.when(denom == 0, F.lit(1.0)).otherwise(
         num.cast("double") / denom.cast("double")
     )

@@ -39,18 +39,6 @@ def masked_projection(
     return out
 
 
-def align_join_keys(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """P5 — defensive type harmonization before joins (read_delta.py:130-161).
-
-    Catalyst inserts implicit casts, but differently-typed keys can silently
-    change join semantics (e.g. string vs int); the reference casts keys to a
-    reference type explicitly, and so do we.
-    """
-    for col_name, dtype in casts.items():
-        df = df.withColumn(col_name, F.col(col_name).cast(dtype))
-    return df
-
-
 def membership_validation(
     df: DataFrame, col: str, allowed: list[str], error_template: str
 ) -> DataFrame:

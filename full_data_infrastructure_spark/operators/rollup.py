@@ -22,45 +22,34 @@ bucket, not the day's raw partition.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from full_data_infrastructure_spark.queries import register
 from full_data_infrastructure_spark.sources.parquet import load_table
-from full_data_infrastructure_spark.sqltext import ident, literal, run_over_views
+from full_data_infrastructure_spark.sqltext import literal, run_over_views
 
 PARTIAL_COLS = ("n_events", "sum_value", "min_value", "max_value")
 
 
-def rollup_partials_sql(
-    events: str,
-    unit: str = "hour",
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def rollup_partials_sql(events: str) -> str:
     """The partials of relation ``events``; see :func:`rollup_partials`."""
-    v = ident(value_col)
     return f"""
-    SELECT DATE_TRUNC({literal(unit)}, {ident(ts_col)}) AS bucket,
-           {"".join(f"{ident(k)}, " for k in keys)}
+    SELECT DATE_TRUNC('hour', `ts`) AS bucket,
+           `event_type`,
            COUNT(1) AS n_events,
-           SUM(CAST({v} AS DECIMAL(18,2))) AS sum_value,
-           MIN({v}) AS min_value,
-           MAX({v}) AS max_value
+           SUM(CAST(`value` AS DECIMAL(18,2))) AS sum_value,
+           MIN(`value`) AS min_value,
+           MAX(`value`) AS max_value
     FROM {events} GROUP BY ALL"""
 
 
-def merge_partials_sql(
-    partials: str, unit: str = "day", keys: Sequence[str] = ("event_type",)
-) -> str:
+def merge_partials_sql(partials: str, unit: str = "day") -> str:
     """The coarser-bucket merge of relation ``partials``; see
     :func:`merge_partials`."""
     return f"""
     SELECT DATE_TRUNC({literal(unit)}, bucket) AS bucket,
-           {"".join(f"{ident(k)}, " for k in keys)}
+           `event_type`,
            SUM(n_events) AS n_events,
            SUM(sum_value) AS sum_value,
            MIN(min_value) AS min_value,
@@ -68,32 +57,19 @@ def merge_partials_sql(
     FROM {partials} GROUP BY ALL"""
 
 
-def rollup_partials(
-    events: DataFrame,
-    unit: str = "hour",
-    keys: tuple[str, ...] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Algebraic partial aggregates per (time bucket, *keys)."""
-    return run_over_views(
-        lambda events: rollup_partials_sql(events, unit, keys, ts_col, value_col),
-        events=events,
-    )
+def rollup_partials(events: DataFrame) -> DataFrame:
+    """Algebraic partial aggregates of ``value`` per (hour of ``ts``,
+    ``event_type``)."""
+    return run_over_views(rollup_partials_sql, events=events)
 
 
-def merge_partials(
-    partials: DataFrame,
-    unit: str = "day",
-    keys: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
+def merge_partials(partials: DataFrame, unit: str = "day") -> DataFrame:
     """Re-aggregate fine partials into a coarser bucket. Each statistic
     merges with its own combiner; no raw-event rescan. Merging into the
     partials' own unit is the identity on buckets, which is how the
     streaming rollup sink folds a batch's partials into the stored ones."""
     return run_over_views(
-        lambda partials: merge_partials_sql(partials, unit, keys),
-        partials=partials,
+        lambda partials: merge_partials_sql(partials, unit), partials=partials
     )
 
 
@@ -135,7 +111,7 @@ def _hourly_rollup_sql(bucket: str) -> str:
 )
 def _rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    partials = rollup_partials(events, unit="hour")
+    partials = rollup_partials(events)
     return partials.withColumn("sum_value", F.col("sum_value").cast("double"))
 
 
@@ -161,7 +137,7 @@ def _rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    hourly = rollup_partials(events, unit="hour")
+    hourly = rollup_partials(events)
     daily = with_avg(merge_partials(hourly, unit="day"))
     return daily.select(
         F.date_format("bucket", "yyyy-MM-dd").alias("day"),
@@ -221,7 +197,6 @@ def _streaming_rollup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         events,
         partials_path=partials_path,
         checkpoint_path=f"{work}/checkpoint",
-        unit="hour",
         available_now=True,
     )
     q.awaitTermination()
@@ -289,7 +264,7 @@ def _gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reusing the continuous-aggregate layer — at 100 TB the gapfill reads
     # the stored partials, never raw events; recomputing here keeps the
     # query self-contained against the parquet tables.
-    obs = rollup_partials(events, unit="hour").select(
+    obs = rollup_partials(events).select(
         "bucket",
         "event_type",
         (F.col("sum_value").cast("double") / F.col("n_events")).alias("hour_avg"),

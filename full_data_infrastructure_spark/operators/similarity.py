@@ -70,11 +70,9 @@ def _top_k_by_cos(
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def _exact_rerank(
-    emb: DataFrame, shortlist: DataFrame, k: int = TOP_K
-) -> DataFrame:
+def _exact_rerank(emb: DataFrame, shortlist: DataFrame) -> DataFrame:
     """Exact-cosine rerank of ANN ``(query_id, neighbor_id)`` candidates to
-    top-``k`` — the one final stage of knn_lsh, knn_ivf, knn_pq,
+    top-TOP_K — the one final stage of knn_lsh, knn_ivf, knn_pq,
     knn_ivfpq and the shortlist label vote (same rounded score and
     ranking tail as knn_bruteforce, so recall is measured against
     identical ranking semantics). ``emb`` must carry (vec_id, e, nrm);
@@ -98,7 +96,7 @@ def _exact_rerank(
             rounded_cosine("e_q", "n_q", "e_c", "n_c").alias("cos"),
         )
     )
-    return _top_k_by_cos(scored, k)
+    return _top_k_by_cos(scored, TOP_K)
 
 
 def stride_centroids(emb: DataFrame, n_cells: int) -> DataFrame:
@@ -669,19 +667,19 @@ PQ_RERANK = 80  # ADC shortlist size fed to exact re-ranking
 PQ_TRAIN = PQ_CODES * 16  # codebook training sample (stride-drawn vectors)
 
 
-def _subvectors(vecs: DataFrame, vec_col: str = "en") -> DataFrame:
-    """Explode (id, vector) into (id, s, sub): PQ_M slices of PQ_SUB dims.
-    Scan-local projection — no shuffle."""
+def _subvectors(vecs: DataFrame) -> DataFrame:
+    """Explode (vec_id, en) into (vec_id, s, sub): PQ_M slices of PQ_SUB
+    dims. Scan-local projection — no shuffle."""
     slices = F.array(
         *[
             F.struct(
                 F.lit(s).alias("s"),
-                F.slice(vec_col, s * PQ_SUB + 1, PQ_SUB).alias("sub"),
+                F.slice("en", s * PQ_SUB + 1, PQ_SUB).alias("sub"),
             )
             for s in range(PQ_M)
         ]
     )
-    keep = [c for c in vecs.columns if c != vec_col]
+    keep = [c for c in vecs.columns if c != "en"]
     return vecs.select(*keep, F.explode(slices).alias("_x")).select(
         *keep, "_x.s", "_x.sub"
     )
@@ -730,10 +728,10 @@ def pq_encode(subs: DataFrame, codebook: DataFrame) -> DataFrame:
     return j.select("vec_id", "s", best["code"].alias("code"))
 
 
-def pq_codebook(subs: DataFrame, refine_rounds: int = 1) -> DataFrame:
+def pq_codebook(subs: DataFrame) -> DataFrame:
     """(s, code, c_sub): per-subspace codebooks — stride-sampled corpus
-    subvectors refined with ``refine_rounds`` Lloyd iterations (assign to
-    nearest codeword, recenter on the positional mean). One k-means step
+    subvectors refined with one Lloyd iteration (assign to nearest
+    codeword, recenter on the positional mean). One k-means step
     lifts recall@5 0.67 -> 0.80 at sf0.1; a second adds nothing on this
     corpus. Centroids are ROUNDed to 6 dp so the float mean's
     merge-order wobble cannot leak into code assignments — downstream is
@@ -769,21 +767,16 @@ def pq_codebook(subs: DataFrame, refine_rounds: int = 1) -> DataFrame:
     train = seeded.filter(F.col("vec_id") % F.col("train_stride") == 0).select(
         "vec_id", "s", "sub"
     )
-    for _ in range(refine_rounds):
-        assign = pq_encode(train, cb)
-        cb = (
-            assign.join(train, ["vec_id", "s"])
-            .groupBy("s", "code")
-            .agg(
-                F.array(
-                    *[
-                        F.round(F.avg(F.element_at("sub", i + 1)), 6)
-                        for i in range(PQ_SUB)
-                    ]
-                ).alias("c_sub")
-            )
+    return (
+        pq_encode(train, cb)
+        .join(train, ["vec_id", "s"])
+        .groupBy("s", "code")
+        .agg(
+            F.array(
+                *[F.round(F.avg(F.element_at("sub", i + 1)), 6) for i in range(PQ_SUB)]
+            ).alias("c_sub")
         )
-    return cb
+    )
 
 
 def _pq_artifacts(emb: DataFrame):
@@ -827,9 +820,7 @@ def _pq_artifacts(emb: DataFrame):
     return codes, lut
 
 
-def pq_adc_candidates(
-    emb: DataFrame, rerank: int = PQ_RERANK
-) -> DataFrame:
+def pq_adc_candidates(emb: DataFrame) -> DataFrame:
     """(query_id, neighbor_id) ADC shortlist — the recall/cost core of
     knn_pq, public so tests can hold the shortlist fraction to a ceiling.
     ``emb`` must carry (vec_id, e, nrm).
@@ -851,7 +842,7 @@ def pq_adc_candidates(
     w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), "vec_id")
     return (
         adc.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= rerank)
+        .filter(F.col("_r") <= PQ_RERANK)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
 
@@ -875,7 +866,7 @@ def _knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_rerank(emb, pq_adc_candidates(emb))
 
 
-def ivfpq_shortlist(emb: DataFrame, rerank: int = PQ_RERANK) -> DataFrame:
+def ivfpq_shortlist(emb: DataFrame) -> DataFrame:
     """(query_id, neighbor_id) shortlist from the IVF x PQ composition:
     IVF prunes WHICH vectors are scored (probed-cell candidates), ADC
     over the PQ code table shrinks what each score COSTS — the classic
@@ -895,7 +886,7 @@ def ivfpq_shortlist(emb: DataFrame, rerank: int = PQ_RERANK) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), "neighbor_id")
     return (
         adc.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= rerank)
+        .filter(F.col("_r") <= PQ_RERANK)
         .select("query_id", "neighbor_id")
     )
 
@@ -1198,15 +1189,14 @@ def _embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_K = 8  # retained components
 
 
-def gram_partials(emb: DataFrame, vec_col: str = "e") -> DataFrame:
-    """One map-only pass that reduces n x d embeddings to per-partition
-    sufficient statistics for PCA: row count, d-dim feature sum, and the
-    d x d Gram matrix (flattened) — the same sketch-then-merge shape as
-    heavy_hitter_candidates. For d=64 each partition emits one row of
-    4096+64+1 doubles regardless of row count, so the driver-side merge
-    is O(partitions · d²) and NOTHING data-sized ever leaves the
-    executors. numpy does the per-batch accumulation (one BLAS gemm per
-    Arrow batch)."""
+def gram_partials(emb: DataFrame) -> DataFrame:
+    """One map-only pass that reduces the n x d embeddings of column ``e`` to
+    per-partition sufficient statistics for PCA: row count, d-dim feature
+    sum, and the d x d Gram matrix (flattened) — the same sketch-then-merge
+    shape as heavy_hitter_candidates. For d=64 each partition emits one row
+    of 4096+64+1 doubles regardless of row count, so the driver-side merge
+    is O(partitions · d²) and NOTHING data-sized ever leaves the executors.
+    numpy does the per-batch accumulation (one BLAS gemm per Arrow batch)."""
     import pandas as pd
 
     def summarize(batches):
@@ -1216,7 +1206,7 @@ def gram_partials(emb: DataFrame, vec_col: str = "e") -> DataFrame:
         for pdf in batches:
             # Arrow may deliver empty batches, and a NULL embedding would
             # make vstack raise — drop nulls (they carry no statistics).
-            col = pdf[vec_col].dropna()
+            col = pdf["e"].dropna()
             if col.empty:
                 continue
             m = np.vstack(col.to_numpy()).astype(np.float64)
@@ -1228,22 +1218,23 @@ def gram_partials(emb: DataFrame, vec_col: str = "e") -> DataFrame:
             return
         yield pd.DataFrame({"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]})
 
-    return emb.select(vec_col).mapInPandas(
+    return emb.select("e").mapInPandas(
         summarize, "n long, s array<double>, g array<double>"
     )
 
 
-def pca_components(emb: DataFrame, k: int = PCA_K, vec_col: str = "e"):
-    """Top-k principal components from the merged Gram partials: covariance
-    C = G/n − mean·meanᵀ, then a driver-side d x d eigendecomposition
+def pca_components(emb: DataFrame):
+    """Top-PCA_K principal components from the merged Gram partials:
+    covariance C = G/n − mean·meanᵀ, then a driver-side d x d eigendecomposition
     (d=64 — microseconds; the DATA never leaves the cluster, only the
     d² sufficient statistics do). Components are sign-canonicalized
     (largest-|coefficient| entry made positive) so the projection is
     deterministic despite eigenvector sign ambiguity. Returns
-    (components ndarray k x d, eigenvalues ndarray k, mean ndarray d)."""
+    (components ndarray PCA_K x d, eigenvalues ndarray PCA_K, mean ndarray
+    d)."""
     import numpy as np
 
-    parts = gram_partials(emb, vec_col).collect()
+    parts = gram_partials(emb).collect()
     if not parts:
         raise ValueError("PCA needs a non-empty embedding corpus")
     n = sum(r.n for r in parts)
@@ -1253,7 +1244,7 @@ def pca_components(emb: DataFrame, k: int = PCA_K, vec_col: str = "e"):
     mean = s / n
     cov = g.reshape(d, d) / n - np.outer(mean, mean)
     evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
+    order = np.argsort(evals)[::-1][:PCA_K]
     comps = evecs[:, order].T
     flip = np.sign(comps[np.arange(len(order)), np.abs(comps).argmax(axis=1)])
     comps = comps * flip[:, None]

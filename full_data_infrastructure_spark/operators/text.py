@@ -620,14 +620,14 @@ def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def _qc_scored_ctes(source: str = "documents") -> str:
+def _qc_scored_ctes() -> str:
     """CTE items ending in ``scored`` (doc_id, sw = integer weight sum,
-    ng = gram count) over ``source`` — the classifier's oracle core,
+    ng = gram count) over ``documents`` — the classifier's oracle core,
     shared by quality_classifier and :func:`qc_keep_sql`."""
     return f"""toks AS (
         SELECT doc_id,
                {TOKENS_SQL} AS toks
-        FROM {source}
+        FROM documents
     ),
     nonempty AS (SELECT * FROM toks WHERE len(toks) > 0),
     grams AS (
@@ -730,12 +730,12 @@ def _bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def qc_keep_sql(source: str = "documents") -> str:
+def qc_keep_sql() -> str:
     """Parenthesized subquery of the doc_ids the quality classifier KEEPS
     (positive integer weight sum) — the reusable oracle fragment
     corpus_pipeline_full chains in front of dedup."""
     return f"""(
-    WITH {_qc_scored_ctes(source)}
+    WITH {_qc_scored_ctes()}
     SELECT doc_id FROM scored WHERE sw > 0)"""
 
 

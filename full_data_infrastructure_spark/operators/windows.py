@@ -285,7 +285,7 @@ def _streaming_sessionize_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
         prefix="sessionize_snapshot_",
         sentinel_fn=lambda mx: (-1, mx + datetime.timedelta(days=1), -1),
     )
-    sessions = session_counts(stream, gap="30 minutes", watermark="0 seconds")
+    sessions = session_counts(stream, watermark="0 seconds")
     out_path = run_stream_to_parquet(sessions, work, "sessions")
     snapshot = spark.read.parquet(out_path).filter(F.col("user_id") >= 0)
     seq_w = Window.partitionBy("user_id").orderBy("session_start")
@@ -323,7 +323,7 @@ def _streaming_tumbling_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "tumbling_snapshot_",
-        lambda stream: tumbling_counts(stream, window="1 hour", watermark="0 seconds"),
+        lambda stream: tumbling_counts(stream, watermark="0 seconds"),
         "yyyy-MM-dd HH:00:00",
     )
 
@@ -398,9 +398,7 @@ def _streaming_sliding_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "sliding_snapshot_",
-        lambda stream: sliding_counts(
-            stream, window="1 hour", slide="30 minutes", watermark="0 seconds"
-        ),
+        lambda stream: sliding_counts(stream, watermark="0 seconds"),
         "yyyy-MM-dd HH:mm:00",
     )
 
@@ -439,7 +437,7 @@ def _streaming_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, stream = replay_stream(
         spark, doubled, "ts", prefix="dedup_snapshot_"
     )
-    deduped = dedup_stream(stream, keys=("event_id",), watermark="2 hours")
+    deduped = dedup_stream(stream)
     out_path = run_stream_to_parquet(deduped, work, "deduped")
     return hold_dir(work, spark.read.parquet(out_path).select(
         "event_id", "user_id", "event_type"

@@ -36,7 +36,6 @@ from full_data_infrastructure_spark.functions.money import (
     money,
     money_avg,
     sql_money_avg,
-    sql_pct_of,
 )
 from full_data_infrastructure_spark.sources.parquet import load_table
 

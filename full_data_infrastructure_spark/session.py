@@ -14,6 +14,10 @@ reference is missing:
 * **Arrow** for any pandas-UDF exchange (the slow path, but 10-100x less slow).
 * **UTC session timezone** so timestamp semantics are stable across engines
   (the DuckDB oracle reads the same parquet as naive UTC).
+* **The package on the Python workers' path**: the pandas and Arrow stages
+  (``mapInPandas``, ``applyInPandasWithState``) unpickle functions defined
+  in this package, so a worker must import it even when the driver found it
+  only through ``sys.path``.
 
 Delta Lake is the reference's storage layer; it is optional here (the test
 container ships parquet only), so Delta wiring is applied only when the
@@ -28,6 +32,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# The directory that holds the package, for the Python workers' PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _local_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -38,7 +45,6 @@ def build_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    enable_delta: bool = True,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
@@ -74,6 +80,9 @@ def build_session(
         # --- python exchange ---
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # Spark merges this with its own pyspark path and the launching
+        # process's PYTHONPATH when it starts a worker.
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
         # --- determinism across engines ---
         "spark.sql.session.timeZone": "UTC",
         # Parquet TIMESTAMP(NANOS) (pyarrow ts[ns], e.g. events.ts) is not a
@@ -89,7 +98,7 @@ def build_session(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     }
 
-    if enable_delta and _delta_available():
+    if _delta_available():
         conf["spark.sql.extensions"] = "io.delta.sql.DeltaSparkSessionExtension"
         conf["spark.sql.catalog.spark_catalog"] = (
             "org.apache.spark.sql.delta.catalog.DeltaCatalog"

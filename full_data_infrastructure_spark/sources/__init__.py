@@ -1,5 +1,5 @@
 """Sources & sinks — the engine's S1-S15 surface (SURVEY.md §2.1)."""
 
-from full_data_infrastructure_spark.sources.parquet import load_table, load_tables
+from full_data_infrastructure_spark.sources.parquet import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

@@ -28,7 +28,7 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize the events ``ts`` column to TIMESTAMP whatever parquet
     physical type the testdata generation produced. Works on batch AND
     streaming DataFrames (``dtypes`` is schema-only), so the streaming
@@ -41,11 +41,11 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     * tz-less parquet timestamp[us] loaded as TIMESTAMP_NTZ in Spark 4 →
       cast to TIMESTAMP so every consumer sees one type.
     """
-    ts_type = dict(df.dtypes).get(ts_col)
+    ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
-        df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -162,12 +162,6 @@ def load_table(
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = SYNTHETIC_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 def register_temp_views(

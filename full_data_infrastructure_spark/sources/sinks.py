@@ -27,16 +27,17 @@ def write_overwrite(
     path: str,
     fmt: str | None = None,
     partition_by: tuple[str, ...] = (),
-    overwrite_schema: bool = True,
 ) -> None:
     """S10 (read_delta.py:219-222): overwrite with schema evolution.
 
     100 TB note: pass partition_by (e.g. a date column) — the reference
     writes unpartitioned, which makes every downstream scan a full scan.
     """
-    writer = df.write.format(fmt or default_table_format()).mode("overwrite")
-    if overwrite_schema:
-        writer = writer.option("overwriteSchema", "true")
+    writer = (
+        df.write.format(fmt or default_table_format())
+        .mode("overwrite")
+        .option("overwriteSchema", "true")
+    )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
@@ -54,9 +55,9 @@ def write_append(
     writer.save(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    """S11 (SaveDelta.scala:65): CSV smoke-test write."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S11 (SaveDelta.scala:65): CSV smoke-test write, with a header row."""
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def write_bucketed(
@@ -64,24 +65,25 @@ def write_bucketed(
     table: str,
     keys: tuple[str, ...],
     num_buckets: int = 64,
-    fmt: str = "parquet",
-    sort: bool = True,
 ) -> None:
-    """Hash-bucketed (and bucket-sorted) managed table — the co-located
+    """Hash-bucketed, bucket-sorted parquet managed table — the co-located
     join layout.
 
     Two tables bucketed on the same keys with the same bucket count join
-    with NO exchange on either side (and no sort, when sorted): at 100 TB
+    with NO exchange and no sort on either side: at 100 TB
     this turns the nightly fact x fact join from a full dual shuffle into
     a local per-bucket merge. The reference writes everything unbucketed
     and unpartitioned (``read_delta.py:219-222``), so every downstream
     join repays the shuffle; bucketing pays it once at write time.
     Requires ``saveAsTable`` (bucket metadata lives in the catalog).
     """
-    writer = df.write.format(fmt).mode("overwrite").bucketBy(num_buckets, *keys)
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table)
+    (
+        df.write.format("parquet")
+        .mode("overwrite")
+        .bucketBy(num_buckets, *keys)
+        .sortBy(*keys)
+        .saveAsTable(table)
+    )
 
 
 def register_table(
@@ -139,7 +141,6 @@ def compact(
     path: str,
     fmt: str | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: tuple[str, ...] = (),
     shuffle: bool = True,
 ) -> int:
     """Small-file compaction — the OSS-Delta stand-in for ``OPTIMIZE``
@@ -161,9 +162,7 @@ def compact(
     maintenance case, where inputs are uniformly tiny — coalesce is the
     100 TB default Delta's OPTIMIZE bin-packing also uses; reach for the
     shuffle only when the input is skewed enough that even files matter
-    more than a corpus-sized shuffle. ``shuffle=False`` is only valid
-    for unpartitioned tables (coalesce cannot cluster ``partition_by``
-    values into their directories — asserted).
+    more than a corpus-sized shuffle. The table is rewritten unpartitioned.
     """
     import math
     import os
@@ -180,28 +179,9 @@ def compact(
         )
     n_files = max(math.ceil(total / target_file_bytes), 1)
     df = spark.read.format(fmt).load(path)
-    if shuffle:
-        compacted = (
-            df.repartition(n_files, *partition_by)
-            if partition_by
-            else df.repartition(n_files)
-        )
-    else:
-        if partition_by:
-            # coalesce concatenates splits WITHOUT clustering, so a
-            # partitionBy writer would fan every task across every
-            # partition value — per-directory fragmentation survives,
-            # defeating the compaction. Refuse rather than degrade.
-            raise ValueError(
-                "shuffle=False cannot cluster partition_by columns; "
-                "use shuffle=True for partitioned tables"
-            )
-        compacted = df.coalesce(n_files)
+    compacted = df.repartition(n_files) if shuffle else df.coalesce(n_files)
     tmp = f"{path.rstrip('/')}_compact_{uuid.uuid4().hex[:8]}"
-    writer = compacted.write.format(fmt).mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
+    compacted.write.format(fmt).mode("overwrite").save(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)
     out = 0

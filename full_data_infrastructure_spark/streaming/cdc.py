@@ -13,7 +13,8 @@ dropped or routed) -> parquet/Delta append sink, checkpointed, triggered.
 Scale notes (100 TB / high-rate topics):
 * ``maxOffsetsPerTrigger`` bounds micro-batch size (the reference leaves it
   unset — unbounded first batch on ``earliest`` is an OOM at scale);
-* the sink partitions by event date so downstream scans prune;
+* the sink writes unpartitioned unless the caller passes ``partition_by``
+  (an event-date column, say, so downstream scans prune);
 * exactly-once = checkpointed offsets + idempotent file commit (parquet/
   Delta); the decode is stateless so recovery is trivial.
 """
@@ -57,9 +58,7 @@ def kafka_cdc_source(
     return reader.load()
 
 
-def file_cdc_source(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def file_cdc_source(spark: SparkSession, path: str) -> DataFrame:
     """CI stand-in for the Kafka topic: a directory of JSON-lines files,
     one envelope per line, schema (key string, value string) like Kafka
     after the cast projection (P1)."""
@@ -69,10 +68,7 @@ def file_cdc_source(
             T.StructField("value", T.StringType(), True),
         ]
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
+    return spark.readStream.schema(schema).json(path)
 
 
 def rate_test_source(spark: SparkSession, rows_per_second: int = 1) -> DataFrame:
@@ -96,11 +92,12 @@ def decode_cdc_stream(
     return decode_envelope(value, "value", after_schema, keep_ops=keep_ops)
 
 
-def with_ingest_timestamp(df: DataFrame, col: str = "ingested_at") -> DataFrame:
+def with_ingest_timestamp(df: DataFrame) -> DataFrame:
     """F10 — the reference's ``created_at TIMESTAMP WITH TIME ZONE DEFAULT
     CURRENT_TIMESTAMP`` insert default (init-db.sql:33) as an ingest-time
-    metadata column. Evaluated per micro-batch at write time."""
-    return df.withColumn(col, F.current_timestamp())
+    ``ingested_at`` metadata column. Evaluated per micro-batch at write
+    time."""
+    return df.withColumn("ingested_at", F.current_timestamp())
 
 
 def start_cdc_ingest(
@@ -223,15 +220,10 @@ def latest_changes(
     )
 
 
-def apply_cdc_batch(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key: str,
-    order_col: str = "ts_ms",
-) -> DataFrame:
+def apply_cdc_batch(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
     """T8 completion — apply a CDC micro-batch with FULL op semantics to a
     table snapshot: upserts (``c``/``r``/``u``) replace rows by key, deletes
-    (``d``) remove them; the latest change per key (by ``order_col``,
+    (``d``) remove them; the latest change per key (by ``ts_ms``,
     key-tiebroken deterministically) wins within the batch.
 
     The reference silently DROPS updates/deletes (its not-null filter,
@@ -249,7 +241,7 @@ def apply_cdc_batch(
     change_cols, snapshot_cols = changes.columns, snapshot.columns
     return run_over_views(
         lambda snapshot, changes: apply_cdc_sql(
-            snapshot, changes, change_cols, snapshot_cols, key, order_col
+            snapshot, changes, change_cols, snapshot_cols, key, "ts_ms"
         ),
         snapshot=snapshot,
         changes=changes,

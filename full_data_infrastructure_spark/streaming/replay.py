@@ -188,11 +188,10 @@ def run_stream_to_parquet(
     return out
 
 
-def run_stream_to_memory(
-    transformed: DataFrame, work: str, output_mode: str = "update"
-) -> str:
-    """Drive a replayed stream to completion through the memory sink (the
-    only sink for update-mode emissions); returns the unique table name.
+def run_stream_to_memory(transformed: DataFrame, work: str) -> str:
+    """Drive a replayed stream to completion through an update-mode memory
+    sink (the only sink for update-mode emissions); returns the unique
+    table name.
     Driver memory holds keys x batches rows — bounded for parity replays."""
     import uuid
 
@@ -200,38 +199,10 @@ def run_stream_to_memory(
     q = (
         transformed.writeStream.format("memory")
         .queryName(table)
-        .outputMode(output_mode)
+        .outputMode("update")
         .option("checkpointLocation", os.path.join(work, "mem_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return table
-
-
-def record_fold_cost(name: str, query) -> float:
-    """Return the summed addBatch seconds (the foreachBatch/sink execution
-    — the part that scales with data, unlike trigger setup and checkpoint
-    commits) across the completed run's micro-batches.
-
-    ``recentProgress`` is a ring buffer capped at
-    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100); the
-    assert below turns a silent undercount into a loud failure when a
-    replay runs more micro-batches than that."""
-    from pyspark.sql import SparkSession
-
-    progress = query.recentProgress
-    spark = SparkSession.getActiveSession()
-    cap = int(
-        spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
-        if spark is not None
-        else "100"
-    )
-    assert len(progress) < cap, (
-        f"recentProgress hit the {cap}-entry ring-buffer cap; fold cost of "
-        f"{name!r} would undercount — raise numRecentProgressUpdates"
-    )
-    ms = 0.0
-    for p in progress:
-        ms += float((p.get("durationMs") or {}).get("addBatch", 0.0))
-    return round(ms / 1000.0, 3)

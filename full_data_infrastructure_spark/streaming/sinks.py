@@ -66,13 +66,11 @@ def start_notification_sink(
     decoded: DataFrame,
     notify: Notifier,
     checkpoint_path: str,
-    comment_col: str = "comment",
-    required_cols: tuple[str, ...] = (),
     available_now: bool = False,
     trigger_seconds: int | None = None,
     on_executors: bool = True,
 ) -> StreamingQuery:
-    """S12: filter rows worth notifying, then deliver per row.
+    """S12: deliver every row with a non-null ``comment``.
 
     Default delivery is ``foreachPartition`` on the EXECUTORS: the notifier
     is shipped to the workers (it must be picklable and hold no
@@ -83,9 +81,7 @@ def start_notification_sink(
     driver-held connections); that is only safe because the filtered
     notification stream is tiny by construction (the reference's ~29%
     comment rate) — never use it on the raw stream."""
-    filtered = decoded.filter(F.col(comment_col).isNotNull())
-    for c in required_cols:
-        filtered = filtered.filter(F.col(c).isNotNull())
+    filtered = decoded.filter(F.col("comment").isNotNull())
 
     def deliver(batch_df: DataFrame, batch_id: int) -> None:
         if on_executors:
@@ -142,7 +138,7 @@ def _schema_plus_bucket(schema) -> T.StructType:
     )
 
 
-def _standing_view_sql(view: str, schema: T.StructType, path: str, fmt: str) -> str:
+def _standing_view_sql(view: str, schema: T.StructType, path: str) -> str:
     """CREATE OR REPLACE TEMPORARY VIEW over the standing snapshot with the
     DECLARED schema.  Re-issued every batch so the file listing is fresh
     (the snapshot directory is swapped between batches).  The declared
@@ -154,11 +150,11 @@ def _standing_view_sql(view: str, schema: T.StructType, path: str, fmt: str) -> 
     nested struct fields included."""
     return (
         f"CREATE OR REPLACE TEMPORARY VIEW {view} ({schema.toDDL()}) "
-        f"USING {fmt} OPTIONS (path {literal(path)})"
+        f"USING parquet OPTIONS (path {literal(path)})"
     )
 
 
-def read_bucketed_snapshot(spark, path: str, schema, fmt: str = "parquet") -> DataFrame:
+def read_bucketed_snapshot(spark, path: str, schema) -> DataFrame:
     """Consumer-side read of a bucketed snapshot table that is TOTAL on
     the empty cases a live pipeline produces: a stream that has not yet
     received a non-empty batch never creates any ``bucket=`` directory
@@ -172,15 +168,10 @@ def read_bucketed_snapshot(spark, path: str, schema, fmt: str = "parquet") -> Da
     so the two branches can never return differently typed frames."""
     if not _bucketed_snapshot_nonempty(path):
         return spark.createDataFrame([], schema)
-    return (
-        spark.read.format(fmt)
-        .schema(_schema_plus_bucket(schema))
-        .load(path)
-        .drop("bucket")
-    )
+    return spark.read.schema(_schema_plus_bucket(schema)).parquet(path).drop("bucket")
 
 
-def _swap_table(out: DataFrame, path: str, fmt: str, batch_id: int | None = None) -> None:
+def _swap_table(out: DataFrame, path: str, batch_id: int | None) -> None:
     """Write ``out`` to a temp dir and rename it over ``path`` — overwriting
     a path that is also being read corrupts the read, and readers never
     see a half-written table.  With ``batch_id``, the replay fence is
@@ -188,7 +179,7 @@ def _swap_table(out: DataFrame, path: str, fmt: str, batch_id: int | None = None
     in the same rename (a fence written after it could lag a crash
     between the two and double-apply the batch)."""
     tmp = f"{path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
-    out.write.format(fmt).mode("overwrite").save(tmp)
+    out.write.mode("overwrite").parquet(tmp)
     if batch_id is not None:
         with open(os.path.join(tmp, _FENCE), "w") as fh:
             fh.write(str(batch_id))
@@ -197,7 +188,7 @@ def _swap_table(out: DataFrame, path: str, fmt: str, batch_id: int | None = None
     os.rename(tmp, path)
 
 
-def _swap_touched_buckets(out: DataFrame, path: str, touched, fmt: str) -> None:
+def _swap_touched_buckets(out: DataFrame, path: str, touched) -> None:
     """Write ``out`` (carrying a ``bucket`` column) partitioned by bucket
     to a temp dir, then swap ONLY the ``touched`` bucket directories into
     ``path`` — per-batch write IO becomes touched/n_buckets of the table
@@ -207,7 +198,7 @@ def _swap_touched_buckets(out: DataFrame, path: str, touched, fmt: str) -> None:
     still old (the standard contract for partitioned warehouse tables
     without a transaction log)."""
     tmp = f"{path.rstrip('/')}_swap_{uuid.uuid4().hex[:8]}"
-    out.write.format(fmt).mode("overwrite").partitionBy("bucket").save(tmp)
+    out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     os.makedirs(path, exist_ok=True)
     for b in touched:
         src = os.path.join(tmp, f"bucket={b}")
@@ -247,7 +238,6 @@ def _start_fold_sink(
     checkpoint_path: str,
     fold_sql: Callable[[str | None, str], str],
     schema: T.StructType,
-    fmt: str,
     available_now: bool,
     trigger_seconds: int | None,
     bucket_key: str | None = None,
@@ -271,7 +261,7 @@ def _start_fold_sink(
     first_sql = fold_sql(None, bview)
     if n_buckets is None:
         apply_sql = fold_sql(sview, bview)
-        standing_sql = _standing_view_sql(sview, schema, path, fmt)
+        standing_sql = _standing_view_sql(sview, schema, path)
     else:
         bucket = key_bucket_sql(bucket_key, n_buckets)
         touched_sql = f"SELECT DISTINCT {bucket} AS bucket FROM {bview}"
@@ -281,7 +271,7 @@ def _start_fold_sink(
         pruned = f"(SELECT {cols} FROM {sview} WHERE {_TOUCHED})"
         first_sql = f"SELECT *, {bucket} AS bucket FROM ({first_sql})"
         apply_sql = f"SELECT *, {bucket} AS bucket FROM ({fold_sql(pruned, bview)})"
-        standing_sql = _standing_view_sql(sview, _schema_plus_bucket(schema), path, fmt)
+        standing_sql = _standing_view_sql(sview, _schema_plus_bucket(schema), path)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if fenced and _already_applied(path, batch_id):
@@ -293,7 +283,7 @@ def _start_fold_sink(
             if exists:
                 spark.sql(standing_sql)
             out = spark.sql(apply_sql if exists else first_sql)
-            _swap_table(out, path, fmt, batch_id if fenced else None)
+            _swap_table(out, path, batch_id if fenced else None)
             return
         # Bounded driver action: at most n_buckets distinct values.
         touched = sorted(r["bucket"] for r in spark.sql(touched_sql).collect())
@@ -303,7 +293,7 @@ def _start_fold_sink(
             out = spark.sql(apply_sql.replace(_TOUCHED, where))
         else:
             out = spark.sql(first_sql)
-        _swap_touched_buckets(out, path, touched, fmt)
+        _swap_touched_buckets(out, path, touched)
 
     writer = stream.writeStream.foreachBatch(fold).option(
         "checkpointLocation", checkpoint_path
@@ -386,7 +376,6 @@ def start_upsert_sink(
             standing, batch, change_cols, schema.names, key, order_col
         ),
         schema,
-        fmt,
         available_now,
         trigger_seconds,
         key,
@@ -401,16 +390,11 @@ def start_rollup_sink(
     events: DataFrame,
     partials_path: str,
     checkpoint_path: str,
-    unit: str = "hour",
-    keys: tuple[str, ...] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    fmt: str = "parquet",
     available_now: bool = False,
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
     """Streaming continuous aggregate: per micro-batch, compute the batch's
-    time-bucket partials and fold them into the stored partials table with
+    hourly ``event_type`` partials and fold them into the stored partials table with
     the combiners of
     :func:`~full_data_infrastructure_spark.operators.rollup.merge_partials`
     — sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes. Late
@@ -425,7 +409,7 @@ def start_rollup_sink(
     table deletes the fence with it. If the checkpoint is recreated
     (batch ids restart at 0), delete the partials table too — the fence
     would otherwise skip genuinely new batches. On Delta, replace all of
-    this with a transactional MERGE keyed on (bucket, keys) and
+    this with a transactional MERGE keyed on (bucket, event_type) and
     txnVersion.
     """
     from full_data_infrastructure_spark.operators.rollup import (
@@ -434,20 +418,20 @@ def start_rollup_sink(
         rollup_partials_sql,
     )
 
-    cols = ", ".join(["bucket", *map(ident, keys), *PARTIAL_COLS])
+    cols = ", ".join(["bucket", "`event_type`", *PARTIAL_COLS])
     # PARTIAL_SUM_TYPE fixes the stored decimal width, so a merge's wider
     # SUM type never leaks into the table.
     out_cols = ", ".join(
-        ["bucket", *map(ident, keys), "n_events",
+        ["bucket", "`event_type`", "n_events",
          f"CAST(sum_value AS {PARTIAL_SUM_TYPE}) AS sum_value",
          "min_value", "max_value"]
     )
 
     def fold_sql(standing: str | None, batch: str) -> str:
-        partials = rollup_partials_sql(batch, unit, keys, ts_col, value_col)
+        partials = rollup_partials_sql(batch)
         if standing is not None:
             both = f"(SELECT {cols} FROM {standing} UNION ALL SELECT {cols} FROM ({partials}))"
-            partials = merge_partials_sql(both, unit, keys)
+            partials = merge_partials_sql(both, "hour")
         return f"SELECT {out_cols} FROM ({partials})"
 
     # Declared partials schema from the INCOMING STREAM's types
@@ -462,7 +446,6 @@ def start_rollup_sink(
         checkpoint_path,
         fold_sql,
         schema,
-        fmt,
         available_now,
         trigger_seconds,
         fenced=True,
@@ -473,7 +456,6 @@ def start_scd2_sink(
     changes: DataFrame,
     versions_path: str,
     checkpoint_path: str,
-    fmt: str = "parquet",
     available_now: bool = False,
     trigger_seconds: int | None = None,
     n_buckets: int | None = None,
@@ -523,7 +505,6 @@ def start_scd2_sink(
         checkpoint_path,
         scd2_apply_sql,
         schema,
-        fmt,
         available_now,
         trigger_seconds,
         "user_id",

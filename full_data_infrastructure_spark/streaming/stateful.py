@@ -132,9 +132,7 @@ _EMA_STATE_SCHEMA = StructType(
 )
 
 
-def fold_ema(
-    n_events: int, ema: float, values, alpha: float = EMA_ALPHA
-) -> tuple[int, float]:
+def fold_ema(n_events: int, ema: float, values) -> tuple[int, float]:
     """Pure sequential EMA fold — the unit both the streaming accumulator
     below and the property test drive. With alpha = 1/2 every step is
     ``ema * 0.5 + v * 0.5``: the identical IEEE-double operation sequence
@@ -156,48 +154,45 @@ def fold_ema(
         if n_events == 0:
             ema = v
         else:
-            ema = ema * (1.0 - alpha) + v * alpha
+            ema = ema * (1.0 - EMA_ALPHA) + v * EMA_ALPHA
         n_events += 1
     return n_events, ema
 
 
-def _ema_fn_factory(alpha: float):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (n_events, ema) = state.get if state.exists else (0, float("nan"))
-        # A key's micro-batch rows arrive as an ITERATOR of Arrow chunks
-        # (split at spark.sql.execution.arrow.maxRecordsPerBatch) with no
-        # cross-chunk order guarantee — the shuffle sorts on the grouping
-        # key only. The fold is order-sensitive, so concatenate ALL chunks
-        # and sort ONCE; sorting each chunk independently would silently
-        # fold out of event-time order for keys larger than one chunk
-        # (pinned by the small-maxRecordsPerBatch e2e test).
-        # Cross-batch order remains the source's responsibility (a keyed
-        # topic's per-partition order, or replay.ordered_file_split).
-        chunks = list(pdfs)
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            n_events, ema = fold_ema(n_events, ema, batch["value"], alpha)
-        state.update((n_events, ema))
-        import math
-
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n_events],
-                # NaN means the fold saw a NULL value: emit NULL, matching
-                # the batch fold's NULL-poisoning semantics.
-                "ema_value": [None if math.isnan(ema) else ema],
-            }
+def _ema_fn(
+    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    (n_events, ema) = state.get if state.exists else (0, float("nan"))
+    # A key's micro-batch rows arrive as an ITERATOR of Arrow chunks
+    # (split at spark.sql.execution.arrow.maxRecordsPerBatch) with no
+    # cross-chunk order guarantee — the shuffle sorts on the grouping
+    # key only. The fold is order-sensitive, so concatenate ALL chunks
+    # and sort ONCE; sorting each chunk independently would silently
+    # fold out of event-time order for keys larger than one chunk
+    # (pinned by the small-maxRecordsPerBatch e2e test).
+    # Cross-batch order remains the source's responsibility (a keyed
+    # topic's per-partition order, or replay.ordered_file_split).
+    chunks = list(pdfs)
+    if chunks:
+        batch = pd.concat(chunks, ignore_index=True).sort_values(
+            ["ts", "event_id"]
         )
+        n_events, ema = fold_ema(n_events, ema, batch["value"])
+    state.update((n_events, ema))
+    import math
 
-    return fn
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n_events],
+            # NaN means the fold saw a NULL value: emit NULL, matching
+            # the batch fold's NULL-poisoning semantics.
+            "ema_value": [None if math.isnan(ema) else ema],
+        }
+    )
 
 
-def running_user_ema(events: DataFrame, alpha: float = EMA_ALPHA) -> DataFrame:
+def running_user_ema(events: DataFrame) -> DataFrame:
     """Per-user running EMA emitted on every batch the user appears in —
     the unbounded-key escape hatch ``ema_by_user``'s docstring promises:
     the batch query materializes each user's full event array per key,
@@ -207,7 +202,7 @@ def running_user_ema(events: DataFrame, alpha: float = EMA_ALPHA) -> DataFrame:
         events.select("user_id", "ts", "event_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _ema_fn_factory(alpha),
+            _ema_fn,
             outputStructType=EMA_SCHEMA,
             stateStructType=_EMA_STATE_SCHEMA,
             outputMode="update",

@@ -270,6 +270,34 @@ def full_pipeline_rehearsal(spark, src_dir: str, k: int) -> dict:
         shutil.rmtree(dest, ignore_errors=True)
 
 
+def record_fold_cost(name: str, query) -> float:
+    """Return the summed addBatch seconds (the foreachBatch/sink execution
+    — the part that scales with data, unlike trigger setup and checkpoint
+    commits) across the completed run's micro-batches.
+
+    ``recentProgress`` is a ring buffer capped at
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100); the
+    assert below turns a silent undercount into a loud failure when a
+    replay runs more micro-batches than that."""
+    from pyspark.sql import SparkSession
+
+    progress = query.recentProgress
+    spark = SparkSession.getActiveSession()
+    cap = int(
+        spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
+        if spark is not None
+        else "100"
+    )
+    assert len(progress) < cap, (
+        f"recentProgress hit the {cap}-entry ring-buffer cap; fold cost of "
+        f"{name!r} would undercount — raise numRecentProgressUpdates"
+    )
+    ms = 0.0
+    for p in progress:
+        ms += float((p.get("durationMs") or {}).get("addBatch", 0.0))
+    return round(ms / 1000.0, 3)
+
+
 def sink_crossover(spark, src_dir: str, k: int) -> dict:
     """Measure the bucketed sinks' crossover in their WINNING regime
     (VERDICT r9 item 2): standing table >> batch.
@@ -297,10 +325,7 @@ def sink_crossover(spark, src_dir: str, k: int) -> dict:
 
     from full_data_infrastructure_spark.operators.windows import scd2_versions
     from full_data_infrastructure_spark.sources.parquet import load_table
-    from full_data_infrastructure_spark.streaming.replay import (
-        record_fold_cost,
-        replay_stream,
-    )
+    from full_data_infrastructure_spark.streaming.replay import replay_stream
     from full_data_infrastructure_spark.streaming.sinks import (
         _key_bucket,
         start_scd2_sink,

@@ -151,6 +151,28 @@ def test_enrichment_error_rows_preserved(spark, sf_dir):
     assert all(r["is_valid"] is None for r in rows)
 
 
+def test_enrichment_rate_limit_spaces_provider_calls(spark):
+    """``requests_per_sec`` (the reference's 0.2 s pause between distance
+    API calls) spaces consecutive provider calls within a partition by at
+    least 1/requests_per_sec: a provider that returns the monotonic clock
+    as its distance records when each call ran."""
+    import time
+
+    def clock_provider(key: int, mode: str) -> tuple[float, float]:
+        return time.monotonic(), 0.0
+
+    df = spark.createDataFrame(
+        [(i, "car") for i in range(6)], "id_employee bigint, transport_mode string"
+    ).coalesce(1)
+    rows = enrich_with_distance(
+        df, provider=clock_provider, requests_per_sec=20
+    ).collect()
+    stamps = sorted(r["distance_m"] for r in rows)
+    gaps = [b - a for a, b in zip(stamps, stamps[1:])]
+    assert len(gaps) == 5
+    assert min(gaps) >= 0.05, gaps
+
+
 def test_generator_properties(spark, sf_dir):
     customer = load_table(spark, sf_dir, "customer")
     acts = generate_activities(customer, "c_custkey").cache()
@@ -1218,7 +1240,7 @@ def test_bpe_apply_and_pca_null_tolerance(spark):
         [(1, [1.0, 2.0]), (2, None), (3, [3.0, 4.0])],
         "vec_id long, e array<double>",
     )
-    parts = gram_partials(emb, "e").collect()
+    parts = gram_partials(emb).collect()
     assert sum(r.n for r in parts) == 2  # nulls dropped, not counted
     s = np.sum([np.asarray(r.s) for r in parts], axis=0)
     assert list(s) == [4.0, 6.0]
@@ -1725,7 +1747,7 @@ def test_pagerank_mass_conservation_and_hub_dominance(spark):
     pairs = [(0, i) for i in range(1, 7)] + [(7, 8)]
     edges = spark.createDataFrame(pairs, "u bigint, v bigint")
     try:
-        rows = {r["part"]: r["pagerank"] for r in pagerank(edges, 3).collect()}
+        rows = {r["part"]: r["pagerank"] for r in pagerank(edges).collect()}
     finally:
         release_persisted()
     assert abs(sum(rows.values()) - 1.0) < 1e-6, rows

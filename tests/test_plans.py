@@ -324,7 +324,7 @@ def test_rollup_merge_equals_direct_aggregation(spark, sf_dir):
     from full_data_infrastructure_spark.sources.parquet import load_table
 
     events = load_table(spark, sf_dir, "events")
-    merged = merge_partials(rollup_partials(events, unit="hour"), unit="week")
+    merged = merge_partials(rollup_partials(events), unit="week")
     direct = events.groupBy(
         F.date_trunc("week", "ts").alias("bucket"), "event_type"
     ).agg(

@@ -519,3 +519,42 @@ def test_training_shards_write_balanced_and_lossless(spark, sf_dir, tmp_path):
     a = spark.read.parquet(path).select("doc_id", "shard_id")
     b = spark.read.parquet(path2).select("doc_id", "shard_id")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_python_workers_import_package_found_through_sys_path(tmp_path, sf_dir):
+    """A driver that finds the package only through ``sys.path`` (no
+    PYTHONPATH, working directory outside the checkout) still runs a
+    query with a Python-worker stage: build_session puts the package's
+    parent directory on the workers' path, so the mapInPandas worker of
+    multimodal_decode can unpickle the engine's function."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "run_decode.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {checkout!r})
+        from full_data_infrastructure_spark import queries
+        from full_data_infrastructure_spark.session import build_session
+
+        spark = build_session(app_name="worker-path", shuffle_partitions=1)
+        queries._ensure_loaded()
+        df = queries.REGISTRY["multimodal_decode"].build(spark, {sf_dir!r})
+        print("rows", df.count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    rows = [line for line in proc.stdout.splitlines() if line.startswith("rows ")]
+    assert rows and int(rows[0].split()[1]) > 0, proc.stdout

@@ -157,7 +157,6 @@ def test_notification_sink_filters_and_delivers(spark, sf_dir, topic_dir, tmp_pa
         decoded,
         received.append,
         ckpt,
-        comment_col="comment",
         available_now=True,
         on_executors=False,  # collector closes over driver state
     )
@@ -194,7 +193,7 @@ def test_notification_sink_delivers_from_executors(spark, sf_dir, topic_dir, tmp
         F.when(F.col("value") > 90, F.format_string("high value %.0f", "value")),
     )
     q = start_notification_sink(
-        decoded, file_notify, ckpt, comment_col="comment", available_now=True
+        decoded, file_notify, ckpt, available_now=True
     )
     q.awaitTermination(120)
 
@@ -219,7 +218,7 @@ def test_tumbling_counts_match_batch(spark, sf_dir, tmp_path):
         .json(stream_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    agg = tumbling_counts(stream, window="1 hour", watermark="2 hours")
+    agg = tumbling_counts(stream, watermark="2 hours")
     q = (
         agg.writeStream.format("memory")
         .queryName("tumbling_test")
@@ -292,7 +291,7 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    counts = tumbling_counts(stream, window="1 hour", watermark="1 hour")
+    counts = tumbling_counts(stream, watermark="1 hour")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
         counts.writeStream.format("parquet")
@@ -332,7 +331,7 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir, tmp_path):
     sink = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = (
-        dedup_stream(stream, keys=("event_id",))
+        dedup_stream(stream)
         .writeStream.format("parquet")
         .option("checkpointLocation", ckpt)
         .outputMode("append")
@@ -354,7 +353,7 @@ def test_session_counts_runs_and_bounds(spark, sf_dir, tmp_path):
         .json(stream_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    agg = session_counts(stream, key_col="user_id", gap="30 minutes")
+    agg = session_counts(stream)
     q = (
         agg.writeStream.format("memory")
         .queryName("session_test")
@@ -663,7 +662,7 @@ def test_sliding_counts_match_batch(spark, sf_dir, tmp_path):
         .json(stream_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    agg = sliding_counts(stream, window="1 hour", slide="30 minutes")
+    agg = sliding_counts(stream)
     q = (
         agg.writeStream.format("memory")
         .queryName("sliding_test")
@@ -802,7 +801,7 @@ def test_rollup_sink_matches_batch_twin(spark, tmp_path):
         [tuple(r.values()) for r in batch1 + batch2],
         "event_id bigint, ts string, event_type string, value double",
     ).withColumn("ts", F.to_timestamp("ts"))
-    expected = rollup_partials(all_rows, unit="hour").withColumn(
+    expected = rollup_partials(all_rows).withColumn(
         "sum_value", F.col("sum_value").cast(PARTIAL_SUM_TYPE)
     )
     got = spark.read.parquet(partials)
@@ -1022,7 +1021,7 @@ def test_streaming_rollup_snapshot_handles_bigint_ts(spark, sf_dir, tmp_path):
         )
         for r in REGISTRY["streaming_rollup_snapshot"].build(spark, vdir).collect()
     }
-    batch = rollup_partials(load_table(spark, vdir, "events"), unit="hour")
+    batch = rollup_partials(load_table(spark, vdir, "events"))
     want = {
         (r["bucket"], r["event_type"]): (
             r["n_events"],

@@ -218,7 +218,7 @@ def test_watermark_epoch_floor_is_an_engine_limit(spark):
                 "__sentinel__",
             ),
         )
-        counts = tumbling_counts(stream, window="1 hour", watermark="0 seconds")
+        counts = tumbling_counts(stream, watermark="0 seconds")
         out = run_stream_to_parquet(counts, work, "w")
         return sorted(
             (str(r.window_start), r.n)
